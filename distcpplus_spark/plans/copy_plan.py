@@ -54,23 +54,6 @@ class CopyOptions:
             raise ValueError("-skiptscheck/-skipcrccheck only apply with -update")
 
 
-def check_duplicates(src_meta: DataFrame) -> None:
-    """Duplicate-destination check (DistCpUtils.java:84-110): the
-    reference external-sorts and compares neighbors; relationally it is
-    GROUP BY HAVING count>1. Eager (runs a job) — called once per plan."""
-    dups = (
-        src_meta.filter(~F.col("is_dir"))
-        .groupBy("relative_dst")
-        .count()
-        .filter(F.col("count") > 1)
-        .limit(5)
-        .collect()
-    )
-    if dups:
-        names = ", ".join(r["relative_dst"] for r in dups)
-        raise DuplicationError(f"multiple sources map to one destination: {names}")
-
-
 def apply_limits(
     src_meta: DataFrame, file_limit: int | None, size_limit: int | None
 ) -> DataFrame:
@@ -365,18 +348,24 @@ def _distributed_prefix_sums(
 def check_duplicates_and_total(
     src_meta: DataFrame, plan: DataFrame
 ) -> int:
-    """The duplicate-destination check AND the plan's total copy cost
-    in ONE Spark job (round-15, guide §2.6 — overlap independent
-    work): the two subtrees union into a single action, so the
-    dup-check stage and the cost-total stage run concurrently, and —
-    because callers lazily checkpoint ``plan`` first — this job is
-    also the one that materializes the update-join plan that three
-    downstream consumers (range sampling, bucket stamping, the final
-    collect) would otherwise each recompute.
+    """The duplicate-destination check (DistCpUtils.java:84-110) AND
+    the plan's total copy cost in ONE Spark job.
 
-    Raises :class:`DuplicationError` exactly like
-    :func:`check_duplicates`; returns ``sum(plan.cost)`` (0 when
-    empty) for :func:`assign_cost_buckets`'s ``total``.
+    Duplicates: the reference external-sorts the listing and compares
+    neighbors; relationally it is GROUP BY relative_dst HAVING
+    count > 1 over the source files. Any such group raises
+    :class:`DuplicationError`.
+
+    Total: ``sum(plan.cost)`` (0 when empty), returned for
+    :func:`assign_cost_buckets`'s ``total``.
+
+    The two subtrees union into a single action (guide §2.6 — overlap
+    independent work), each row tagged with the side it came from, so
+    a duplicate group whose key is NULL is still a duplicate. Because
+    callers lazily checkpoint ``plan`` first, this job is also the one
+    that materializes the update-join plan that three downstream
+    consumers (range sampling, bucket stamping, the final collect)
+    would otherwise each recompute.
     """
     dup_rows = (
         src_meta.filter(~F.col("is_dir"))
@@ -385,21 +374,24 @@ def check_duplicates_and_total(
         .filter(F.col("count") > 1)
         .limit(5)
         .select(
+            F.lit(True).alias("_dup"),
             F.col("relative_dst").alias("_k"),
             F.lit(None).cast("long").alias("_v"),
         )
     )
     total_row = plan.agg(F.sum("cost").alias("_v")).select(
-        F.lit(None).cast("string").alias("_k"), F.col("_v")
+        F.lit(False).alias("_dup"),
+        F.lit(None).cast("string").alias("_k"),
+        F.col("_v"),
     )
     stats = dup_rows.unionByName(total_row).collect()
-    dups = [r["_k"] for r in stats if r["_k"] is not None]
+    dups = [str(r["_k"]) for r in stats if r["_dup"]]
     if dups:
         names = ", ".join(dups)
         raise DuplicationError(
             f"multiple sources map to one destination: {names}"
         )
-    total = next(r["_v"] for r in stats if r["_k"] is None)
+    total = next(r["_v"] for r in stats if not r["_dup"])
     return int(total or 0)
 
 

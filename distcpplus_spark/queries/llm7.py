@@ -254,7 +254,7 @@ def q298_incremental_relist_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]:
             with open(f"{root}/{rel}", "wb") as fh:
                 fh.write(b"x" * size)
-        prev = list_tree(spark, [root]).localCheckpoint(eager=True)
+        prev = list_tree(spark, [root])
         # mutate: create, append, delete, file->dir type change
         with open(f"{root}/e.txt", "wb") as fh:
             fh.write(b"y" * 7)

@@ -14,6 +14,17 @@ cluster speed and the manifest lives in a DataFrame (spillable,
 checkpointable to parquet), not driver heap. The per-directory listing
 is the same RPC-batching trick as the reference's optimizer — one
 scandir per directory, never one stat per file.
+
+The listing is materialized ONCE, like the reference's single walk:
+each distributed wave is one local-checkpointed DataFrame whose
+frontier collect fills the checkpoint, and all driver-scanned rows
+form one more (lazily checkpointed) frame. The copy plan, the update
+join, the mirror delete and the skip counter then all read JVM rows;
+none of them re-runs the scan or re-converts its rows in Python
+workers. The result is a snapshot of the tree at listing time, so the
+copy set and the delete set always come from the same listing. A
+checkpoint block lost with its executor fails the job that needs it;
+the lister never silently re-lists a tree that may have changed since.
 """
 
 from __future__ import annotations
@@ -40,6 +51,12 @@ FILE_META_SCHEMA = T.StructType(
         T.StructField("replication", T.IntegerType(), True),
         T.StructField("block_size", T.LongType(), True),
     ]
+)
+
+# A distributed wave's rows also carry the root they were listed
+# under: the wave's directory rows are the next frontier.
+_WAVE_SCHEMA = T.StructType(
+    FILE_META_SCHEMA.fields + [T.StructField("_root", T.StringType(), False)]
 )
 
 
@@ -131,75 +148,75 @@ def list_tree(
     ``sc.parallelize(frontier).mapPartitions``. This keeps tiny trees
     fast AND huge trees scalable — the reference's single-threaded
     stack walk (DistCPPlus.java:644-749) only had the first mode.
+
+    The returned frame is a snapshot: every scan runs once, inside
+    this call, and downstream consumers read the rows as JVM blocks
+    (local checkpoints), never re-running the scan through Python
+    workers; see the module docstring.
     """
     sc = spark.sparkContext
 
-    def _local_df(rows: list) -> DataFrame:
-        # One-slice local relation (the round-14 local_rows device):
-        # createDataFrame(list) parallelizes into defaultParallelism
-        # Python-evaluated slices, and EVERY downstream evaluation of
-        # the listing (dup check, update join, prefix sums, the final
-        # collect) re-pays one Python round trip per slice per wave
-        # frame. Driver-scanned waves are tiny by construction
-        # (> fanout_threshold dirs goes distributed), so one slice is
-        # also the right parallelism.
-        return spark.createDataFrame(
-            sc.parallelize(rows, numSlices=1), FILE_META_SCHEMA
-        )
-
-    all_rows: list[tuple] = []
+    local_rows: list[tuple] = []
     frontier: list[tuple[str, str]] = []
 
     for root in roots:
         root = os.path.abspath(root)
         st = os.stat(root)
         if include_roots:
-            all_rows.append(_stat_to_entry(root, st, root, prefix_base))
+            local_rows.append(_stat_to_entry(root, st, root, prefix_base))
         if statmod.S_ISDIR(st.st_mode):
             frontier.append((root, root))
 
-    dfs: list[DataFrame] = []
-    if all_rows:
-        dfs.append(_local_df(all_rows))
-
+    waves: list[DataFrame] = []
     while frontier:
         if len(frontier) <= fanout_threshold:
             rows, frontier = _scan_dirs(frontier, prefix_base)
-            if rows:
-                dfs.append(_local_df(rows))
+            local_rows.extend(rows)
         else:
-            # Distributed wave: file rows STAY on executors (persisted
-            # RDD → DataFrame); only the child-directory list — orders
-            # of magnitude smaller than the file listing — returns to
-            # the driver to seed the next wave. Collecting the rows
-            # here would rebuild the reference's driver-memory
-            # bottleneck at exactly the scale this lister exists for.
-            from pyspark import StorageLevel
-
+            # Distributed wave: file rows STAY on executors as JVM
+            # blocks; only the child directories — orders of magnitude
+            # fewer than the file rows — return to the driver to seed
+            # the next wave. Collecting the rows here would rebuild the
+            # reference's driver-memory bottleneck at exactly the scale
+            # this lister exists for. Each row carries its root, so the
+            # children are the wave's own directory rows, and the
+            # frontier collect is the job that fills the checkpoint.
             n_parts = min(len(frontier), sc.defaultParallelism * 2)
 
-            def scan_tagged(it, _pb=prefix_base):
-                rows_, children_ = _scan_dirs(list(it), _pb)
-                for r in rows_:
-                    yield (0, r)
-                for c in children_:
-                    yield (1, c)
+            def scan_wave(it, _pb=prefix_base):
+                for d, root in it:
+                    for r in _scan_dirs([(d, root)], _pb)[0]:
+                        yield r + (root,)
 
-            scanned = (
-                sc.parallelize(frontier, n_parts)
-                .mapPartitions(scan_tagged)
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            )
-            rows_rdd = scanned.filter(lambda t: t[0] == 0).map(lambda t: t[1])
-            dfs.append(spark.createDataFrame(rows_rdd, FILE_META_SCHEMA))
-            frontier = (
-                scanned.filter(lambda t: t[0] == 1).map(lambda t: t[1]).collect()
-            )
+            wave = spark.createDataFrame(
+                sc.parallelize(frontier, n_parts).mapPartitions(scan_wave),
+                _WAVE_SCHEMA,
+            ).localCheckpoint(eager=False)
+            frontier = [
+                (r["path"], r["_root"])
+                for r in wave.filter(F.col("is_dir"))
+                .select("path", "_root")
+                .collect()
+            ]
+            waves.append(wave.drop("_root"))
 
-    if not dfs:
-        return _local_df([])
-    out = dfs[0]
-    for d in dfs[1:]:
+    frames = waves
+    if local_rows or not waves:
+        # All driver-scanned rows as ONE one-slice frame, lazily
+        # checkpointed: createDataFrame over an RDD is a Python-
+        # evaluated relation, so its first read converts the rows once
+        # into JVM blocks and every later read uses those blocks
+        # instead of another Python worker round trip. Driver-scanned
+        # waves are small by construction (a frontier above
+        # fanout_threshold goes distributed), so one slice is also the
+        # right parallelism.
+        frames = [
+            spark.createDataFrame(
+                sc.parallelize(local_rows, numSlices=1), FILE_META_SCHEMA
+            ).localCheckpoint(eager=False)
+        ] + waves
+    out = frames[0]
+    for d in frames[1:]:
         out = out.unionByName(d)
     return out.withColumn(
         "cost", F.when(F.col("is_dir"), F.lit(0)).otherwise(F.col("length"))

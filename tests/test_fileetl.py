@@ -11,7 +11,11 @@ from pyspark.sql import functions as F
 
 from distcpplus_spark.engine import CopyOptions, DistCpPlusEngine
 from distcpplus_spark.operators.copier import CopyFailedError
-from distcpplus_spark.plans.copy_plan import DuplicationError, assign_cost_buckets
+from distcpplus_spark.plans.copy_plan import (
+    DuplicationError,
+    assign_cost_buckets,
+    check_duplicates_and_total,
+)
 from distcpplus_spark.sources.lister import list_tree
 from distcpplus_spark.sources.regex_select import filter_name_regex, touched_dirs
 
@@ -44,15 +48,61 @@ def test_list_tree_counts(spark, src_tree):
     assert all(r["cost"] == 0 for r in dirs)
 
 
+def _wide_tree(root, n=100):
+    """n one-file leaf dirs under ``root`` plus one root-level file, so
+    a low fanout_threshold lists the leaves in a distributed wave and
+    the root level on the driver."""
+    for i in range(n):
+        d = root / f"d{i:03d}"
+        d.mkdir(parents=True)
+        (d / "f.txt").write_bytes(b"x" * (i + 1))
+    (root / "top.txt").write_bytes(b"t" * 3)
+
+
 def test_list_tree_distributed_fanout(spark, tmp_path):
     """Force the distributed path with a wide tree."""
     root = tmp_path / "wide"
-    for i in range(100):
-        d = root / f"d{i:03d}"
-        d.mkdir(parents=True)
-        (d / "f.txt").write_bytes(b"x" * i)
+    _wide_tree(root)
     df = list_tree(spark, [str(root)], fanout_threshold=10)
-    assert df.filter(~F.col("is_dir")).count() == 100
+    assert df.filter(~F.col("is_dir")).count() == 101
+
+
+def test_list_tree_is_a_snapshot(spark, tmp_path):
+    """The listing is frozen at list time: files appended to, deleted
+    and added afterwards never show up, however often it is read."""
+    root = tmp_path / "wide"
+    _wide_tree(root)
+    expected = tree_files(root)
+    df = list_tree(spark, [str(root)], fanout_threshold=10)
+
+    for appended in (root / "d000" / "f.txt", root / "top.txt"):
+        with open(appended, "ab") as fh:
+            fh.write(b"more")
+    (root / "d001" / "f.txt").unlink()
+    (root / "d002" / "new.txt").write_bytes(b"n")
+    (root / "new_top.txt").write_bytes(b"n")
+
+    for _ in range(2):
+        got = {
+            r["relative_dst"].split("/", 1)[1]: r["length"]
+            for r in df.filter(~F.col("is_dir")).collect()
+        }
+        assert got == expected
+
+
+def test_list_tree_rereads_run_no_python(spark, tmp_path, src_tree):
+    """Once read, a listing is JVM rows: re-reading it (dup check,
+    update join, mirror delete, skip counter) runs no Python worker,
+    for a driver-only tree and for one with a distributed wave."""
+    root = tmp_path / "wide"
+    _wide_tree(root)
+    for df in (
+        list_tree(spark, [src_tree]),
+        list_tree(spark, [str(root)], fanout_threshold=10),
+    ):
+        df.collect()
+        lineage = df._jdf.queryExecution().toRdd().toDebugString()
+        assert "PythonRDD" not in lineage, lineage
 
 
 # ---------------------------------------------------------------------------
@@ -166,6 +216,22 @@ def test_duplicate_destination_raises(spark, tmp_path):
     engine = DistCpPlusEngine(spark)
     with pytest.raises(DuplicationError):
         engine.plan([str(a), str(b)], str(tmp_path / "dst"))
+
+
+def test_check_duplicates_and_total_null_destination(spark):
+    """Two source files with a NULL relative_dst are a duplicate, not
+    the total row; with no duplicate the total is the plan's cost."""
+    schema = "relative_dst STRING, is_dir BOOLEAN, cost BIGINT"
+    dup = spark.createDataFrame(
+        [(None, False, 3), (None, False, 4), ("d", True, 0)], schema
+    )
+    with pytest.raises(DuplicationError):
+        check_duplicates_and_total(dup, dup)
+    ok = spark.createDataFrame(
+        [("a", False, 3), (None, False, 4), ("d", True, 0)], schema
+    )
+    assert check_duplicates_and_total(ok, ok) == 7
+    assert check_duplicates_and_total(ok, ok.filter(F.lit(False))) == 0
 
 
 # ---------------------------------------------------------------------------
@@ -967,7 +1033,7 @@ def test_relist_diff_verdicts(spark, tmp_path):
     (root / "grow.txt").write_bytes(b"g" * 4)
     (root / "gone.txt").write_bytes(b"x" * 2)
     (root / "sub" / "f.txt").write_bytes(b"f" * 3)
-    prev = list_tree(spark, [str(root)]).localCheckpoint(eager=True)
+    prev = list_tree(spark, [str(root)])
 
     (root / "new.txt").write_bytes(b"n" * 6)
     (root / "grow.txt").write_bytes(b"g" * 9)
@@ -1007,7 +1073,7 @@ def test_relist_diff_mtime_knob(spark, tmp_path):
     f = root / "touched.txt"
     f.write_bytes(b"t" * 5)
     os.utime(f, (1_600_000_000, 1_600_000_000))
-    prev = list_tree(spark, [str(root)]).localCheckpoint(eager=True)
+    prev = list_tree(spark, [str(root)])
     os.utime(f, (1_700_000_000, 1_700_000_000))
 
     assert relist_diff(spark, [str(root)], prev).count() == 0
