@@ -61,24 +61,7 @@ def main() -> None:
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
     queries, _ = load_all_queries()
 
-    # Shuffle partitions: FLOOR at the session core count, then grow
-    # with data (round-15, the round-14 VERDICT's item 2). The old
-    # data-only heuristic pinned 8 partitions at sf0.1 regardless of
-    # $SPARK_GRAFT_CPUS, so shuffle stages physically could not show
-    # core scaling in the driver's low-core/full-core probe. AQE
-    # coalescing right-sizes small stages at runtime either way, so
-    # the floor costs nothing at low SF while letting a 32-core run
-    # actually use 32 reducers when the data warrants it. On a
-    # cluster at 100 TB the same knob goes to 2-3x total cores (see
-    # session.get_spark docstring).
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    total_bytes = sum(
-        os.path.getsize(os.path.join(sf_dir, f))
-        for f in os.listdir(sf_dir)
-        if f.endswith(".parquet")
-    )
-    shuffle = max(cpus, min(2048, total_bytes // (64 * 1024 * 1024)))
-    spark = get_spark("bench", shuffle_partitions=int(shuffle))
+    spark = get_spark("bench", shuffle_partitions=shuffle_partitions(sf_dir))
 
     # Warm-up (not counted): one pass at the smallest sf compiles
     # whole-stage codegen and JITs the JVM hot paths; one pass at the
@@ -117,6 +100,22 @@ def main() -> None:
             }
         )
     )
+
+
+def shuffle_partitions(sf_dir: str) -> int:
+    """Shuffle partitions for a run at ``sf_dir``: the session core
+    count, or one per 64 MiB of input if that is more (at most 2048). AQE
+    coalescing right-sizes small stages at runtime, so the floor costs
+    nothing at low SF and lets an N-core run use N reducers. On a
+    cluster at 100 TB the same knob goes to 2-3x total cores (see
+    session.get_spark docstring)."""
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    total_bytes = sum(
+        os.path.getsize(os.path.join(sf_dir, f))
+        for f in os.listdir(sf_dir)
+        if f.endswith(".parquet")
+    )
+    return max(cpus, min(2048, total_bytes // (64 * 1024 * 1024)))
 
 
 if __name__ == "__main__":

@@ -91,13 +91,6 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
-def l2_distance(a: Column, b: Column) -> Column:
-    diff2 = F.zip_with(a, b, lambda x, y: (x - y) * (x - y))
-    return F.sqrt(
-        F.aggregate(diff2, F.lit(0.0).cast("double"), lambda acc, x: acc + x)
-    )
-
-
 def hyperplane_signs(v: Column, planes: list[list[float]]) -> Column:
     """LSH bucket key: sign bits of projections onto fixed random
     hyperplanes, packed into a string like '1011...'. Deterministic

@@ -250,23 +250,23 @@ def execute_copy(
     tmp_root = os.path.join(dst_root, f"_distcp_tmp_{run_id}")
     fn = copy_fn or default_copy_fn
 
+    work = plan.rdd
     if "bucket" in plan.columns:
         n = num_buckets or (plan.agg(F.max("bucket")).collect()[0][0] or 0) + 1
-        # mkdir rows must run before file rows within a partition;
-        # sortWithinPartitions puts dirs first (paths sort parent<child)
-        work = plan.repartition(n, "bucket").sortWithinPartitions(
-            F.desc("is_dir"), F.asc("path")
+        # Bucket b runs as task b. Hash partitioning the ids 0..n-1
+        # would put balanced buckets in one task and leave others idle.
+        # Within a task, mkdir rows run before file rows, and paths
+        # sort parent < child.
+        work = (
+            work.keyBy(lambda r: (r["bucket"], not r["is_dir"], r["path"]))
+            .repartitionAndSortWithinPartitions(n, partitionFunc=lambda k: k[0])
+            .values()
         )
-    else:
-        work = plan
 
     def run_partition(rows: Iterator) -> Iterator[tuple]:
         return fn(rows, dst_root, tmp_root, preserve)
 
-    result = spark.createDataFrame(
-        work.rdd.mapPartitions(run_partition), RESULT_SCHEMA
-    )
-    return result
+    return spark.createDataFrame(work.mapPartitions(run_partition), RESULT_SCHEMA)
 
 
 def counters(result: DataFrame) -> dict[str, int]:

@@ -33,7 +33,7 @@ from collections.abc import Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 import struct as _struct
@@ -68,28 +68,6 @@ IMAGE_FEATURES_SCHEMA = T.StructType(
         T.StructField("phash", T.LongType(), True),
     ]
 )
-
-
-def read_binary_dir(spark: SparkSession, path: str, glob: str = "*") -> DataFrame:
-    """Ingest a directory of media files via Spark's binaryFile source
-    (distributed read; driver only lists). Adds media_id + size."""
-    df = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .load(path)
-    )
-    return df.select(
-        F.xxhash64("path").alias("media_id"),
-        "path",
-        F.element_at(F.split(F.element_at(F.split("path", "/"), -1), "\\."), -1).alias(
-            "media_type"
-        ),
-        "content",
-        F.col("length").alias("size_bytes"),
-        F.create_map(
-            F.lit("mtime"), F.col("modificationTime").cast("string")
-        ).alias("metadata"),
-    )
 
 
 def _decode_bmp(content: bytes):

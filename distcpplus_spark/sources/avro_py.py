@@ -601,20 +601,3 @@ def write_avro_py(df, path: str, codec: str = "deflate") -> int:
 
     summary = df.mapInArrow(write_partition, "pid int, rows long").collect()
     return sum(r["rows"] for r in summary)
-
-
-def _is_null_scalar(v) -> bool:
-    """pandas nulls arrive as None/NaN/NaT — map them all to Avro
-    null without tripping on arrays (which are never null-scalars)."""
-    if v is None:
-        return True
-    import numpy as np
-
-    if isinstance(v, (list, dict, tuple, np.ndarray, bytes, bytearray, str)):
-        return False
-    try:
-        import pandas as pd
-
-        return bool(pd.isna(v))
-    except (TypeError, ValueError):
-        return False

@@ -104,11 +104,6 @@ def read_orc(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.orc(path)
 
 
-def read_text(spark: SparkSession, path: str, whole: bool = False) -> DataFrame:
-    """Line-per-row text (or whole-file rows for document corpora)."""
-    return spark.read.option("wholetext", str(whole).lower()).text(path)
-
-
 def write_parquet(
     df: DataFrame,
     path: str,
@@ -610,28 +605,3 @@ def hidden_partition_predicates(
             elif kind == "identity":
                 preds.append(F.col(name) == F.lit(v))
     return preds
-
-
-def read_lz4_text(
-    spark: SparkSession, path: str, split_bytes: int | None = 4 << 20
-) -> DataFrame:
-    """Text lines from .lz4 frame file(s) via the splittable
-    block-range reader (sources/lz4frame.py) — (line_idx, line).
-    Default 4 MB task granularity; pass split_bytes=None for one
-    task per file."""
-    from distcpplus_spark.sources.lz4frame import read_lz4_lines_spark
-
-    return read_lz4_lines_spark(spark, path, split_bytes=split_bytes)
-
-
-def write_lz4_text(
-    df: DataFrame, path: str, line_col: str = "line",
-    block_bytes: int = 65536,
-) -> int:
-    """df[line_col] as independent-block .lz4 shards, one frame per
-    partition, executor-side; returns lines written."""
-    from distcpplus_spark.sources.lz4frame import write_lz4_shards
-
-    return write_lz4_shards(
-        df.select(F.col(line_col)), path, block_bytes=block_bytes
-    )

@@ -31,7 +31,6 @@ from __future__ import annotations
 
 import os
 import stat as statmod
-from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -58,21 +57,6 @@ FILE_META_SCHEMA = T.StructType(
 _WAVE_SCHEMA = T.StructType(
     FILE_META_SCHEMA.fields + [T.StructField("_root", T.StringType(), False)]
 )
-
-
-@dataclass(frozen=True)
-class ListedEntry:
-    path: str
-    relative_dst: str | None
-    length: int
-    is_dir: bool
-    mtime: float
-    atime: float
-    owner: str | None
-    group: str | None
-    permission: int
-    replication: int
-    block_size: int
 
 
 def _stat_to_entry(
@@ -114,7 +98,13 @@ def _scan_dirs(
     dirs: list[tuple[str, str]], prefix_base: bool = True
 ) -> tuple[list[tuple], list[tuple[str, str]]]:
     """One os.scandir per directory (RPC batching, P3): returns
-    (entry rows, child dirs as (path, root))."""
+    (entry rows, child dirs as (path, root)).
+
+    Fails closed, like the reference's ``listStatus``: a path that
+    vanished mid-walk is absent, as it would be at listing time, but
+    any other error (an unreadable directory) propagates. Dropping it
+    would make the subtree look empty, and ``-delete`` would then
+    delete its mirror."""
     rows: list[tuple] = []
     children: list[tuple[str, str]] = []
     for d, root in dirs:
@@ -123,12 +113,12 @@ def _scan_dirs(
                 for de in it:
                     try:
                         st = de.stat(follow_symlinks=False)
-                    except OSError:
+                    except FileNotFoundError:
                         continue
                     rows.append(_stat_to_entry(de.path, st, root, prefix_base))
                     if de.is_dir(follow_symlinks=False):
                         children.append((de.path, root))
-        except OSError:
+        except FileNotFoundError:
             continue
     return rows, children
 

@@ -612,27 +612,6 @@ def write_seqfile_sorted_indexed(
     return n
 
 
-def scan_seqfile_from(buf: bytes, sync: bytes, pos: int):
-    """Yield (doc_id, text, next_pos) from an absolute record/sync
-    offset onward — the Hadoop reader loop (sync escapes verified and
-    skipped inline)."""
-    while pos < len(buf):
-        if buf[pos : pos + 4] == SYNC_ESCAPE:
-            if buf[pos + 4 : pos + 20] != sync:
-                raise ValueError(f"sync mismatch at {pos}")
-            pos += 20
-            continue
-        rec_len, key_len = struct.unpack_from(">ii", buf, pos)
-        pos += 8
-        if key_len != 8:
-            raise ValueError(f"unexpected key length {key_len}")
-        (doc_id,) = struct.unpack_from(">q", buf, pos)
-        tlen, tpos = read_vint(buf, pos + 8)
-        text = buf[tpos : tpos + tlen].decode("utf-8")
-        pos += rec_len
-        yield doc_id, text, pos
-
-
 def seqfile_get(dirpath: str, key: int):
     """Point get: binary-search the sparse index for the rightmost
     sampled key <= ``key``, seek there, scan forward until found or

@@ -267,6 +267,41 @@ def test_cost_buckets_balanced(spark, tmp_path):
     assert all(r["b"] <= 2 * 5000 for r in per_bucket)
 
 
+@pytest.mark.parametrize("n", [2, 4, 8])
+def test_cost_buckets_one_task_each(spark, tmp_path, n):
+    """n equal files with one file's bytes per task: bucket b runs as
+    task b, so each file gets a task of its own (hash partitioning the
+    bucket ids put several in one task and left others empty)."""
+    from distcpplus_spark.operators.copier import default_copy_fn
+
+    src = tmp_path / "src"
+    src.mkdir()
+    for i in range(n):
+        (src / f"f{i}.bin").write_bytes(b"x" * (1 << 20))
+    pid_dir = tmp_path / "pids"
+    pid_dir.mkdir()
+
+    def record_partition(rows, dst_root, tmp_root, preserve):
+        from pyspark import TaskContext
+
+        pid = TaskContext.get().partitionId()
+        for row in rows:
+            if not row["is_dir"]:
+                name = os.path.basename(row["path"])
+                (pid_dir / name).write_text(str(pid))
+            yield from default_copy_fn([row], dst_root, tmp_root, preserve)
+
+    stats = DistCpPlusEngine(spark).copy(
+        [str(src)],
+        str(tmp_path / "dst"),
+        CopyOptions(bytes_per_task=1 << 20),
+        copy_fn=record_partition,
+    )
+    assert stats["COPY"] == n
+    pids = sorted(int((pid_dir / f"f{i}.bin").read_text()) for i in range(n))
+    assert pids == list(range(n))
+
+
 # ---------------------------------------------------------------------------
 # O9: mirror delete with ancestor suppression
 # ---------------------------------------------------------------------------
@@ -1091,3 +1126,37 @@ def test_cli_io_error_exit_code_minus_3(tmp_path):
     # missing source root -> InvalidInputError (a FileNotFoundError)
     rc = main([str(tmp_path / "no_such_src"), str(tmp_path / "dst")])
     assert rc == -3
+
+
+def test_unreadable_subdir_fails_closed(spark, tmp_path, monkeypatch):
+    """A listing error is not an empty directory: with one source
+    subdirectory unreadable, -update -delete raises before copying or
+    deleting anything, and the CLI exits -3. Dropping the error would
+    delete that subdirectory's mirror."""
+    from distcpplus_spark.cli import main
+
+    src = tmp_path / "src"
+    for d in ("ok", "locked"):
+        (src / d).mkdir(parents=True)
+        (src / d / "f.txt").write_bytes(d.encode())
+    dst = tmp_path / "dst"
+    DistCpPlusEngine(spark).copy([str(src)], str(dst))
+    before = tree_files(dst)
+    assert "locked/f.txt" in before
+
+    real_scandir = os.scandir
+    locked = str(src / "locked")
+
+    def scandir(path="."):
+        if path == locked:
+            raise PermissionError(13, "Permission denied", locked)
+        return real_scandir(path)
+
+    monkeypatch.setattr(os, "scandir", scandir)
+    with pytest.raises(PermissionError):
+        DistCpPlusEngine(spark).copy(
+            [str(src)], str(dst), CopyOptions(update=True, delete=True)
+        )
+    assert tree_files(dst) == before
+    assert main(["-update", "-delete", str(src), str(dst)]) == -3
+    assert tree_files(dst) == before
