@@ -227,9 +227,15 @@ class DistCpPlusEngine:
         dst_is_dir = os.path.isdir(dst_root)
         if dst_is_dir:
             # dst listing is relative to the dst root itself (no
-            # basename prefix) so relative_dst keys line up with src's
+            # basename prefix) so relative_dst keys line up with src's;
+            # an unreadable dst subtree (a root-owned lost+found) must
+            # not fail the copy, see list_tree
             dst_meta = list_tree(
-                self.spark, [dst_root], include_roots=False, prefix_base=False
+                self.spark,
+                [dst_root],
+                include_roots=False,
+                prefix_base=False,
+                skip_unreadable=True,
             )
         else:
             # one-slice empty relation: createDataFrame([]) still

@@ -32,6 +32,7 @@ from __future__ import annotations
 import os
 import stat as statmod
 
+from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -95,7 +96,9 @@ def _stat_to_entry(
 
 
 def _scan_dirs(
-    dirs: list[tuple[str, str]], prefix_base: bool = True
+    dirs: list[tuple[str, str]],
+    prefix_base: bool = True,
+    skip_unreadable: bool = False,
 ) -> tuple[list[tuple], list[tuple[str, str]]]:
     """One os.scandir per directory (RPC batching, P3): returns
     (entry rows, child dirs as (path, root)).
@@ -104,7 +107,9 @@ def _scan_dirs(
     vanished mid-walk is absent, as it would be at listing time, but
     any other error (an unreadable directory) propagates. Dropping it
     would make the subtree look empty, and ``-delete`` would then
-    delete its mirror."""
+    delete its mirror. ``skip_unreadable`` drops every error instead;
+    see ``list_tree``."""
+    tolerated = OSError if skip_unreadable else FileNotFoundError
     rows: list[tuple] = []
     children: list[tuple[str, str]] = []
     for d, root in dirs:
@@ -113,14 +118,22 @@ def _scan_dirs(
                 for de in it:
                     try:
                         st = de.stat(follow_symlinks=False)
-                    except FileNotFoundError:
+                    except tolerated:
                         continue
                     rows.append(_stat_to_entry(de.path, st, root, prefix_base))
                     if de.is_dir(follow_symlinks=False):
                         children.append((de.path, root))
-        except FileNotFoundError:
+        except tolerated:
             continue
     return rows, children
+
+
+class _ErrorList(AccumulatorParam):
+    def zero(self, value):
+        return []
+
+    def addInPlace(self, a, b):
+        return a + b
 
 
 def list_tree(
@@ -129,6 +142,7 @@ def list_tree(
     include_roots: bool = True,
     fanout_threshold: int = 64,
     prefix_base: bool = True,
+    skip_unreadable: bool = False,
 ) -> DataFrame:
     """List file trees under ``roots`` into a file_meta DataFrame.
 
@@ -143,6 +157,13 @@ def list_tree(
     this call, and downstream consumers read the rows as JVM blocks
     (local checkpoints), never re-running the scan through Python
     workers; see the module docstring.
+
+    A listing error other than a vanished path raises an ``OSError`` on
+    the driver, from a distributed wave too. Destination listings pass
+    ``skip_unreadable=True``: an unreadable destination subtree then
+    looks empty, which can only mean fewer deletes or per-file copy
+    failures that are already counted, whereas an unreadable source
+    subtree that looked empty would have its mirror deleted.
     """
     sc = spark.sparkContext
 
@@ -160,7 +181,7 @@ def list_tree(
     waves: list[DataFrame] = []
     while frontier:
         if len(frontier) <= fanout_threshold:
-            rows, frontier = _scan_dirs(frontier, prefix_base)
+            rows, frontier = _scan_dirs(frontier, prefix_base, skip_unreadable)
             local_rows.extend(rows)
         else:
             # Distributed wave: file rows STAY on executors as JVM
@@ -173,9 +194,21 @@ def list_tree(
             # frontier collect is the job that fills the checkpoint.
             n_parts = min(len(frontier), sc.defaultParallelism * 2)
 
-            def scan_wave(it, _pb=prefix_base):
+            # An executor's listing error would reach the driver as a
+            # wrapped Python worker exception; it comes back through an
+            # accumulator instead and is raised here as the OSError it is.
+            errors = sc.accumulator([], _ErrorList())
+
+            def scan_wave(
+                it, _pb=prefix_base, _skip=skip_unreadable, _errors=errors
+            ):
                 for d, root in it:
-                    for r in _scan_dirs([(d, root)], _pb)[0]:
+                    try:
+                        rows = _scan_dirs([(d, root)], _pb, _skip)[0]
+                    except OSError as e:
+                        _errors.add([(e.errno, e.strerror, e.filename)])
+                        continue
+                    for r in rows:
                         yield r + (root,)
 
             wave = spark.createDataFrame(
@@ -188,6 +221,8 @@ def list_tree(
                 .select("path", "_root")
                 .collect()
             ]
+            if errors.value:
+                raise OSError(*errors.value[0])
             waves.append(wave.drop("_root"))
 
     frames = waves

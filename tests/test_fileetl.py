@@ -1160,3 +1160,66 @@ def test_unreadable_subdir_fails_closed(spark, tmp_path, monkeypatch):
     assert tree_files(dst) == before
     assert main(["-update", "-delete", str(src), str(dst)]) == -3
     assert tree_files(dst) == before
+
+
+def _tree_with_overlong_path(root):
+    """A tree whose listing hits a real error even for root: a chain of
+    directories up to ~3900 path characters, 65 siblings under it (a
+    frontier wide enough for a distributed wave at the default
+    fanout_threshold of 64), and in one sibling a child whose path is
+    longer than PATH_MAX, so stat-ing it raises ENAMETOOLONG."""
+    p = str(root)
+    while len(p) + 251 <= 3900:
+        p = os.path.join(p, "d" * 250)
+    if len(p) < 3899:
+        p = os.path.join(p, "e" * (3899 - len(p)))
+    for i in range(65):
+        os.makedirs(os.path.join(p, f"s{i:02d}"))
+    fd = os.open(os.path.join(p, "s00"), os.O_RDONLY)
+    try:
+        os.mkdir("c" * 255, dir_fd=fd)
+    finally:
+        os.close(fd)
+
+
+def test_listing_error_in_distributed_wave_fails_closed(spark, tmp_path):
+    """An error in an executor-scanned wave reaches the driver as the
+    OSError it is, not a wrapped worker exception, so the CLI exits -3
+    whatever the width of the tree."""
+    import errno
+
+    from distcpplus_spark.cli import main
+
+    src = tmp_path / "src"
+    _tree_with_overlong_path(src)
+    with pytest.raises(OSError) as e:
+        list_tree(spark, [str(src)])
+    assert e.value.errno == errno.ENAMETOOLONG
+    dst = tmp_path / "dst"
+    assert main(["-update", "-delete", str(src), str(dst)]) == -3
+    assert not dst.exists()
+    # a destination listing skips the unlistable entry instead
+    listed = list_tree(spark, [str(src)], skip_unreadable=True)
+    assert listed.filter(F.col("path").endswith("/s00")).count() == 1
+
+
+def test_unreadable_dst_subdir_does_not_fail_copy(spark, tmp_path, monkeypatch):
+    """Only source listings fail closed: a plain copy into a destination
+    with an unreadable subdirectory (a root-owned lost+found) copies."""
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "a.txt").write_bytes(b"a")
+    dst = tmp_path / "dst"
+    locked = dst / "lost+found"
+    locked.mkdir(parents=True)
+
+    real_scandir = os.scandir
+
+    def scandir(path="."):
+        if path == str(locked):
+            raise PermissionError(13, "Permission denied", str(locked))
+        return real_scandir(path)
+
+    monkeypatch.setattr(os, "scandir", scandir)
+    DistCpPlusEngine(spark).copy([str(src)], str(dst))
+    assert (dst / "src" / "a.txt").read_bytes() == b"a"

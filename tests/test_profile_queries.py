@@ -22,15 +22,16 @@ def test_profile_two_queries(tmp_path):
         [sys.executable, os.path.join(ROOT, "tools", "gen_fixture.py"), "0.001", sf_dir],
         check=True,
     )
-    out = tmp_path / "profile.json"
     names = ["q01_scan_count", "q12_agg_q1"]
-    subprocess.run(
+    proc = subprocess.run(
         [sys.executable, os.path.join(ROOT, "tools", "profile_queries.py"), sf_dir,
-         *names, "--reps", "1", "--out", str(out)],
+         *names, "--reps", "1"],
         check=True,
+        capture_output=True,
+        text=True,
         cwd=str(tmp_path),
     )
-    profile = json.loads(out.read_text())
+    profile = json.loads(proc.stdout)
     assert list(profile) == names
     for name in names:
         assert set(profile[name]) == LAYER_METRICS, name

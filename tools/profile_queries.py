@@ -1,12 +1,12 @@
 """Profile registry queries from Spark's event log.
 
-Usage: python tools/profile_queries.py <sf_dir> [query ...] [--reps N] [--out path]
+Usage: python tools/profile_queries.py <sf_dir> <query> [query ...] [--reps N]
 
-Runs each query (default: the ``bench.HEADLINE`` set) once untimed as a
-warm-up, then ``--reps`` times inside a ``perfbench/spans.py`` span
-named ``queries.<query>``, in a session of its own with the event log
-on. After the session stops, the log is read back and each query gets
-perfbench's per-layer metrics, the median over its reps:
+Runs each query once untimed as a warm-up, then ``--reps`` times inside
+a ``perfbench/spans.py`` span named ``queries.<query>``, in a session of
+its own with the event log on. After the session stops, the log is read
+back and each query gets perfbench's per-layer metrics, the median over
+its reps:
 
   s                     wall of one collect()
   jobs, tasks           Spark jobs and tasks it ran
@@ -14,10 +14,15 @@ perfbench's per-layer metrics, the median over its reps:
   shuffle_write_mib     shuffle bytes those tasks wrote
   task_max_over_median  slowest task against the median task
 
-The profile is one JSON object, query -> metrics, written to ``--out``
-or printed. The session takes its shuffle partitions from
-``bench.shuffle_partitions``, so walls compare with ``bench.py``'s. To
-decide an A/B change, profile the parent and the branch.
+The profile is one JSON object, query -> metrics, printed to standard
+output (Spark logs go to standard error). The session takes its shuffle
+partitions from ``bench.shuffle_partitions``, so walls compare with
+``bench.py``'s.
+
+For the fixed headline set at sf0.1, ``perfbench/run.py --workload
+analytics_headline --trace 1`` reports the same metrics; this tool is
+for any other queries or scale factor. To decide an A/B change, profile
+the parent and the branch.
 """
 
 from __future__ import annotations
@@ -81,24 +86,17 @@ def profile(queries: dict, sf_dir: str, names: list[str], reps: int) -> dict[str
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     p.add_argument("sf_dir")
-    p.add_argument("queries", nargs="*", help="default: bench.HEADLINE")
+    p.add_argument("queries", nargs="+")
     p.add_argument("--reps", type=int, default=3)
-    p.add_argument("--out", help="write the JSON here instead of stdout")
     args = p.parse_args(argv)
-    names = args.queries or list(bench.HEADLINE)
     queries, _ = load_all_queries()
-    unknown = [n for n in names if n not in queries]
+    unknown = [n for n in args.queries if n not in queries]
     if unknown:
         p.error(f"unknown queries: {unknown}")
     if args.reps < 1:
         p.error("--reps must be at least 1")
 
-    text = json.dumps(profile(queries, args.sf_dir, names, args.reps), indent=1)
-    if args.out:
-        with open(args.out, "w") as f:
-            f.write(text + "\n")
-    else:
-        print(text)
+    print(json.dumps(profile(queries, args.sf_dir, args.queries, args.reps), indent=1))
     return 0
 
 
