@@ -25,6 +25,7 @@ from distcpplus_spark.operators.copier import (
     cleanup_tmp,
     counters,
     execute_copy,
+    execute_copy_chunked,
     finalize_dir_attrs,
 )
 from distcpplus_spark.plans.copy_plan import (
@@ -32,6 +33,7 @@ from distcpplus_spark.plans.copy_plan import (
     apply_limits,
     assign_cost_buckets,
     check_duplicates_and_total,
+    layout_tasks,
     plan_mirror_delete,
     plan_updates,
 )
@@ -292,16 +294,8 @@ class DistCpPlusEngine:
         t_run = _time.perf_counter()
         try:
             if plan.opts.chunk_bytes:
-                from distcpplus_spark.operators.copier import (
-                    execute_copy_chunked,
-                )
-
                 result = execute_copy_chunked(
-                    plan.copies,
-                    plan.dst_root,
-                    plan.run_id,
-                    chunk_bytes=plan.opts.chunk_bytes,
-                    preserve=plan.opts.preserve,
+                    plan.copies, plan.dst_root, plan.run_id, plan.opts, copy_fn
                 )
             else:
                 result = execute_copy(
@@ -346,21 +340,25 @@ class DistCpPlusEngine:
                 .json(plan.opts.log_dir)
             )
 
+        deletes = delete_fails = 0
         if plan.deletes is not None:
-            self._execute_deletes(plan)
+            deletes, delete_fails = self._execute_deletes(plan)
 
         live = obs.get
+        fails = live["fails"] or 0
         self.last_metrics = {
             "rows": live["rows"],
-            "fails": live["fails"] or 0,
+            "fails": fails,
             "bytes_copied": live["bytes_copied"] or 0,
+            "deletes": deletes,
+            "delete_fails": delete_fails,
             "run_s": round(run_s, 3),
             "cleanup_s": round(cleanup_s, 3),
         }
-        if self.last_metrics["fails"] > 0 and not plan.opts.ignore_failures:
+        if (fails or delete_fails) and not plan.opts.ignore_failures:
             raise CopyFailedError(
-                f"{self.last_metrics['fails']} file(s) failed to copy (use "
-                f"ignore_failures to tolerate)"
+                f"{fails} file(s) failed to copy and {delete_fails} mirror "
+                f"delete(s) failed (use ignore_failures to tolerate)"
             )
         return result
 
@@ -377,6 +375,8 @@ class DistCpPlusEngine:
         plan = self.plan(src_roots, dst_root, opts, **plan_kwargs)
         result = self.execute(plan, copy_fn=copy_fn)
         out = counters(result)
+        out["DELETE"] = self.last_metrics["deletes"]
+        out["DELETE_FAIL"] = self.last_metrics["delete_fails"]
         if plan.src_files is not None:
             # RECORDSKIPPED is an EXTENSION, not reference parity: the
             # reference declares the counter but never increments it
@@ -407,6 +407,10 @@ class DistCpPlusEngine:
         opts_d["preserve"] = frozenset(opts_d.get("preserve") or ())
         opts = CopyOptions(**opts_d)
         copies = self.spark.read.parquet(os.path.join(path, "copies"))
+        # parquet keeps the bucket column, not the layout: lay the
+        # buckets out as tasks again (one small job for their count)
+        n = (copies.agg(F.max("bucket")).collect()[0][0] or 0) + 1
+        copies = layout_tasks(copies, n)
         deletes_path = os.path.join(path, "deletes")
         deletes = (
             self.spark.read.parquet(deletes_path)
@@ -444,23 +448,33 @@ class DistCpPlusEngine:
             return self.spark.sql(statement, args=args)
         return self.spark.sql(statement)
 
-    def _execute_deletes(self, plan: CopyPlan) -> None:
-        """Mirror-delete execution: foreachPartition over the pruned
-        delete list. Dirs are removed recursively (their descendants
-        were ancestor-suppressed out of the list)."""
+    def _execute_deletes(self, plan: CopyPlan) -> tuple[int, int]:
+        """Mirror-delete execution over the pruned delete list, as one
+        job that returns ``(deleted, failed)``. Dirs are removed
+        recursively (their descendants were ancestor-suppressed out of
+        the list). A target that has already vanished is neither; any
+        other OSError is a failed delete, which fails the run closed
+        like a failed copy."""
         dst_root = plan.dst_root
 
-        def delete_partition(rows) -> None:
+        def delete_partition(rows):
             import shutil as _sh
 
+            deleted = failed = 0
             for row in rows:
                 target = os.path.join(dst_root, row["relative_dst"])
                 try:
                     if row["is_dir"]:
-                        _sh.rmtree(target, ignore_errors=True)
-                    elif os.path.exists(target):
+                        _sh.rmtree(target)
+                    else:
                         os.remove(target)
-                except OSError:
+                    deleted += 1
+                except FileNotFoundError:
                     pass
+                except OSError:
+                    failed += 1
+            yield deleted, failed
 
-        plan.deletes.foreachPartition(delete_partition)
+        return plan.deletes.rdd.mapPartitions(delete_partition).fold(
+            (0, 0), lambda a, b: (a[0] + b[0], a[1] + b[1])
+        )

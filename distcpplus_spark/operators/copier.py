@@ -1,5 +1,9 @@
 """The copy executor: the engine's one genuinely imperative operator.
 
+Task placement is not decided here: the plan arrives laid out by
+plans/copy_plan.py::layout_tasks (cost bucket b is partition b), and
+the copier maps over those partitions as they are.
+
 Per plan row (inside mapPartitions — distributed, no driver loop):
 mkdir for dirs; re-check skip condition at exec time (plan may be
 stale, DefaultCopyFilesMapper.java:129-136); stream bytes to
@@ -21,11 +25,14 @@ from __future__ import annotations
 import os
 import shutil
 import time
+import zlib
 from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from distcpplus_spark.plans.copy_plan import CopyOptions, assign_cost_buckets
 
 COPY_BUFFER_BYTES = 128 * 1024  # copy.buf.size, DefaultCopyFilesMapper.java:33
 CLEANUP_RETRIES = 3  # DefaultCopyFilesMapper.java:267-279
@@ -238,35 +245,25 @@ def execute_copy(
     run_id: str,
     preserve: frozenset[str] = frozenset(),
     copy_fn: Callable | None = None,
-    num_buckets: int | None = None,
 ) -> DataFrame:
-    """Run the copy: repartition by cost bucket → mapPartitions(copy).
+    """Run the copy: one ``mapPartitions(copy)`` over the plan as
+    :func:`~distcpplus_spark.plans.copy_plan.layout_tasks` laid it
+    out, so partition b is cost bucket b. The copier places nothing
+    itself.
 
     Returns the result DataFrame (one row per plan row) — the engine's
     counters (O15) are aggregations over it. ``copy_fn`` swaps the
     copy implementation (pluggable-mapper surface, O18).
     """
-    spark = plan.sparkSession
     tmp_root = os.path.join(dst_root, f"_distcp_tmp_{run_id}")
     fn = copy_fn or default_copy_fn
-
-    work = plan.rdd
-    if "bucket" in plan.columns:
-        n = num_buckets or (plan.agg(F.max("bucket")).collect()[0][0] or 0) + 1
-        # Bucket b runs as task b. Hash partitioning the ids 0..n-1
-        # would put balanced buckets in one task and leave others idle.
-        # Within a task, mkdir rows run before file rows, and paths
-        # sort parent < child.
-        work = (
-            work.keyBy(lambda r: (r["bucket"], not r["is_dir"], r["path"]))
-            .repartitionAndSortWithinPartitions(n, partitionFunc=lambda k: k[0])
-            .values()
-        )
 
     def run_partition(rows: Iterator) -> Iterator[tuple]:
         return fn(rows, dst_root, tmp_root, preserve)
 
-    return spark.createDataFrame(work.mapPartitions(run_partition), RESULT_SCHEMA)
+    return plan.sparkSession.createDataFrame(
+        plan.rdd.mapPartitions(run_partition), RESULT_SCHEMA
+    )
 
 
 def counters(result: DataFrame) -> dict[str, int]:
@@ -335,8 +332,6 @@ def _copy_range(
     """Copy one byte range; returns (bytes_copied, crc32 of the range).
     The CRC is computed IN-STREAM over the same buffers being written
     — integrity comes free with the transfer, no re-read."""
-    import zlib
-
     os.makedirs(os.path.dirname(part_path), exist_ok=True)
     copied = 0
     crc = 0
@@ -360,63 +355,57 @@ def execute_copy_chunked(
     plan: DataFrame,
     dst_root: str,
     run_id: str,
-    chunk_bytes: int,
-    preserve: frozenset[str] = frozenset(),
+    opts: CopyOptions,
+    copy_fn: Callable | None = None,
 ) -> DataFrame:
-    """Two-phase chunked copy.
+    """Chunked copy: files larger than ``opts.chunk_bytes`` copy in two
+    phases; dirs and every other file go through :func:`execute_copy`
+    unchanged (exec-time re-check, per-row MKDIR/FAIL rows, one write,
+    the caller's ``copy_fn``).
 
-    Phase 1 (parallel transfer): every chunk row copies its byte range
-    to ``tmp/<relative>.part<idx>`` — a 10 GB file with 256 MB chunks
-    engages 40 tasks, not 1.
-    Phase 2 (assembly): one task per file concatenates its parts in
-    order into a tmp file, verifies the total length, atomically
-    renames, applies attributes — the same tmp+rename+verify contract
-    as the single-shot copier. Dirs mkdir in phase 2's first pass.
+    Phase 1 (parallel transfer): every chunk row (cost = chunk_len)
+    copies its byte range to ``tmp/<relative>.part<idx>`` — a 10 GB
+    file with 256 MB chunks and 256 MB per task engages 40 tasks,
+    not 1.
+    Phase 2 (assembly): per file (cost = length), concatenate its
+    parts in order into a tmp file, verify the total length and the
+    composite CRC, atomically rename, apply attributes — the same
+    tmp+rename+verify contract as the single-shot copier.
+
+    Both phases are laid out by ``assign_cost_buckets``, so
+    ``bytes_per_task`` and ``max_tasks`` govern every copy task.
     """
     spark = plan.sparkSession
     tmp_root = os.path.join(dst_root, f"_distcp_tmp_{run_id}")
-    chunks = split_into_chunks(plan.filter(~F.col("is_dir")), chunk_bytes)
+    big = ~F.col("is_dir") & (F.col("length") > opts.chunk_bytes)
+    chunks = assign_cost_buckets(
+        split_into_chunks(plan.filter(big), opts.chunk_bytes)
+        .withColumn("cost", F.col("chunk_len")),
+        opts.bytes_per_task,
+        opts.max_tasks,
+    )
 
-    chunk_result_schema = T.StructType(
-        [
-            T.StructField("path", T.StringType(), False),
-            T.StructField("relative_dst", T.StringType(), True),
-            T.StructField("chunk_idx", T.IntegerType(), False),
-            T.StructField("n_chunks", T.IntegerType(), False),
-            T.StructField("length", T.LongType(), False),
-            T.StructField("ok", T.BooleanType(), False),
-            T.StructField("bytes_copied", T.LongType(), False),
-            T.StructField("crc", T.LongType(), False),
-            T.StructField("error", T.StringType(), True),
-        ]
+    chunk_result_schema = (
+        "path STRING, relative_dst STRING, chunk_idx INT, n_chunks INT, "
+        "length BIGINT, ok BOOLEAN, bytes_copied BIGINT, crc BIGINT, "
+        "error STRING"
     )
 
     def copy_chunks(rows: Iterator) -> Iterator[tuple]:
         for row in rows:
-            part = os.path.join(
-                tmp_root, f"{row['relative_dst']}.part{row['chunk_idx']:06d}"
-            )
+            rel, idx = row["relative_dst"], row["chunk_idx"]
+            key = (row["path"], rel, idx, row["n_chunks"], row["length"])
+            part = os.path.join(tmp_root, f"{rel}.part{idx:06d}")
             try:
                 n, crc = _copy_range(
                     row["path"], part, row["offset"], row["chunk_len"]
                 )
-                yield (
-                    row["path"], row["relative_dst"], row["chunk_idx"],
-                    row["n_chunks"], row["length"], True, n, crc, None,
-                )
+                yield (*key, True, n, crc, None)
             except Exception as e:
-                yield (
-                    row["path"], row["relative_dst"], row["chunk_idx"],
-                    row["n_chunks"], row["length"], False, 0, 0,
-                    f"{type(e).__name__}: {e}",
-                )
+                yield (*key, False, 0, 0, f"{type(e).__name__}: {e}")
 
-    # spread chunks round-robin so one file's chunks land on many tasks
-    n_part = max(4, chunks.rdd.getNumPartitions())
     phase1 = spark.createDataFrame(
-        chunks.repartition(n_part, "relative_dst", "chunk_idx")
-        .rdd.mapPartitions(copy_chunks),
-        chunk_result_schema,
+        chunks.rdd.mapPartitions(copy_chunks), chunk_result_schema
     ).cache()
     phase1.count()
 
@@ -431,13 +420,15 @@ def execute_copy_chunked(
                 F.struct("chunk_idx", "crc", "bytes_copied")
             ).alias("chunk_crcs"),
         )
+        .withColumn("cost", F.col("length"))
+        .withColumn("is_dir", F.lit(False))
     )
 
     def assemble(rows: Iterator) -> Iterator[tuple]:
-        import time as _t
+        from distcpplus_spark.operators.checksum import combine_chunk_crcs
 
         for row in rows:
-            t0 = _t.time()
+            t0 = time.time()
             rel = row["relative_dst"]
             final_path = os.path.join(dst_root, rel)
             try:
@@ -455,21 +446,10 @@ def execute_copy_chunked(
                 # expected whole-file CRC from the in-stream chunk
                 # CRCs via the GF(2) combine (operators/checksum.py) —
                 # COMPOSITE_CRC-style: no task ever re-reads the file
-                from distcpplus_spark.operators.checksum import (
-                    combine_chunk_crcs,
-                )
-
+                in_order = sorted(row["chunk_crcs"], key=lambda c: c["chunk_idx"])
                 expected_crc = combine_chunk_crcs(
-                    [
-                        (c["crc"], c["bytes_copied"])
-                        for c in sorted(
-                            row["chunk_crcs"],
-                            key=lambda c: c["chunk_idx"],
-                        )
-                    ]
+                    [(c["crc"], c["bytes_copied"]) for c in in_order]
                 )
-                import zlib as _zlib
-
                 assembled = os.path.join(tmp_root, rel + ".assembled")
                 os.makedirs(os.path.dirname(assembled), exist_ok=True)
                 actual_crc = 0
@@ -482,7 +462,7 @@ def execute_copy_chunked(
                                 if not buf:
                                     break
                                 out.write(buf)
-                                actual_crc = _zlib.crc32(buf, actual_crc)
+                                actual_crc = zlib.crc32(buf, actual_crc)
                 if os.stat(assembled).st_size != row["length"]:
                     raise OSError("assembled length mismatch")
                 if actual_crc != expected_crc:
@@ -499,7 +479,7 @@ def execute_copy_chunked(
                 if os.stat(final_path).st_size != row["length"]:
                     raise OSError("post-rename length mismatch")
                 src_stat = os.stat(row["path"])
-                _apply_attrs(final_path, src_stat, preserve)
+                _apply_attrs(final_path, src_stat, opts.preserve)
                 for i in range(row["n_chunks"]):
                     try:
                         os.remove(os.path.join(tmp_root, f"{rel}.part{i:06d}"))
@@ -508,29 +488,21 @@ def execute_copy_chunked(
                 yield (
                     row["path"], rel, "copy_chunked", "COPY",
                     row["bytes_transferred"], row["length"], None,
-                    int((_t.time() - t0) * 1000),
+                    int((time.time() - t0) * 1000),
                 )
             except Exception as e:
                 yield (
                     row["path"], rel, "copy_chunked", "FAIL", 0,
                     row["length"], f"{type(e).__name__}: {e}",
-                    int((_t.time() - t0) * 1000),
+                    int((time.time() - t0) * 1000),
                 )
 
     files_result = spark.createDataFrame(
-        per_file.repartition(n_part, "relative_dst").rdd.mapPartitions(assemble),
+        assign_cost_buckets(per_file, opts.bytes_per_task, opts.max_tasks)
+        .rdd.mapPartitions(assemble),
         RESULT_SCHEMA,
     )
-
-    # dirs: same mkdir handling as the single-shot path
-    def mkdirs(rows: Iterator) -> Iterator[tuple]:
-        for row in rows:
-            p = os.path.join(dst_root, row["relative_dst"])
-            os.makedirs(p, exist_ok=True)
-            yield (row["path"], row["relative_dst"], "mkdir", "MKDIR", 0, 0,
-                   None, 0)
-
-    dirs_result = spark.createDataFrame(
-        plan.filter(F.col("is_dir")).rdd.mapPartitions(mkdirs), RESULT_SCHEMA
+    rest = execute_copy(
+        plan.filter(~big), dst_root, run_id, opts.preserve, copy_fn
     )
-    return dirs_result.unionByName(files_result)
+    return rest.unionByName(files_result)

@@ -388,7 +388,7 @@ def write_bucketed(
     df: DataFrame,
     table: str,
     bucket_key: str | list[str],
-    num_buckets: int,
+    n_buckets: int,
     path: str | None = None,
     sort_key: str | list[str] | None = None,
 ) -> None:
@@ -404,7 +404,7 @@ def write_bucketed(
     writer = df.write.mode("overwrite").format("parquet")
     if path is not None:
         writer = writer.option("path", path)
-    writer = writer.bucketBy(num_buckets, *keys)
+    writer = writer.bucketBy(n_buckets, *keys)
     if sort_key is not None:
         sorts = [sort_key] if isinstance(sort_key, str) else list(sort_key)
         writer = writer.sortBy(*sorts)

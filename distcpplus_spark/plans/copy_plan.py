@@ -85,12 +85,11 @@ def apply_limits(
 
     if size_limit is None:
         # files-only running count; dirs pass through uncounted
-        ranked = _distributed_prefix_sum(
+        ranked = _distributed_prefix_sums(
             src_meta.withColumn(
                 "_fc", F.when(F.col("is_dir"), F.lit(0)).otherwise(F.lit(1))
             ),
-            value_col="_fc",
-            out_col="_frank",
+            [("_fc", "_frank", "sum")],
         )
         return (
             ranked.filter(F.col("is_dir") | (F.col("_frank") <= file_limit))
@@ -302,39 +301,25 @@ def plan_updates(
     )
 
 
-def _distributed_prefix_sum(
-    df: DataFrame, value_col: str, out_col: str
+def _distributed_prefix_sums(
+    df: DataFrame, specs: list[tuple[str, str, str]]
 ) -> DataFrame:
-    """Running sum of ``value_col`` in global ``path`` order, computed
+    """Running aggregates in global ``path`` order, computed
     distributed: range-partition the manifest by path (so physical
     partition ids are monotone in path order), then run the two-phase
     parallel prefix sum from operators/scale.py with
     ``spark_partition_id()`` as the carry bucket. Replaces an
     unpartitioned ``Window.orderBy("path")``, which would funnel every
-    row of a 100 M-row manifest through ONE task.
+    row of a 100 M-row manifest through ONE task. ``specs`` are
+    ``(value_col, out_col, 'sum'|'max')``; N of them cost what one
+    does (one local window, one totals job, one broadcast join).
 
     repartitionByRange's range boundaries come from reservoir sampling
     re-drawn per execution, so ``spark_partition_id()`` is NOT stable
-    across the two jobs inside partitioned_running_agg —
+    across the two jobs inside partitioned_running_aggs —
     ``deterministic_bucket=False`` makes it materialize the stamped
     frame once so both jobs see identical buckets.
     """
-    from ..operators.scale import partitioned_running_agg
-
-    n_parts = max(2, df.sparkSession.sparkContext.defaultParallelism)
-    ranged = df.repartitionByRange(n_parts, "path")
-    return partitioned_running_agg(
-        ranged, ["path"], value_col, out_col, F.spark_partition_id(),
-        deterministic_bucket=False,
-    )
-
-
-def _distributed_prefix_sums(
-    df: DataFrame, specs: list[tuple[str, str, str]]
-) -> DataFrame:
-    """Multi-spec variant of :func:`_distributed_prefix_sum`: N running
-    aggregates in global ``path`` order for the cost of one (one local
-    window, one totals job, one broadcast join)."""
     from ..operators.scale import partitioned_running_aggs
 
     n_parts = max(2, df.sparkSession.sparkContext.defaultParallelism)
@@ -406,13 +391,13 @@ def assign_cost_buckets(
     partition that drew the 10 GB files would straggle.
 
     The cumulative cost is a distributed two-phase prefix sum
-    (_distributed_prefix_sum), not a global ordered window — at a
+    (_distributed_prefix_sums), not a global ordered window — at a
     100 M-row manifest the window would serialize on one task.
 
-    Returns the plan with a ``bucket`` column; the executor
-    repartitions on it. num_buckets = clamp(total/bytes_per_task,
-    1, max_tasks). ``total`` skips the sum job when the caller
-    already computed it (check_duplicates_and_total).
+    Returns the plan with a ``bucket`` column, laid out by
+    :func:`layout_tasks`: bucket b is task b. n = clamp(total /
+    bytes_per_task, 1, max_tasks). ``total`` skips the sum job when
+    the caller already computed it (check_duplicates_and_total).
     """
     if total is None:
         total = plan.agg(F.sum("cost")).collect()[0][0] or 0
@@ -420,11 +405,23 @@ def assign_cost_buckets(
     if max_tasks:
         n = min(n, max_tasks)
     target = max(1, (total + n - 1) // n)
-    cum = _distributed_prefix_sum(plan, value_col="cost", out_col="_cum")
-    return cum.withColumn(
+    cum = _distributed_prefix_sums(plan, [("cost", "_cum", "sum")])
+    bucketed = cum.withColumn(
         "bucket",
         F.floor((F.col("_cum") - F.col("cost")) / F.lit(target)).cast("int"),
     ).drop("_cum")
+    return layout_tasks(bucketed, n)
+
+
+def layout_tasks(plan: DataFrame, n: int) -> DataFrame:
+    """The one place copy-task placement is decided: bucket b runs as
+    task b of n (a JVM exchange that AQE does not coalesce; hashing
+    the ids 0..n-1 would put balanced buckets in one task and leave
+    others idle). Within a task, mkdir rows run before file rows, and
+    paths sort parent < child."""
+    return plan.repartitionById(n, "bucket").sortWithinPartitions(
+        F.col("is_dir").desc(), "path"
+    )
 
 
 def plan_mirror_delete(dst_meta: DataFrame, src_plan: DataFrame) -> DataFrame:

@@ -47,6 +47,27 @@ def _bytes_conf(spark: SparkSession, key: str, default: int) -> int:
     return val if val > 0 else default
 
 
+def _disk_bytes(path: str) -> int:
+    """Bytes in a file or a directory tree; OSError if unreadable."""
+    if not os.path.isdir(path):
+        return os.path.getsize(path)
+    return sum(_disk_bytes(e.path) for e in os.scandir(path))
+
+
+def _fits_broadcast(spark: SparkSession, sf_dir: str, table: str) -> bool:
+    """The size probe of the size-adaptive branches (q05, q229): does
+    ``<sf_dir>/<table>.parquet``, a file or a directory of part files,
+    fit the broadcast threshold on disk? A size that cannot be read
+    counts as large, so the scale-safe branch runs."""
+    try:
+        size = _disk_bytes(os.path.join(sf_dir, f"{table}.parquet"))
+    except OSError:
+        return False
+    return size <= _bytes_conf(
+        spark, "spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024
+    )
+
+
 # ---------------------------------------------------------------------------
 # Family 1-2: scan / project / cast / filter
 # ---------------------------------------------------------------------------
@@ -196,11 +217,7 @@ def q05_join_inner_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
     orders = _t(spark, sf_dir, "orders")
     li = _t(spark, sf_dir, "lineitem")
-    bcast_threshold = _bytes_conf(
-        spark, "spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024
-    )
-    orders_bytes = os.path.getsize(os.path.join(sf_dir, "orders.parquet"))
-    if orders_bytes <= bcast_threshold:
+    if _fits_broadcast(spark, sf_dir, "orders"):
         joined = li.join(orders, li.l_orderkey == orders.o_orderkey).join(
             F.broadcast(cust), orders.o_custkey == cust.c_custkey
         )

@@ -1502,17 +1502,11 @@ def q229_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     branches produce BIT-IDENTICAL bounds (the exact_percentiles
     parity contract; hex-equal pin in test_r15_optimizations), so
     the branch can never change results."""
-    import os as _os
-
     from distcpplus_spark.operators.scale import exact_percentiles
-    from distcpplus_spark.queries.relational import _bytes_conf
+    from distcpplus_spark.queries.relational import _fits_broadcast
 
     li = load_table(spark, sf_dir, "lineitem")
-    li_bytes = _os.path.getsize(_os.path.join(sf_dir, "lineitem.parquet"))
-    bcast_threshold = _bytes_conf(
-        spark, "spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024
-    )
-    if li_bytes <= bcast_threshold:
+    if _fits_broadcast(spark, sf_dir, "lineitem"):
         bounds = li.agg(
             F.percentile(
                 "l_extendedprice", F.array(F.lit(0.01), F.lit(0.99))

@@ -271,35 +271,42 @@ def test_cost_buckets_balanced(spark, tmp_path):
 def test_cost_buckets_one_task_each(spark, tmp_path, n):
     """n equal files with one file's bytes per task: bucket b runs as
     task b, so each file gets a task of its own (hash partitioning the
-    bucket ids put several in one task and left others empty)."""
-    from distcpplus_spark.operators.copier import default_copy_fn
+    bucket ids put several in one task and left others empty). The
+    same holds for a plan saved and read back with load_plan."""
+    from distcpplus_spark.operators.copier import counters, default_copy_fn
 
     src = tmp_path / "src"
     src.mkdir()
     for i in range(n):
         (src / f"f{i}.bin").write_bytes(b"x" * (1 << 20))
-    pid_dir = tmp_path / "pids"
-    pid_dir.mkdir()
+    engine = DistCpPlusEngine(spark)
 
-    def record_partition(rows, dst_root, tmp_root, preserve):
-        from pyspark import TaskContext
+    for round_trip in (False, True):
+        pid_dir = tmp_path / f"pids_{round_trip}"
+        pid_dir.mkdir()
 
-        pid = TaskContext.get().partitionId()
-        for row in rows:
-            if not row["is_dir"]:
-                name = os.path.basename(row["path"])
-                (pid_dir / name).write_text(str(pid))
-            yield from default_copy_fn([row], dst_root, tmp_root, preserve)
+        def record_partition(rows, dst_root, tmp_root, preserve, pid_dir=pid_dir):
+            from pyspark import TaskContext
 
-    stats = DistCpPlusEngine(spark).copy(
-        [str(src)],
-        str(tmp_path / "dst"),
-        CopyOptions(bytes_per_task=1 << 20),
-        copy_fn=record_partition,
-    )
-    assert stats["COPY"] == n
-    pids = sorted(int((pid_dir / f"f{i}.bin").read_text()) for i in range(n))
-    assert pids == list(range(n))
+            pid = TaskContext.get().partitionId()
+            for row in rows:
+                if not row["is_dir"]:
+                    name = os.path.basename(row["path"])
+                    (pid_dir / name).write_text(str(pid))
+                yield from default_copy_fn([row], dst_root, tmp_root, preserve)
+
+        plan = engine.plan(
+            [str(src)],
+            str(tmp_path / f"dst_{round_trip}"),
+            CopyOptions(bytes_per_task=1 << 20),
+        )
+        if round_trip:
+            plan.save(str(tmp_path / "plan"))
+            plan = engine.load_plan(str(tmp_path / "plan"))
+        result = engine.execute(plan, copy_fn=record_partition)
+        assert counters(result)["COPY"] == n
+        pids = sorted(int((pid_dir / f"f{i}.bin").read_text()) for i in range(n))
+        assert pids == list(range(n)), round_trip
 
 
 # ---------------------------------------------------------------------------
@@ -325,6 +332,73 @@ def test_mirror_delete(spark, src_tree, tmp_path):
     assert not os.path.exists(os.path.join(base, "junkdir"))
     # originals intact
     assert tree_files(base) == tree_files(src_tree)
+
+
+def test_failed_mirror_delete_fails_closed(spark, src_tree, tmp_path, monkeypatch):
+    """-delete fails closed. After plan(), one doomed file becomes a
+    non-empty directory, so os.remove raises IsADirectoryError (even
+    as root): the run raises unless ignore_failures, which reports
+    DELETE_FAIL instead. A doomed file that vanished after plan() is
+    neither deleted nor failed."""
+    import shutil
+
+    dst = tmp_path / "dst"
+    engine = DistCpPlusEngine(spark)
+    engine.copy([src_tree], str(dst))
+    plan_fn = engine.plan
+
+    def plan_then_race(*args, **kwargs):
+        shutil.rmtree(dst / "busy", ignore_errors=True)
+        for name in ("gone", "busy", "stray"):
+            (dst / name).write_text(name)
+        plan = plan_fn(*args, **kwargs)
+        os.remove(dst / "gone")
+        os.remove(dst / "busy")
+        (dst / "busy").mkdir()
+        (dst / "busy" / "child").write_text("child")
+        return plan
+
+    monkeypatch.setattr(engine, "plan", plan_then_race)
+    flags = dict(update=True, delete=True, skip_ts_check=True)
+    with pytest.raises(CopyFailedError):
+        engine.copy([src_tree], str(dst), CopyOptions(**flags))
+    stats = engine.copy(
+        [src_tree], str(dst), CopyOptions(ignore_failures=True, **flags)
+    )
+    assert (stats["DELETE"], stats["DELETE_FAIL"]) == (1, 1)
+    assert engine.last_metrics["delete_fails"] == 1
+    assert not (dst / "stray").exists()
+    assert (dst / "busy" / "child").exists()
+
+
+def test_trace_contract_records_work_counts(spark, src_tree, tmp_path):
+    """The benchmark's ``--trace 1`` work counts come from
+    perfbench/spans.py wrapping engine functions by name. A small
+    -update -delete copy inside ``Tracer().patched()`` must record all
+    of them, so a rename or a dropped call fails here instead of
+    silently zeroing those metrics."""
+    from perfbench.spans import Tracer
+
+    dst = tmp_path / "dst"
+    opts = CopyOptions(update=True, delete=True, preserve=frozenset("t"))
+    DistCpPlusEngine(spark).copy([src_tree], str(dst), opts)
+    (dst / "stray.txt").write_text("stray")
+
+    tracer = Tracer()
+    tracer.sc = spark.sparkContext
+    tracer.op = 0
+    with tracer.patched():
+        DistCpPlusEngine(spark).copy([src_tree], str(dst), opts)
+    counts = tracer.counts[0]
+    assert {
+        "lister.rows",
+        "copy_plan.checksum_pairs",
+        "copy_plan.checksum_changed",
+        "copier.rows",
+        "engine.deletes",
+    } <= set(counts)
+    assert counts["copy_plan.checksum_pairs"] == 5
+    assert counts["engine.deletes"] == 1
 
 
 def test_mirror_delete_never_deletes_src_present(spark, src_tree, tmp_path):
@@ -546,7 +620,7 @@ def test_copy_empty_source_dir(spark, tmp_path):
 
 def test_chunked_copy_byte_identical(spark, tmp_path):
     """A large file split into chunks reassembles byte-identical, and
-    small files ride along untouched."""
+    small files ride along untouched, through the caller's copy_fn."""
     import hashlib
 
     src = tmp_path / "big_src"
@@ -556,11 +630,26 @@ def test_chunked_copy_byte_identical(spark, tmp_path):
     (src / "small.txt").write_bytes(b"tiny")
     dst = str(tmp_path / "dst")
 
+    seen = tmp_path / "seen"
+    seen.mkdir()
+
+    def record_rows(rows, dst_root, tmp_root, preserve):
+        from distcpplus_spark.operators.copier import default_copy_fn
+
+        for row in rows:
+            (seen / (row["relative_dst"] or ".root")).write_text("")
+            yield from default_copy_fn([row], dst_root, tmp_root, preserve)
+
     engine = DistCpPlusEngine(spark)
     stats = engine.copy(
-        [str(src)], dst, CopyOptions(chunk_bytes=512 * 1024)  # 8 chunks
+        [str(src)],
+        dst,
+        CopyOptions(chunk_bytes=512 * 1024, bytes_per_task=512 * 1024),  # 8 chunks
+        copy_fn=record_rows,
     )
     assert stats["COPY"] == 2 and stats["FAIL"] == 0
+    # the caller's copy_fn runs every row that is not split
+    assert sorted(os.listdir(seen)) == [".root", "small.txt"]
     got = (tmp_path / "dst" / "big.bin").read_bytes()
     assert hashlib.sha256(got).hexdigest() == hashlib.sha256(big).hexdigest()
     assert (tmp_path / "dst" / "small.txt").read_bytes() == b"tiny"

@@ -11,10 +11,13 @@ fails here even if the small-path oracle stays green.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from distcpplus_spark.catalog import load_table
 from distcpplus_spark.queries import load_all_queries, small_sort
+from distcpplus_spark.queries.relational import _fits_broadcast
 
 SF = "/root/testdata/sf0.001"
 
@@ -23,20 +26,45 @@ def rows(df):
     return sorted(map(tuple, df.collect()))
 
 
-def test_q05_both_branches_identical(spark):
+# Below the on-disk size of orders/lineitem at sf0.001 (36 KB, 117 KB),
+# above the 4 KB a directory's own entry reports
+SMALL_THRESHOLD = str(16 * 1024)
+
+
+def _dir_backed_sf(spark, tmp_path, table):
+    """A copy of SF whose ``table`` is a directory of part files, the
+    layout Spark writes; the other tables link to SF's files."""
+    sf = tmp_path / f"dir_{table}"
+    sf.mkdir()
+    for name in os.listdir(SF):
+        if name != f"{table}.parquet":
+            os.symlink(os.path.join(SF, name), sf / name)
+    load_table(spark, SF, table).repartition(4).write.parquet(
+        str(sf / f"{table}.parquet")
+    )
+    return str(sf)
+
+
+def test_q05_both_branches_identical(spark, tmp_path):
     """The size-adaptive branches of q05 must agree: force the big-data
-    branch by shrinking the broadcast threshold below orders.parquet's
-    size, and compare against the default (small) branch."""
+    branch by shrinking the broadcast threshold below orders' on-disk
+    size, and compare against the default (small) branch — for a
+    single-file table and a directory-backed one. A size that cannot
+    be read picks the big branch."""
     queries, _ = load_all_queries()
     key = "spark.sql.autoBroadcastJoinThreshold"
     old = spark.conf.get(key)
-    small = rows(queries["q05_join_inner_q3"](spark, SF))
-    try:
-        spark.conf.set(key, "1024")  # orders.parquet >> 1 KB -> big branch
-        big = rows(queries["q05_join_inner_q3"](spark, SF))
-    finally:
-        spark.conf.set(key, old)
-    assert small == big and len(small) == 20
+    assert not _fits_broadcast(spark, str(tmp_path), "orders")
+    for sf in (SF, _dir_backed_sf(spark, tmp_path, "orders")):
+        assert _fits_broadcast(spark, sf, "orders")
+        small = rows(queries["q05_join_inner_q3"](spark, sf))
+        try:
+            spark.conf.set(key, SMALL_THRESHOLD)
+            assert not _fits_broadcast(spark, sf, "orders")
+            big = rows(queries["q05_join_inner_q3"](spark, sf))
+        finally:
+            spark.conf.set(key, old)
+        assert small == big and len(small) == 20, sf
 
 
 def test_q11_window_matches_self_join(spark):
@@ -104,16 +132,27 @@ def test_q33_arith_bucket_matches_time_window(spark):
     assert got == want and len(got) > 0
 
 
-def test_q229_array_percentile_matches_separate(spark):
+def test_q229_array_percentile_matches_separate(spark, tmp_path):
     """q229's winsorized stats == the same stats clipped by two
     separate F.percentile aggregates, bit-exact. q229's bounds now
     come from the size-adaptive branch (shared-buffer
     percentile(col, array(...)) below the size threshold,
     operators.scale.exact_percentiles above it — round 15); both
     branches pin bit-parity with the plain aggregate, so the clipped
-    stats must not move by even one ulp."""
+    stats must not move by even one ulp. The second input is a
+    directory-backed lineitem under a threshold below its summed size,
+    which must take the exact_percentiles branch."""
     queries, _ = load_all_queries()
     got = rows(queries["q229_winsorized_stats"](spark, SF))
+    dir_sf = _dir_backed_sf(spark, tmp_path, "lineitem")
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, SMALL_THRESHOLD)
+        assert not _fits_broadcast(spark, dir_sf, "lineitem")
+        got_dir = rows(queries["q229_winsorized_stats"](spark, dir_sf))
+    finally:
+        spark.conf.set(key, old)
     li = load_table(spark, SF, "lineitem")
     bounds = li.agg(
         F.percentile("l_extendedprice", F.lit(0.01)).alias("lo"),
@@ -133,4 +172,4 @@ def test_q229_array_percentile_matches_separate(spark):
         )
         .transform(small_sort, "l_returnflag")
     )
-    assert got == want and len(got) > 0
+    assert got == want and got_dir == want and len(got) > 0

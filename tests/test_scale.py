@@ -270,7 +270,7 @@ def test_distributed_prefix_sum_matches_partitionless_window(spark):
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window as W
 
-    from distcpplus_spark.plans.copy_plan import _distributed_prefix_sum
+    from distcpplus_spark.plans.copy_plan import _distributed_prefix_sums
 
     rows = [(f"/src/{(i * 37) % 101:03d}.bin", ((i * 7919) % 997) + 1)
             for i in range(101)]
@@ -282,7 +282,7 @@ def test_distributed_prefix_sum_matches_partitionless_window(spark):
     }
     got = {
         r["path"]: r["c"]
-        for r in _distributed_prefix_sum(df, "cost", "c").collect()
+        for r in _distributed_prefix_sums(df, [("cost", "c", "sum")]).collect()
     }
     assert got == expect
 
