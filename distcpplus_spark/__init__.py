@@ -13,7 +13,7 @@ Layout
                    version of the reference's driver-side recursive scan,
                    DistCPPlus.java:644-749) + regex source selection
                    (Arguments.java:306-346, 363-437)
-- ``plans``      : copy planning — update anti-join (DistCpUtils.java:239-291),
+- ``plans``      : copy planning — one diff of the two listings (DistCpUtils.java:239-291),
                    duplicate check (DistCpUtils.java:84-110), limits
                    (DistCPPlus.java:676-678), cost-balanced bucketing
                    (CopyInputFormat.java:33-79), mirror delete

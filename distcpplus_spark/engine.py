@@ -9,6 +9,15 @@ The reference's three entry points (SURVEY.md §3) map to:
   E3 plan export    → CopyPlan holds the DataFrames + options; the
                       "serialized physical plan" is Catalyst's, not a
                       stringly JobConf
+
+One sync is planned once: plan() lists each tree once, diffs the two
+listings in one full-outer join (copy_plan.sync_diff), and one job
+materializes that diff with its checksum reads. Copies, mirror deletes
+and the RECORDSKIPPED count are filters of it. A -update -delete sync
+whose listings each take one distributed wave runs at most 16 Spark
+jobs (tests/test_fileetl.py::test_sync_job_budget). At the copy
+benchmark's size a job costs more than the work inside it, so read
+perfbench's ``--trace 1`` per-span jobs before adding one.
 """
 
 from __future__ import annotations
@@ -36,6 +45,8 @@ from distcpplus_spark.plans.copy_plan import (
     layout_tasks,
     plan_mirror_delete,
     plan_updates,
+    source_rows,
+    sync_diff,
 )
 from distcpplus_spark.sources.lister import list_tree
 
@@ -56,13 +67,13 @@ class CopyPlan:
     opts: CopyOptions
     dst_root: str
     run_id: str
-    # post-limit source FILE listing (lazy) — feeds the RECORDSKIPPED
+    # number of source files (post-limit) — feeds the RECORDSKIPPED
     # counter: the reference's skip counter covers files the -update
     # predicate deemed unchanged (DistCPPlus.java:108,816-820), which
     # this engine filters out at PLAN time, so the result DataFrame
     # alone undercounts them. None for rehydrated plans (load_plan),
     # where the source listing was not persisted.
-    src_files: DataFrame | None = None
+    source_files: int | None = None
 
     def explain(self) -> None:
         self.copies.explain("formatted")
@@ -215,17 +226,6 @@ class DistCpPlusEngine:
                 src_meta, src_roots[0], depth_regexes
             )
 
-        # The full listing feeds dup-check and mirror-delete: the
-        # reference's dst-list writer appends EVERY traversed child,
-        # including limit-skipped ones (DistCPPlus.java:732-733), so
-        # -delete never removes a file that was merely over-limit.
-        src_all = src_meta
-        if not opts.update:
-            # -update quirk (DistCPPlus.java:676-700): the sameFile
-            # assignment OVERWRITES the limit skip, so filelimit /
-            # sizelimit are ignored in update mode. Replicated as-is.
-            src_meta = apply_limits(src_meta, opts.file_limit, opts.size_limit)
-
         dst_is_dir = os.path.isdir(dst_root)
         if dst_is_dir:
             # dst listing is relative to the dst root itself (no
@@ -248,24 +248,38 @@ class DistCpPlusEngine:
                 src_meta.schema,
             )
 
-        # round-15 job consolidation (guide §2.6 / §5): the update-join
-        # plan is lazily checkpointed, then ONE job runs the
-        # duplicate-destination check and the cost total together and
-        # materializes it — previously the dup check, the bucket-total
-        # agg, the prefix-sum's range sampling and its bucket stamping
-        # each re-evaluated the join (and its checksum UDF) from
-        # scratch as separate jobs.
-        copies = plan_updates(src_meta, dst_meta, opts).localCheckpoint(
-            eager=False
+        # The one planning join: copies, deletes and the source-file
+        # count are filters of this diff. Lazily checkpointed, so the
+        # checksum reads run once, in the dup/total job below that
+        # materializes it (under AQE the checkpoint call itself runs
+        # the join's two map stages).
+        diff = sync_diff(src_meta, dst_meta, opts).localCheckpoint(eager=False)
+        listed = source_rows(diff)
+        # The full listing feeds the dup check and the mirror delete:
+        # the reference's dst-list writer appends EVERY traversed
+        # child, including limit-skipped ones (DistCPPlus.java:732-733),
+        # so -delete never removes a file that was merely over-limit.
+        # -update quirk (DistCPPlus.java:676-700): the sameFile
+        # assignment OVERWRITES the limit skip, so filelimit / sizelimit
+        # are ignored in update mode. Replicated as-is.
+        sources = (
+            listed
+            if opts.update
+            else apply_limits(listed, opts.file_limit, opts.size_limit)
         )
-        total_cost = check_duplicates_and_total(src_all, copies)
+        n_files, total_cost = check_duplicates_and_total(
+            diff, None if sources is listed else sources
+        )
         copies = assign_cost_buckets(
-            copies, opts.bytes_per_task, opts.max_tasks, total=total_cost
+            plan_updates(sources, dst_meta, opts),
+            opts.bytes_per_task,
+            opts.max_tasks,
+            total=total_cost,
         )
 
         deletes = None
         if opts.delete and dst_is_dir:
-            deletes = plan_mirror_delete(dst_meta, src_all)
+            deletes = plan_mirror_delete(diff)
 
         return CopyPlan(
             copies=copies,
@@ -273,13 +287,15 @@ class DistCpPlusEngine:
             opts=opts,
             dst_root=dst_root,
             run_id=uuid.uuid4().hex[:12],
-            src_files=src_meta.filter(~F.col("is_dir")).select("relative_dst"),
+            source_files=n_files,
         )
 
     def execute(self, plan: CopyPlan, copy_fn=None) -> DataFrame:
         """Run the plan: copies (distributed), then deletes, then the
         failure gate. Returns the result DataFrame (O15 counters are
-        aggregations over it).
+        aggregations over it), cached: the caller owns it and
+        unpersists it when done. A failing run unpersists it before
+        raising.
 
         Live metrics ride the materializing action via ``observe()``
         (no second job); stage timings mirror the reference's
@@ -356,6 +372,7 @@ class DistCpPlusEngine:
             "cleanup_s": round(cleanup_s, 3),
         }
         if (fails or delete_fails) and not plan.opts.ignore_failures:
+            result.unpersist()
             raise CopyFailedError(
                 f"{fails} file(s) failed to copy and {delete_fails} mirror "
                 f"delete(s) failed (use ignore_failures to tolerate)"
@@ -375,22 +392,24 @@ class DistCpPlusEngine:
         plan = self.plan(src_roots, dst_root, opts, **plan_kwargs)
         result = self.execute(plan, copy_fn=copy_fn)
         out = counters(result)
+        result.unpersist()
         out["DELETE"] = self.last_metrics["deletes"]
         out["DELETE_FAIL"] = self.last_metrics["delete_fails"]
-        if plan.src_files is not None:
+        if plan.source_files is not None:
             # RECORDSKIPPED is an EXTENSION, not reference parity: the
             # reference declares the counter but never increments it
             # (DistCPPlus.java:108 declares; only SKIP is ever used,
             # DefaultCopyFilesMapper.java:133). Here it estimates files
             # skipped either by the -update join at plan time or by the
             # copier's exec-time staleness re-check, derived from the
-            # listing (src_files − COPY − FAIL) so the change
-            # predicate's checksum reads don't re-run. FAIL can include
-            # directory rows (mkdir/attr failures), which the file-only
-            # listing doesn't count — clamp at 0 instead of going
+            # plan's source-file count (source files − COPY − FAIL),
+            # taken by the job that materialized the plan. FAIL can
+            # include directory rows (mkdir/attr failures), which the
+            # file count doesn't count — clamp at 0 instead of going
             # negative in that case.
-            n_src = plan.src_files.count()
-            out["RECORDSKIPPED"] = max(0, n_src - out["COPY"] - out["FAIL"])
+            out["RECORDSKIPPED"] = max(
+                0, plan.source_files - out["COPY"] - out["FAIL"]
+            )
         return out
 
     def load_plan(self, path: str) -> CopyPlan:

@@ -1,5 +1,14 @@
-"""Copy-plan construction: update anti-join, limits, duplicate check,
-cost-balanced bucketing, mirror-delete planning.
+"""Copy-plan construction: one diff of the two listings, limits,
+duplicate check, cost-balanced bucketing, mirror-delete planning.
+
+The plan has one join. :func:`sync_diff` is the full-outer diff of the
+source and destination listings keyed on ``relative_dst``, every row
+tagged with its action; the copy set (:func:`plan_updates`), the
+mirror deletes (:func:`plan_mirror_delete`), the source-file count and
+``sources/lister.relist_diff`` are filters or projections of it. The
+engine lazily checkpoints the diff, and
+:func:`check_duplicates_and_total` is the one job that materializes
+it, checksum reads included.
 
 All plan stages are lazy DataFrame transformations — the plan IS a
 Catalyst logical plan, inspectable via .explain() (the Spark-native
@@ -11,7 +20,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -219,25 +228,51 @@ def _sha256_of_paths():
     return sha
 
 
-def plan_updates(
+COPY_ACTIONS = ("mkdir", "copy_new", "copy_checksum", "copy_changed")
+
+
+def sync_diff(
     src_meta: DataFrame,
     dst_meta: DataFrame,
     opts: CopyOptions,
 ) -> DataFrame:
-    """The -update / -overwrite plan: decide per source row whether to
-    copy, via a distributed left join + change predicate
-    (DistCpUtils.sameFile, DistCpUtils.java:239-291).
+    """The plan's one join: a full-outer diff of the source and
+    destination listings keyed on ``relative_dst``, every row tagged
+    with an ``action`` — the merge of the two sorted listings that the
+    reference runs per copy (DistCpUtils.sameFile,
+    DistCpUtils.java:239-291) and per mirror delete
+    (DistCpUtils.deleteNonexisting, DistCpUtils.java:136-223).
 
-    The reference does a namenode point-lookup per file
-    (DistCPPlus.java:685-688) — O(N) RPCs; this is one shuffle join.
-    Change predicate: differ on length, or on mtime unless
-    skip_ts_check, or — unless skip_crc_check — on content checksum
-    when length+mtime tie. Checksums are a lazy column computed
-    distributed, ONLY for tie rows (the reference's sameFile fetches
-    FS checksums for exactly those); an unavailable checksum counts as
-    equal (DistCpUtils.java:280-290).
+    Actions: ``mkdir`` (source dirs), ``copy_new`` (missing at the
+    destination), ``copy_checksum`` / ``copy_changed`` (the change
+    predicate holds), ``skip`` (a source file the predicate keeps) and
+    ``delete`` (destination-only: a mirror-delete candidate, whose
+    source columns are NULL).
+
+    Change predicate, under -update: differ on length, or on mtime
+    unless skip_ts_check, or — unless skip_crc_check — on content
+    checksum when length+mtime tie. Checksums are a lazy column
+    computed distributed, ONLY for tie rows (the reference's sameFile
+    fetches FS checksums for exactly those); an unavailable checksum
+    counts as equal (DistCpUtils.java:280-290). -overwrite copies
+    every source row; a plain copy only what is missing.
+
+    Columns: the source listing's, the destination's ``relative_dst``,
+    ``path``, ``length`` and ``is_dir`` as ``d_*``, ``action``, and
+    ``_dup``: the row is one of several source files with one
+    destination (DistCpUtils.java:84-110). ``_dup`` is a window over
+    the source side's join exchange, so it costs no shuffle of its own.
     """
-    s = src_meta.alias("s")
+    s = src_meta.withColumn(
+        "_dup",
+        ~F.col("is_dir")
+        & (
+            F.sum(F.when(~F.col("is_dir"), 1).otherwise(0)).over(
+                Window.partitionBy("relative_dst")
+            )
+            > 1
+        ),
+    ).alias("s")
     d = dst_meta.select(
         F.col("relative_dst").alias("d_relative_dst"),
         F.col("length").alias("d_length"),
@@ -246,27 +281,28 @@ def plan_updates(
         F.col("path").alias("d_path"),
     ).alias("d")
     joined = s.join(
-        d, F.col("s.relative_dst") == F.col("d.d_relative_dst"), "left"
+        d, F.col("s.relative_dst") == F.col("d.d_relative_dst"), "full_outer"
     )
-    missing = F.col("d.d_relative_dst").isNull()
+    missing = F.col("d_relative_dst").isNull()
+    crc = F.lit(False)
     if opts.overwrite:
         keep = F.lit(True)
     elif opts.update:
-        changed = F.col("s.length") != F.col("d.d_length")
+        changed = F.col("s.length") != F.col("d_length")
         if not opts.skip_ts_check:
-            changed = changed | (F.col("s.mtime") != F.col("d.d_mtime"))
+            changed = changed | (F.col("s.mtime") != F.col("d_mtime"))
         if not opts.skip_crc_check:
             # tie rows = would otherwise be skipped; only they get read
             tie = (
                 ~F.col("s.is_dir")
                 & ~missing
-                & (F.col("s.length") == F.col("d.d_length"))
+                & (F.col("s.length") == F.col("d_length"))
             )
             if not opts.skip_ts_check:
-                tie = tie & (F.col("s.mtime") == F.col("d.d_mtime"))
+                tie = tie & (F.col("s.mtime") == F.col("d_mtime"))
             sha = _sha256_of_paths()
             s_sum = sha(F.when(tie, F.col("s.path")))
-            d_sum = sha(F.when(tie, F.col("d.d_path")))
+            d_sum = sha(F.when(tie, F.col("d_path")))
             joined = joined.withColumn(
                 "_crc_changed",
                 tie
@@ -274,30 +310,58 @@ def plan_updates(
                 & d_sum.isNotNull()
                 & (s_sum != d_sum),
             )
-            changed = changed | F.col("_crc_changed")
+            crc = F.col("_crc_changed")
+            changed = changed | crc
         keep = missing | changed
     else:
         # plain copy: only skip files already present (same semantics
         # as the reference's default skip-if-exists-and-same-size,
         # DefaultCopyFilesMapper.java:65-69 with update=false)
         keep = missing
-    crc_col = (
-        F.col("_crc_changed")
-        if "_crc_changed" in joined.columns
-        else F.lit(False)
+    action = (
+        F.when(F.col("s.path").isNull(), F.lit("delete"))
+        .when(F.col("s.is_dir"), F.lit("mkdir"))
+        .when(missing, F.lit("copy_new"))
+        # checksum-detected: metadata ties, so the copier's cheap
+        # exec-time re-check must not veto the copy
+        .when(crc, F.lit("copy_checksum"))
+        .when(keep, F.lit("copy_changed"))
+        .otherwise(F.lit("skip"))
     )
-    return (
-        joined.withColumn(
-            "action",
-            F.when(F.col("s.is_dir"), F.lit("mkdir"))
-            .when(missing, F.lit("copy_new"))
-            # checksum-detected: metadata ties, so the copier's cheap
-            # exec-time re-check must not veto the copy
-            .when(crc_col, F.lit("copy_checksum"))
-            .otherwise(F.lit("copy_changed")),
-        )
-        .filter(F.col("s.is_dir") | keep)
-        .select("s.*", "action")
+    return joined.select(
+        "s.*",
+        "d_relative_dst",
+        "d_path",
+        "d_length",
+        "d_is_dir",
+        action.alias("action"),
+    )
+
+
+def source_rows(diff: DataFrame) -> DataFrame:
+    """The diff's source rows (every action but ``delete``)."""
+    return diff.filter(F.col("action") != "delete")
+
+
+def plan_updates(
+    src_meta: DataFrame,
+    dst_meta: DataFrame,
+    opts: CopyOptions,
+) -> DataFrame:
+    """The copy set: the source rows :func:`sync_diff` tags ``mkdir``,
+    ``copy_new``, ``copy_checksum`` or ``copy_changed``, with the
+    source listing's columns plus ``action``.
+
+    The reference does a namenode point-lookup per file
+    (DistCPPlus.java:685-688) — O(N) RPCs; this is one shuffle join.
+    ``src_meta`` may also be source rows that already carry the
+    diff's ``action`` (the engine's checkpointed diff); they are then
+    only filtered, and ``dst_meta`` is not read again.
+    """
+    if "action" not in src_meta.columns:
+        src_meta = sync_diff(src_meta, dst_meta, opts)
+    return src_meta.filter(F.col("action").isin(*COPY_ACTIONS)).drop(
+        "_dup", "d_relative_dst", "d_path", "d_length", "d_is_dir"
     )
 
 
@@ -331,53 +395,54 @@ def _distributed_prefix_sums(
 
 
 def check_duplicates_and_total(
-    src_meta: DataFrame, plan: DataFrame
-) -> int:
-    """The duplicate-destination check (DistCpUtils.java:84-110) AND
-    the plan's total copy cost in ONE Spark job.
+    diff: DataFrame, sources: DataFrame | None = None
+) -> tuple[int, int]:
+    """The one job that materializes the lazily checkpointed
+    :func:`sync_diff`: the duplicate-destination check
+    (DistCpUtils.java:84-110), the number of source files and the
+    plan's total copy cost, as one aggregate. Returns ``(source files,
+    total cost)``; the total feeds :func:`assign_cost_buckets`, the
+    file count the RECORDSKIPPED counter.
 
-    Duplicates: the reference external-sorts the listing and compares
-    neighbors; relationally it is GROUP BY relative_dst HAVING
-    count > 1 over the source files. Any such group raises
-    :class:`DuplicationError`.
+    Any source file flagged ``_dup`` raises :class:`DuplicationError`,
+    a NULL destination included. The check runs in the same job that
+    reads the tie rows' checksums, and a checksum read error there
+    becomes NULL (counted as equal), never a job failure, so
+    duplicate destinations still surface as ``DuplicationError``.
 
-    Total: ``sum(plan.cost)`` (0 when empty), returned for
-    :func:`assign_cost_buckets`'s ``total``.
-
-    The two subtrees union into a single action (guide §2.6 — overlap
-    independent work), each row tagged with the side it came from, so
-    a duplicate group whose key is NULL is still a duplicate. Because
-    callers lazily checkpoint ``plan`` first, this job is also the one
-    that materializes the update-join plan that three downstream
-    consumers (range sampling, bucket stamping, the final collect)
-    would otherwise each recompute.
+    ``sources`` are the diff's source rows after -filelimit /
+    -sizelimit: the file count and the cost then come from them, while
+    the duplicate check still sees the whole listing
+    (DistCPPlus.java:732-733). Without it both come from ``diff``.
     """
-    dup_rows = (
-        src_meta.filter(~F.col("is_dir"))
-        .groupBy("relative_dst")
-        .count()
-        .filter(F.col("count") > 1)
-        .limit(5)
-        .select(
-            F.lit(True).alias("_dup"),
-            F.col("relative_dst").alias("_k"),
-            F.lit(None).cast("long").alias("_v"),
+    dup = F.coalesce(F.col("_dup"), F.lit(False))
+    checked = [
+        dup.cast("long").alias("_d"),
+        F.when(dup, F.col("relative_dst")).alias("_k"),
+    ]
+    counted = [
+        ((F.col("action") != "delete") & ~F.col("is_dir")).cast("long").alias("_f"),
+        F.when(F.col("action").isin(*COPY_ACTIONS), F.col("cost")).alias("_c"),
+    ]
+    if sources is None:
+        rows = diff.select(*checked, *counted)
+    else:
+        rows = diff.select(*checked).unionByName(
+            sources.select(*counted), allowMissingColumns=True
         )
-    )
-    total_row = plan.agg(F.sum("cost").alias("_v")).select(
-        F.lit(False).alias("_dup"),
-        F.lit(None).cast("string").alias("_k"),
-        F.col("_v"),
-    )
-    stats = dup_rows.unionByName(total_row).collect()
-    dups = [str(r["_k"]) for r in stats if r["_dup"]]
-    if dups:
-        names = ", ".join(dups)
+    stats = rows.agg(
+        F.sum("_d").alias("dups"),
+        F.min("_k").alias("first"),
+        F.max("_k").alias("last"),
+        F.sum("_f").alias("files"),
+        F.sum("_c").alias("total"),
+    ).collect()[0]
+    if stats["dups"]:
+        names = ", ".join(sorted({str(stats["first"]), str(stats["last"])}))
         raise DuplicationError(
-            f"multiple sources map to one destination: {names}"
+            f"{stats['dups']} source files share a destination: {names}"
         )
-    total = next(r["_v"] for r in stats if not r["_dup"])
-    return int(total or 0)
+    return int(stats["files"] or 0), int(stats["total"] or 0)
 
 
 def assign_cost_buckets(
@@ -404,6 +469,9 @@ def assign_cost_buckets(
     n = max(1, int(total // bytes_per_task) + (1 if total % bytes_per_task else 0))
     if max_tasks:
         n = min(n, max_tasks)
+    if n == 1:
+        # one task holds the whole plan: no prefix sum to place it
+        return layout_tasks(plan.withColumn("bucket", F.lit(0)), 1)
     target = max(1, (total + n - 1) // n)
     cum = _distributed_prefix_sums(plan, [("cost", "_cum", "sum")])
     bucketed = cum.withColumn(
@@ -424,19 +492,24 @@ def layout_tasks(plan: DataFrame, n: int) -> DataFrame:
     )
 
 
-def plan_mirror_delete(dst_meta: DataFrame, src_plan: DataFrame) -> DataFrame:
-    """-delete (DistCpUtils.java:136-223): destination paths whose
-    relative path does not appear in the source listing, with
-    ancestor suppression — if a directory is deleted, its descendants
-    are pruned from the list (isAncestorPath, DistCpUtils.java:113-119)
-    so we never double-delete or re-delete inside a removed tree.
+def plan_mirror_delete(diff: DataFrame) -> DataFrame:
+    """-delete (DistCpUtils.java:136-223): the diff's ``delete`` rows,
+    the destination paths no source row maps to, as ``path``,
+    ``relative_dst``, ``is_dir`` and ``length``. Ancestor suppression:
+    a doomed path is dropped when its parent directory is doomed too
+    (isAncestorPath, DistCpUtils.java:113-119), so a removed tree is
+    deleted once, never entered again.
 
     Ancestor suppression is itself relational: a doomed path is
-    suppressed iff its parent dir is also doomed. One extra self-join
-    on the parent path replaces the reference's ordered scan.
+    suppressed iff its parent dir is also doomed. One self-join of the
+    doomed rows on the parent path replaces the reference's ordered
+    scan.
     """
-    doomed = dst_meta.join(
-        src_plan.select("relative_dst").distinct(), "relative_dst", "left_anti"
+    doomed = diff.filter(F.col("action") == "delete").select(
+        F.col("d_path").alias("path"),
+        F.col("d_relative_dst").alias("relative_dst"),
+        F.col("d_is_dir").alias("is_dir"),
+        F.col("d_length").alias("length"),
     )
     parent = F.when(
         F.instr(F.col("relative_dst"), "/") > 0,

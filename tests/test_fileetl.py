@@ -15,6 +15,8 @@ from distcpplus_spark.plans.copy_plan import (
     DuplicationError,
     assign_cost_buckets,
     check_duplicates_and_total,
+    source_rows,
+    sync_diff,
 )
 from distcpplus_spark.sources.lister import list_tree
 from distcpplus_spark.sources.regex_select import filter_name_regex, touched_dirs
@@ -219,19 +221,33 @@ def test_duplicate_destination_raises(spark, tmp_path):
 
 
 def test_check_duplicates_and_total_null_destination(spark):
-    """Two source files with a NULL relative_dst are a duplicate, not
-    the total row; with no duplicate the total is the plan's cost."""
-    schema = "relative_dst STRING, is_dir BOOLEAN, cost BIGINT"
+    """Two source files with a NULL relative_dst are a duplicate; with
+    no duplicate the job returns the source-file count and the copy
+    cost, both from the limited sources when those are given."""
+    schema = (
+        "path STRING, relative_dst STRING, length BIGINT, is_dir BOOLEAN, "
+        "mtime TIMESTAMP, cost BIGINT"
+    )
+    nothing = spark.createDataFrame([], schema)
     dup = spark.createDataFrame(
-        [(None, False, 3), (None, False, 4), ("d", True, 0)], schema
+        [("p", None, 3, False, None, 3), ("q", None, 4, False, None, 4),
+         ("d", "d", 0, True, None, 0)],
+        schema,
     )
     with pytest.raises(DuplicationError):
-        check_duplicates_and_total(dup, dup)
+        check_duplicates_and_total(sync_diff(dup, nothing, CopyOptions()))
     ok = spark.createDataFrame(
-        [("a", False, 3), (None, False, 4), ("d", True, 0)], schema
+        [("p", "a", 3, False, None, 3), ("q", None, 4, False, None, 4),
+         ("d", "d", 0, True, None, 0)],
+        schema,
     )
-    assert check_duplicates_and_total(ok, ok) == 7
-    assert check_duplicates_and_total(ok, ok.filter(F.lit(False))) == 0
+    diff = sync_diff(ok, nothing, CopyOptions())
+    assert check_duplicates_and_total(diff) == (2, 7)
+    limited = source_rows(diff).filter(F.col("relative_dst") == "a")
+    assert check_duplicates_and_total(diff, limited) == (1, 3)
+    with pytest.raises(DuplicationError):
+        diff = sync_diff(dup, nothing, CopyOptions())
+        check_duplicates_and_total(diff, source_rows(diff).filter(F.lit(False)))
 
 
 # ---------------------------------------------------------------------------
@@ -399,6 +415,57 @@ def test_trace_contract_records_work_counts(spark, src_tree, tmp_path):
     } <= set(counts)
     assert counts["copy_plan.checksum_pairs"] == 5
     assert counts["engine.deletes"] == 1
+
+
+def test_sync_job_budget(spark, tmp_path):
+    """A -update -delete -pt copy of a tree with a level wider than
+    the lister's fanout_threshold runs at most 16 Spark jobs: one diff
+    of the two listings, materialized once, feeds the copies, the
+    deletes and the skip counter. Each distributed lister wave runs
+    one task round, at most defaultParallelism tasks."""
+    import uuid
+
+    src, dst = tmp_path / "src", tmp_path / "dst"
+    _wide_tree(src)
+    opts = CopyOptions(update=True, delete=True, preserve=frozenset("t"))
+    engine = DistCpPlusEngine(spark)
+    engine.copy([str(src)], str(dst), opts)
+    (src / "d000" / "f.txt").write_bytes(b"changed")
+    (src / "d001" / "f.txt").unlink()
+    (src / "d002" / "new.txt").write_bytes(b"n")
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs_of(run):
+        group = f"budget-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = run()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return out, tracker.getJobIdsForGroup(group)
+
+    out, jobs = jobs_of(lambda: engine.copy([str(src)], str(dst), opts))
+    assert (out["COPY"], out["DELETE"], out["RECORDSKIPPED"]) == (2, 1, 99)
+    assert len(jobs) <= 16, sorted(jobs)
+
+    _, wave_jobs = jobs_of(lambda: list_tree(spark, [str(src)]))
+    assert wave_jobs
+    for job in wave_jobs:
+        for stage in tracker.getJobInfo(job).stageIds:
+            tasks = tracker.getStageInfo(stage).numTasks
+            assert tasks <= sc.defaultParallelism
+
+
+def test_copy_releases_cached_result(spark, src_tree, tmp_path):
+    """execute() caches the result the counters read; copy()
+    unpersists it once they are read, so repeated copies leave no
+    cached data behind in the session."""
+    spark.catalog.clearCache()
+    DistCpPlusEngine(spark).copy([src_tree], str(tmp_path / "dst"))
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_mirror_delete_never_deletes_src_present(spark, src_tree, tmp_path):
