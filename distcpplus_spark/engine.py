@@ -267,9 +267,7 @@ class DistCpPlusEngine:
             if opts.update
             else apply_limits(listed, opts.file_limit, opts.size_limit)
         )
-        n_files, total_cost = check_duplicates_and_total(
-            diff, None if sources is listed else sources
-        )
+        n_files, total_cost = check_duplicates_and_total(diff, sources)
         copies = assign_cost_buckets(
             plan_updates(sources, dst_meta, opts),
             opts.bytes_per_task,

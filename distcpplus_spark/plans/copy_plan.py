@@ -356,7 +356,14 @@ def plan_updates(
     (DistCPPlus.java:685-688) — O(N) RPCs; this is one shuffle join.
     ``src_meta`` may also be source rows that already carry the
     diff's ``action`` (the engine's checkpointed diff); they are then
-    only filtered, and ``dst_meta`` is not read again.
+    only filtered, and ``dst_meta`` is not read again. That second
+    input exists for one reason: the engine keeps calling this
+    function, with this call shape, because perfbench's tracer hooks
+    the call to count the checksum tie pairs
+    (``copy_plan.checksum_pairs``, ``perfbench/spans.py``). Once the
+    benchmark reads that count elsewhere, the engine can filter its
+    diff with ``COPY_ACTIONS`` directly and this function goes back to
+    building :func:`sync_diff` only.
     """
     if "action" not in src_meta.columns:
         src_meta = sync_diff(src_meta, dst_meta, opts)
@@ -411,25 +418,25 @@ def check_duplicates_and_total(
     duplicate destinations still surface as ``DuplicationError``.
 
     ``sources`` are the diff's source rows after -filelimit /
-    -sizelimit: the file count and the cost then come from them, while
-    the duplicate check still sees the whole listing
-    (DistCPPlus.java:732-733). Without it both come from ``diff``.
+    -sizelimit (default: all of them, :func:`source_rows`). The file
+    count and the cost come from them, while the duplicate check still
+    sees the whole listing (DistCPPlus.java:732-733).
     """
+    if sources is None:
+        sources = source_rows(diff)
     dup = F.coalesce(F.col("_dup"), F.lit(False))
-    checked = [
+    rows = diff.select(
         dup.cast("long").alias("_d"),
         F.when(dup, F.col("relative_dst")).alias("_k"),
-    ]
-    counted = [
-        ((F.col("action") != "delete") & ~F.col("is_dir")).cast("long").alias("_f"),
-        F.when(F.col("action").isin(*COPY_ACTIONS), F.col("cost")).alias("_c"),
-    ]
-    if sources is None:
-        rows = diff.select(*checked, *counted)
-    else:
-        rows = diff.select(*checked).unionByName(
-            sources.select(*counted), allowMissingColumns=True
-        )
+    ).unionByName(
+        sources.select(
+            (~F.col("is_dir")).cast("long").alias("_f"),
+            F.when(F.col("action").isin(*COPY_ACTIONS), F.col("cost")).alias(
+                "_c"
+            ),
+        ),
+        allowMissingColumns=True,
+    )
     stats = rows.agg(
         F.sum("_d").alias("dups"),
         F.min("_k").alias("first"),

@@ -1,8 +1,8 @@
 """Incremental file sync: the streaming twin of the copy engine (M4).
 
 Watches a source directory and incrementally syncs it to dst using
-the SAME planning anti-join and copy executor as the batch engine —
-foreachBatch turns each micro-batch into a plan+execute run. The
+the SAME copy executor as the batch engine — foreachBatch turns each
+micro-batch into a plan+execute run. The
 reference has no streaming story; its closest analogue is re-running
 `-update` on a cron, which rescans the world every time. Here the
 file-source tracks processed files in the checkpoint, so each batch
@@ -86,6 +86,8 @@ def incremental_sync(
             )
         )
         delta = assign_cost_buckets(delta, opts.bytes_per_task, opts.max_tasks)
+        # execute() hands back its cached result; a long-running sync
+        # must not keep one cached relation per micro-batch
         engine.execute(
             CopyPlan(
                 copies=delta,
@@ -94,7 +96,7 @@ def incremental_sync(
                 dst_root=dst_root,
                 run_id=f"stream{batch_id}",
             )
-        )
+        ).unpersist()
 
     return (
         paths.writeStream.foreachBatch(sync_batch)

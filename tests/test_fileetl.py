@@ -245,6 +245,9 @@ def test_check_duplicates_and_total_null_destination(spark):
     assert check_duplicates_and_total(diff) == (2, 7)
     limited = source_rows(diff).filter(F.col("relative_dst") == "a")
     assert check_duplicates_and_total(diff, limited) == (1, 3)
+    assert check_duplicates_and_total(
+        diff, source_rows(diff).filter(F.lit(False))
+    ) == (0, 0)
     with pytest.raises(DuplicationError):
         diff = sync_diff(dup, nothing, CopyOptions())
         check_duplicates_and_total(diff, source_rows(diff).filter(F.lit(False)))
@@ -459,12 +462,22 @@ def test_sync_job_budget(spark, tmp_path):
             assert tasks <= sc.defaultParallelism
 
 
-def test_copy_releases_cached_result(spark, src_tree, tmp_path):
-    """execute() caches the result the counters read; copy()
-    unpersists it once they are read, so repeated copies leave no
-    cached data behind in the session."""
+@pytest.mark.parametrize("caller", ["copy", "incremental_sync"])
+def test_copy_releases_cached_result(spark, src_tree, tmp_path, caller):
+    """execute() caches the result the counters read; its callers,
+    copy() and the streaming sync's per-batch run, unpersist it, so
+    repeated copies and micro-batches leave no cached data behind in
+    the session."""
+    from distcpplus_spark.streaming.incremental_sync import incremental_sync
+
+    dst = str(tmp_path / "dst")
     spark.catalog.clearCache()
-    DistCpPlusEngine(spark).copy([src_tree], str(tmp_path / "dst"))
+    if caller == "copy":
+        DistCpPlusEngine(spark).copy([src_tree], dst)
+    else:
+        q = incremental_sync(spark, src_tree, dst, str(tmp_path / "ck"))
+        q.awaitTermination(120)
+        assert os.path.getsize(os.path.join(dst, "src", "five.txt")) == 11
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
