@@ -404,10 +404,12 @@ def execute_copy_chunked(
             except Exception as e:
                 yield (*key, False, 0, 0, f"{type(e).__name__}: {e}")
 
+    # one job transfers every chunk; the assembly reads its results as
+    # checkpointed JVM blocks, never re-running the transfer, and the
+    # session's cache is left as it was
     phase1 = spark.createDataFrame(
         chunks.rdd.mapPartitions(copy_chunks), chunk_result_schema
-    ).cache()
-    phase1.count()
+    ).localCheckpoint(eager=True)
 
     # per-file verdict: all chunks ok → assemble; any failed → FAIL row
     per_file = (

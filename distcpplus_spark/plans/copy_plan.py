@@ -228,7 +228,9 @@ def _sha256_of_paths():
     return sha
 
 
-COPY_ACTIONS = ("mkdir", "copy_new", "copy_checksum", "copy_changed")
+COPY_ACTIONS = (
+    "mkdir", "copy_new", "copy_checksum", "copy_changed", "copy_overwrite"
+)
 
 
 def sync_diff(
@@ -245,7 +247,8 @@ def sync_diff(
 
     Actions: ``mkdir`` (source dirs), ``copy_new`` (missing at the
     destination), ``copy_checksum`` / ``copy_changed`` (the change
-    predicate holds), ``skip`` (a source file the predicate keeps) and
+    predicate holds), ``copy_overwrite`` (present at the destination,
+    under -overwrite), ``skip`` (a source file the predicate keeps) and
     ``delete`` (destination-only: a mirror-delete candidate, whose
     source columns are NULL).
 
@@ -323,9 +326,10 @@ def sync_diff(
         .when(F.col("s.is_dir"), F.lit("mkdir"))
         .when(missing, F.lit("copy_new"))
         # checksum-detected: metadata ties, so the copier's cheap
-        # exec-time re-check must not veto the copy
+        # exec-time re-check must not veto the copy; nor -overwrite's,
+        # which copies whatever the destination holds
         .when(crc, F.lit("copy_checksum"))
-        .when(keep, F.lit("copy_changed"))
+        .when(keep, F.lit("copy_overwrite" if opts.overwrite else "copy_changed"))
         .otherwise(F.lit("skip"))
     )
     return joined.select(
@@ -348,9 +352,8 @@ def plan_updates(
     dst_meta: DataFrame,
     opts: CopyOptions,
 ) -> DataFrame:
-    """The copy set: the source rows :func:`sync_diff` tags ``mkdir``,
-    ``copy_new``, ``copy_checksum`` or ``copy_changed``, with the
-    source listing's columns plus ``action``.
+    """The copy set: the source rows :func:`sync_diff` tags with one of
+    ``COPY_ACTIONS``, with the source listing's columns plus ``action``.
 
     The reference does a namenode point-lookup per file
     (DistCPPlus.java:685-688) — O(N) RPCs; this is one shuffle join.
@@ -481,9 +484,14 @@ def assign_cost_buckets(
         return layout_tasks(plan.withColumn("bucket", F.lit(0)), 1)
     target = max(1, (total + n - 1) // n)
     cum = _distributed_prefix_sums(plan, [("cost", "_cum", "sum")])
+    # zero-cost rows after the last byte (dirs, empty files) start at
+    # the total, one bucket past the end: they join the last bucket
     bucketed = cum.withColumn(
         "bucket",
-        F.floor((F.col("_cum") - F.col("cost")) / F.lit(target)).cast("int"),
+        F.least(
+            F.floor((F.col("_cum") - F.col("cost")) / F.lit(target)),
+            F.lit(n - 1),
+        ).cast("int"),
     ).drop("_cum")
     return layout_tasks(bucketed, n)
 

@@ -159,15 +159,16 @@ def list_tree(
     tasks: one task round. Wave tasks are Python tasks, and a second
     round costs more than the scandirs it spreads out at small sizes.
     Measured on 4 vCPU (defaultParallelism 4), medians of 7 warm runs:
-    an 8-task Python RDD job takes 0.79 s, a 4-task one 0.34 s, an
-    8-task JVM job 0.11 s. In the copy benchmark (``perfbench``,
-    ``sync_update_delete``, two 128-directory waves, ``--trace 1``,
-    one run each) the two listings went from 16 tasks and 2.33 s to
-    8 tasks and 1.48 s, same rows. A wide, skewed tree lists faster
-    too: 200 top dirs with 2000/(i+1) subdirs each (11,662 dirs in
-    the second wave, one top-level slice holding ~3/4 of them,
-    36,559 rows) took a median 2.57 s in 27 tasks against 3.40 s in
-    51 with two rounds per wave (3 alternating pairs of 5 warm runs).
+    an 8-task Python RDD job takes 0.21 s, a 4-task one 0.14 s, an
+    8-task JVM job 0.15 s (0.63 s and 0.40 s for the Python jobs
+    before the zipimport fix in ``session``). In the copy benchmark
+    (``perfbench``, ``sync_update_delete``, two 128-directory waves,
+    ``--trace 1``, seed 1) the two listings take 8 tasks and 0.55 s.
+    A wide, skewed tree (200 top dirs with 2000/(i+1) subdirs each,
+    11,662 dirs in the second wave, one top-level slice holding ~3/4
+    of them, two files per subdir, 35,187 rows) took a median 1.16 s
+    in one round per wave against 1.30 s in two (3 series of 5 warm
+    runs each).
 
     The returned frame is a snapshot: every scan runs once, inside
     this call, and downstream consumers read the rows as JVM blocks

@@ -173,6 +173,17 @@ def test_overwrite_recopies_everything(spark, src_tree, tmp_path):
     assert stats2["COPY"] == 5
 
 
+def test_overwrite_recopies_an_identical_mirror(spark, src_tree, tmp_path):
+    """-overwrite copies even where the destination already has the
+    source's length and mtime second, the tie the copier's exec-time
+    re-check skips for a plain update."""
+    dst = str(tmp_path / "dst")
+    engine = DistCpPlusEngine(spark)
+    engine.copy([src_tree], dst, CopyOptions(preserve=frozenset("t")))
+    stats2 = engine.copy([src_tree], dst, CopyOptions(overwrite=True))
+    assert (stats2["COPY"], stats2["SKIP"]) == (5, 0)
+
+
 def test_failure_gate_and_ignore(spark, src_tree, tmp_path, monkeypatch):
     dst = str(tmp_path / "dst")
     engine = DistCpPlusEngine(spark)
@@ -284,6 +295,24 @@ def test_cost_buckets_balanced(spark, tmp_path):
     assert len(per_bucket) == 4
     # every bucket within 2x of target (SURVEY.md §5 property)
     assert all(r["b"] <= 2 * 5000 for r in per_bucket)
+
+
+def test_cost_buckets_in_range_and_match_tasks(spark, tmp_path):
+    """Zero-cost rows after the last byte (here the empty dir ``z``)
+    join the last bucket: every bucket id is in [0, n) and is the task
+    its row is laid out in."""
+    src = tmp_path / "src"
+    src.mkdir()
+    for name in ("a", "b"):
+        (src / name).write_bytes(b"x" * 1000)
+    (src / "z").mkdir()
+    planned = assign_cost_buckets(list_tree(spark, [str(src)]), bytes_per_task=1000)
+    rows = planned.select(
+        "path", "bucket", F.spark_partition_id().alias("task")
+    ).collect()
+    assert len(rows) == 4
+    assert all(0 <= r["bucket"] < 2 for r in rows), rows
+    assert all(r["bucket"] == r["task"] for r in rows), rows
 
 
 @pytest.mark.parametrize("n", [2, 4, 8])
@@ -462,10 +491,11 @@ def test_sync_job_budget(spark, tmp_path):
             assert tasks <= sc.defaultParallelism
 
 
-@pytest.mark.parametrize("caller", ["copy", "incremental_sync"])
+@pytest.mark.parametrize("caller", ["copy", "chunked", "incremental_sync"])
 def test_copy_releases_cached_result(spark, src_tree, tmp_path, caller):
     """execute() caches the result the counters read; its callers,
-    copy() and the streaming sync's per-batch run, unpersist it, so
+    copy() and the streaming sync's per-batch run, unpersist it, and
+    the chunked copier keeps its transfer results out of the cache, so
     repeated copies and micro-batches leave no cached data behind in
     the session."""
     from distcpplus_spark.streaming.incremental_sync import incremental_sync
@@ -474,6 +504,13 @@ def test_copy_releases_cached_result(spark, src_tree, tmp_path, caller):
     spark.catalog.clearCache()
     if caller == "copy":
         DistCpPlusEngine(spark).copy([src_tree], dst)
+    elif caller == "chunked":
+        # a/deep/three.txt (123,456 bytes) copies as three chunks
+        out = DistCpPlusEngine(spark).copy(
+            [src_tree], dst, CopyOptions(chunk_bytes=50_000)
+        )
+        assert (out["COPY"], out["FAIL"]) == (5, 0)
+        assert tree_files(dst) == tree_files(src_tree)
     else:
         q = incremental_sync(spark, src_tree, dst, str(tmp_path / "ck"))
         q.awaitTermination(120)
