@@ -14,7 +14,7 @@ One sync is planned once: plan() lists each tree once, diffs the two
 listings in one full-outer join (copy_plan.sync_diff), and one job
 materializes that diff with its checksum reads. Copies, mirror deletes
 and the RECORDSKIPPED count are filters of it. A -update -delete sync
-whose listings each take one distributed wave runs at most 16 Spark
+whose listings each take one distributed wave runs at most 13 Spark
 jobs (tests/test_fileetl.py::test_sync_job_budget). At the copy
 benchmark's size a job costs more than the work inside it, so read
 perfbench's ``--trace 1`` per-span jobs before adding one.
@@ -290,21 +290,20 @@ class DistCpPlusEngine:
 
     def execute(self, plan: CopyPlan, copy_fn=None) -> DataFrame:
         """Run the plan: copies (distributed), then deletes, then the
-        failure gate. Returns the result DataFrame (O15 counters are
-        aggregations over it), cached: the caller owns it and
-        unpersists it when done. A failing run unpersists it before
-        raising.
+        failure gate. Returns the result DataFrame, one row per plan
+        row, lazily local-checkpointed. The ``counters`` job below is
+        the one action that runs the copy: it fills the checkpoint and
+        takes the O15 counters, as the reference's map tasks count
+        during the copy job (DistCPPlus.java:108,203-229). The dir
+        finalize, the -log sink and the caller then read the
+        checkpointed rows; a lost block fails their job instead of
+        re-running the copy.
 
-        Live metrics ride the materializing action via ``observe()``
-        (no second job); stage timings mirror the reference's
-        SETUP/RUN/CLEANUP_TIME (DistCPPlus.java:128-131, 203-229) in
-        ``self.last_metrics``."""
+        ``self.last_metrics`` holds the counters and stage timings that
+        mirror the reference's SETUP/RUN/CLEANUP_TIME."""
         import time as _time
 
-        from pyspark.sql import Observation
-
         os.makedirs(plan.dst_root, exist_ok=True)
-        obs = Observation(f"copy_{plan.run_id}")
         t_run = _time.perf_counter()
         try:
             if plan.opts.chunk_bytes:
@@ -319,17 +318,8 @@ class DistCpPlusEngine:
                     preserve=plan.opts.preserve,
                     copy_fn=copy_fn,
                 )
-            result = result.observe(
-                obs,
-                F.count("*").alias("rows"),
-                F.sum(F.when(F.col("status") == "FAIL", 1).otherwise(0)).alias(
-                    "fails"
-                ),
-                F.sum("bytes_copied").alias("bytes_copied"),
-            )
-            # materialize before the gate (single action; metrics ride it)
-            result = result.cache()
-            result.count()
+            result = result.localCheckpoint(eager=False)
+            stats = counters(result)
             run_s = _time.perf_counter() - t_run
         finally:
             t_clean = _time.perf_counter()
@@ -338,10 +328,7 @@ class DistCpPlusEngine:
 
         # O16 finalize: dir owner/group/permission post-pass
         # (DistCPPlus.java:264-297) — after the copy action, so child
-        # writes never race a restrictive parent-dir mode. Fed from the
-        # CACHED result's MKDIR rows, not plan.copies, which would
-        # re-execute the whole plan DAG (including -update checksum
-        # hashing) just to enumerate directories.
+        # writes never race a restrictive parent-dir mode.
         finalize_dir_attrs(result, plan.dst_root, plan.opts.preserve)
 
         # -log sink (O20): SKIP/FAIL records as JSON, written BEFORE
@@ -358,19 +345,22 @@ class DistCpPlusEngine:
         if plan.deletes is not None:
             deletes, delete_fails = self._execute_deletes(plan)
 
-        live = obs.get
-        fails = live["fails"] or 0
+        fails = stats["FAIL"]
         self.last_metrics = {
-            "rows": live["rows"],
+            "rows": sum(
+                n
+                for status, n in stats.items()
+                if status not in ("BYTESCOPIED", "BYTESEXPECTED")
+            ),
             "fails": fails,
-            "bytes_copied": live["bytes_copied"] or 0,
+            "bytes_copied": stats["BYTESCOPIED"],
             "deletes": deletes,
             "delete_fails": delete_fails,
+            "counters": stats,
             "run_s": round(run_s, 3),
             "cleanup_s": round(cleanup_s, 3),
         }
         if (fails or delete_fails) and not plan.opts.ignore_failures:
-            result.unpersist()
             raise CopyFailedError(
                 f"{fails} file(s) failed to copy and {delete_fails} mirror "
                 f"delete(s) failed (use ignore_failures to tolerate)"
@@ -385,12 +375,12 @@ class DistCpPlusEngine:
         copy_fn=None,
         **plan_kwargs,
     ) -> dict[str, int]:
-        """plan + execute + counters in one call (the common path).
+        """plan + execute in one call (the common path): the copy's
+        counters plus DELETE, DELETE_FAIL and RECORDSKIPPED.
         ``copy_fn`` swaps the copy operator (the -mapper surface)."""
         plan = self.plan(src_roots, dst_root, opts, **plan_kwargs)
-        result = self.execute(plan, copy_fn=copy_fn)
-        out = counters(result)
-        result.unpersist()
+        self.execute(plan, copy_fn=copy_fn)
+        out = dict(self.last_metrics["counters"])
         out["DELETE"] = self.last_metrics["deletes"]
         out["DELETE_FAIL"] = self.last_metrics["delete_fails"]
         if plan.source_files is not None:

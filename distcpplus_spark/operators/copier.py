@@ -15,9 +15,12 @@ job-level failure gate is relational (count FAIL rows).
 
 Mirrors the protocol of DefaultCopyFilesMapper.java:105-206 and
 DistCpUtils.rename (DistCpUtils.java:44-57), re-expressed for a
-POSIX filesystem. Speculative execution must stay off for copy jobs
-(two writers, one dst — DistCPPlus.java:459-461); Spark's default is
-off, and the tmp-file name includes the task attempt to be safe.
+POSIX filesystem. The tmp path is the same for every attempt of a
+task, as in the reference, so speculative execution must stay off for
+copy jobs (two writers, one dst — DistCPPlus.java:459-461; Spark's
+default is off). What guards the publish is the length check before
+and after the rename and the rename's atomicity: a reader sees the
+old file or the whole new one, never a partial copy.
 """
 
 from __future__ import annotations
@@ -119,7 +122,7 @@ def _apply_attrs(path: str, src_stat: os.stat_result, preserve: frozenset[str]) 
 
 
 def finalize_dir_attrs(
-    plan: DataFrame, dst_root: str, preserve: frozenset[str]
+    result: DataFrame, dst_root: str, preserve: frozenset[str]
 ) -> None:
     """O16 finalize pass (DistCPPlus.finalize, DistCPPlus.java:264-297):
     after all copies land, apply owner/group/permission to every copied
@@ -129,20 +132,14 @@ def finalize_dir_attrs(
     boundary IS the ordering barrier. Timestamps are deliberately not
     set on dirs, matching the reference (HDFS-2436 exclusion).
 
-    Distributed: foreachPartition over the plan's dir rows — the dir
+    Distributed: foreachPartition over the result's MKDIR rows — the dir
     manifest (_distcp_dst_dirs analogue) never collects to the driver.
     """
     if not (preserve & {"p", "u", "g"}):
         return
-    if "status" in plan.columns:
-        # result-DataFrame input: MKDIR rows are exactly the copied
-        # dirs, and the result is already materialized/cached — no
-        # re-execution of the copy-plan DAG just to enumerate dirs
-        dirs = plan.filter(F.col("status") == "MKDIR").select(
-            "path", "relative_dst"
-        )
-    else:
-        dirs = plan.filter(F.col("is_dir")).select("path", "relative_dst")
+    dirs = result.filter(F.col("status") == "MKDIR").select(
+        "path", "relative_dst"
+    )
 
     def set_attrs(rows: Iterator) -> None:
         import stat as statmod
@@ -267,8 +264,10 @@ def execute_copy(
 
 
 def counters(result: DataFrame) -> dict[str, int]:
-    """Counter aggregation (O15): {COPY, SKIP, FAIL, MKDIR} counts +
-    byte totals, one pass."""
+    """Counter aggregation (O15): a count per status (COPY, SKIP, FAIL,
+    MKDIR and any a custom copy_fn emits) + byte totals, one pass. On
+    the engine's lazily checkpointed result this is the job that runs
+    the copy."""
     rows = (
         result.groupBy("status")
         .agg(

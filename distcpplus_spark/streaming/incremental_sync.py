@@ -86,8 +86,6 @@ def incremental_sync(
             )
         )
         delta = assign_cost_buckets(delta, opts.bytes_per_task, opts.max_tasks)
-        # execute() hands back its cached result; a long-running sync
-        # must not keep one cached relation per micro-batch
         engine.execute(
             CopyPlan(
                 copies=delta,
@@ -96,7 +94,7 @@ def incremental_sync(
                 dst_root=dst_root,
                 run_id=f"stream{batch_id}",
             )
-        ).unpersist()
+        )
 
     return (
         paths.writeStream.foreachBatch(sync_batch)

@@ -451,10 +451,11 @@ def test_trace_contract_records_work_counts(spark, src_tree, tmp_path):
 
 def test_sync_job_budget(spark, tmp_path):
     """A -update -delete -pt copy of a tree with a level wider than
-    the lister's fanout_threshold runs at most 16 Spark jobs: one diff
+    the lister's fanout_threshold runs at most 13 Spark jobs: one diff
     of the two listings, materialized once, feeds the copies, the
-    deletes and the skip counter. Each distributed lister wave runs
-    one task round, at most defaultParallelism tasks."""
+    deletes and the skip counter, and one counters job runs the copy.
+    Each distributed lister wave runs one task round, at most
+    defaultParallelism tasks."""
     import uuid
 
     src, dst = tmp_path / "src", tmp_path / "dst"
@@ -481,7 +482,7 @@ def test_sync_job_budget(spark, tmp_path):
 
     out, jobs = jobs_of(lambda: engine.copy([str(src)], str(dst), opts))
     assert (out["COPY"], out["DELETE"], out["RECORDSKIPPED"]) == (2, 1, 99)
-    assert len(jobs) <= 16, sorted(jobs)
+    assert len(jobs) <= 13, sorted(jobs)
 
     _, wave_jobs = jobs_of(lambda: list_tree(spark, [str(src)]))
     assert wave_jobs
@@ -493,11 +494,11 @@ def test_sync_job_budget(spark, tmp_path):
 
 @pytest.mark.parametrize("caller", ["copy", "chunked", "incremental_sync"])
 def test_copy_releases_cached_result(spark, src_tree, tmp_path, caller):
-    """execute() caches the result the counters read; its callers,
-    copy() and the streaming sync's per-batch run, unpersist it, and
-    the chunked copier keeps its transfer results out of the cache, so
-    repeated copies and micro-batches leave no cached data behind in
-    the session."""
+    """No copy path caches: execute() checkpoints its result, the
+    chunked copier checkpoints its transfer results, and neither copy()
+    nor the streaming sync's per-batch run caches anything, so repeated
+    copies and micro-batches leave no cached data behind in the
+    session."""
     from distcpplus_spark.streaming.incremental_sync import incremental_sync
 
     dst = str(tmp_path / "dst")
@@ -516,6 +517,37 @@ def test_copy_releases_cached_result(spark, src_tree, tmp_path, caller):
         q.awaitTermination(120)
         assert os.path.getsize(os.path.join(dst, "src", "five.txt")) == 11
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+@pytest.mark.parametrize("flags", ["plain", "ugp_log"])
+def test_each_plan_row_copied_once(spark, src_tree, tmp_path, flags):
+    """execute() runs the copy function once per plan row: the dir
+    finalize, the -log sink and any number of later reads of its result
+    (here two counters passes) read the copied rows, never re-running
+    the side-effecting copy."""
+    from distcpplus_spark.operators.copier import counters, default_copy_fn
+
+    calls = tmp_path / "calls.txt"
+
+    def recording_fn(rows, dst_root, tmp_root, preserve, calls=str(calls)):
+        for row in rows:
+            with open(calls, "a") as f:
+                f.write(row["relative_dst"] + "\n")
+            yield from default_copy_fn([row], dst_root, tmp_root, preserve)
+
+    opts = CopyOptions()
+    if flags == "ugp_log":
+        opts = CopyOptions(
+            preserve=frozenset("ugp"), log_dir=str(tmp_path / "log")
+        )
+    engine = DistCpPlusEngine(spark)
+    plan = engine.plan([src_tree], str(tmp_path / "dst"), opts)
+    planned = sorted(r["relative_dst"] for r in plan.copies.collect())
+    result = engine.execute(plan, copy_fn=recording_fn)
+    first, second = counters(result), counters(result)
+    assert first == second
+    assert (first["COPY"], first["MKDIR"]) == (5, 4)
+    assert sorted(calls.read_text().splitlines()) == planned
 
 
 def test_mirror_delete_never_deletes_src_present(spark, src_tree, tmp_path):
@@ -708,8 +740,9 @@ def test_recordskipped_counter_parity(spark, src_tree, tmp_path):
 
 
 def test_observed_live_metrics(spark, src_tree, tmp_path):
-    """O15 via observe(): metrics ride the materializing action — no
-    second aggregation job — and stage timings are recorded."""
+    """O15: the counters job that runs the copy also fills
+    last_metrics — no second aggregation job — and stage timings are
+    recorded."""
     engine = DistCpPlusEngine(spark)
     engine.copy([src_tree], str(tmp_path / "dst"))
     m = engine.last_metrics
