@@ -15,9 +15,9 @@ listings in one full-outer join (copy_plan.sync_diff), and one job
 materializes that diff with its checksum reads. Copies, mirror deletes
 and the RECORDSKIPPED count are filters of it. A -update -delete sync
 whose listings each take one distributed wave runs at most 13 Spark
-jobs (tests/test_fileetl.py::test_sync_job_budget). At the copy
-benchmark's size a job costs more than the work inside it, so read
-perfbench's ``--trace 1`` per-span jobs before adding one.
+jobs, 14 over several cost buckets (tests/test_fileetl.py::
+test_sync_job_budget). At the copy benchmark's size a job costs more
+than its work: read perfbench's ``--trace 1`` jobs before adding one.
 """
 
 from __future__ import annotations
@@ -267,12 +267,12 @@ class DistCpPlusEngine:
             if opts.update
             else apply_limits(listed, opts.file_limit, opts.size_limit)
         )
-        n_files, total_cost = check_duplicates_and_total(diff, sources)
+        n_files, costs = check_duplicates_and_total(diff, sources)
         copies = assign_cost_buckets(
             plan_updates(sources, dst_meta, opts),
             opts.bytes_per_task,
             opts.max_tasks,
-            total=total_cost,
+            costs=costs,
         )
 
         deletes = None

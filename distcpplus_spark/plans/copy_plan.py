@@ -8,7 +8,7 @@ mirror deletes (:func:`plan_mirror_delete`), the source-file count and
 ``sources/lister.relist_diff`` are filters or projections of it. The
 engine lazily checkpoints the diff, and
 :func:`check_duplicates_and_total` is the one job that materializes
-it, checksum reads included.
+it, checksum reads and per-partition copy costs included.
 
 All plan stages are lazy DataFrame transformations — the plan IS a
 Catalyst logical plan, inspectable via .explain() (the Spark-native
@@ -378,13 +378,13 @@ def plan_updates(
 def _distributed_prefix_sums(
     df: DataFrame, specs: list[tuple[str, str, str]]
 ) -> DataFrame:
-    """Running aggregates in global ``path`` order, computed
-    distributed: range-partition the manifest by path (so physical
-    partition ids are monotone in path order), then run the two-phase
-    parallel prefix sum from operators/scale.py with
-    ``spark_partition_id()`` as the carry bucket. Replaces an
-    unpartitioned ``Window.orderBy("path")``, which would funnel every
-    row of a 100 M-row manifest through ONE task. ``specs`` are
+    """Running aggregates in global ``path`` order, the traversal
+    order of :func:`apply_limits`' -filelimit / -sizelimit, computed
+    distributed: range-partition the listing by path (so partition ids
+    are monotone in path order), then run the two-phase prefix sum from
+    operators/scale.py with ``spark_partition_id()`` as the carry
+    bucket. Replaces an unpartitioned ``Window.orderBy("path")``, which
+    would funnel a 100 M-row listing through ONE task. ``specs`` are
     ``(value_col, out_col, 'sum'|'max')``; N of them cost what one
     does (one local window, one totals job, one broadcast join).
 
@@ -406,13 +406,13 @@ def _distributed_prefix_sums(
 
 def check_duplicates_and_total(
     diff: DataFrame, sources: DataFrame | None = None
-) -> tuple[int, int]:
+) -> tuple[int, dict[int, int]]:
     """The one job that materializes the lazily checkpointed
     :func:`sync_diff`: the duplicate-destination check
-    (DistCpUtils.java:84-110), the number of source files and the
-    plan's total copy cost, as one aggregate. Returns ``(source files,
-    total cost)``; the total feeds :func:`assign_cost_buckets`, the
-    file count the RECORDSKIPPED counter.
+    (DistCpUtils.java:84-110), the number of source files and each
+    partition's copy cost, as one rolled-up aggregate. Returns ``(source
+    files, {partition id: cost})``; the costs feed
+    :func:`assign_cost_buckets`, the file count the RECORDSKIPPED counter.
 
     Any source file flagged ``_dup`` raises :class:`DuplicationError`,
     a NULL destination included. The check runs in the same job that
@@ -422,7 +422,7 @@ def check_duplicates_and_total(
 
     ``sources`` are the diff's source rows after -filelimit /
     -sizelimit (default: all of them, :func:`source_rows`). The file
-    count and the cost come from them, while the duplicate check still
+    count and the costs come from them, while the duplicate check still
     sees the whole listing (DistCPPlus.java:732-733).
     """
     if sources is None:
@@ -433,6 +433,7 @@ def check_duplicates_and_total(
         F.when(dup, F.col("relative_dst")).alias("_k"),
     ).unionByName(
         sources.select(
+            F.spark_partition_id().alias("_p"),
             (~F.col("is_dir")).cast("long").alias("_f"),
             F.when(F.col("action").isin(*COPY_ACTIONS), F.col("cost")).alias(
                 "_c"
@@ -440,24 +441,27 @@ def check_duplicates_and_total(
         ),
         allowMissingColumns=True,
     )
-    stats = rows.agg(
+    groups = rows.rollup("_p").agg(
+        F.grouping("_p").alias("all"),
         F.sum("_d").alias("dups"),
         F.min("_k").alias("first"),
         F.max("_k").alias("last"),
         F.sum("_f").alias("files"),
-        F.sum("_c").alias("total"),
-    ).collect()[0]
+        F.sum("_c").alias("cost"),
+    ).collect()
+    stats = next(g for g in groups if g["all"])
     if stats["dups"]:
         names = ", ".join(sorted({str(stats["first"]), str(stats["last"])}))
         raise DuplicationError(
             f"{stats['dups']} source files share a destination: {names}"
         )
-    return int(stats["files"] or 0), int(stats["total"] or 0)
+    costs = {g["_p"]: int(g["cost"] or 0) for g in groups if g["_p"] is not None}
+    return int(stats["files"] or 0), costs
 
 
 def assign_cost_buckets(
     plan: DataFrame, bytes_per_task: int, max_tasks: int | None = None,
-    total: int | None = None,
+    costs: dict[int, int] | None = None,
 ) -> DataFrame:
     """Size-balanced partitioning (CopyInputFormat.java:33-79 +
     setMapCount, DistCPPlus.java:442-451): bucket rows by cumulative
@@ -465,34 +469,40 @@ def assign_cost_buckets(
     file count. repartitionByRange alone would balance rows and a
     partition that drew the 10 GB files would straggle.
 
-    The cumulative cost is a distributed two-phase prefix sum
-    (_distributed_prefix_sums), not a global ordered window — at a
-    100 M-row manifest the window would serialize on one task.
+    Rows are placed in the plan's own order, as the reference's
+    getSplits cuts its manifest in written order: by partition, then by
+    path in a window per partition. A row starts at the cost of the
+    partitions before its own plus the cost before it there; bucket b
+    holds the rows that start in [b·target, (b+1)·target). ``costs``
+    ({partition id: cost}, :func:`check_duplicates_and_total`) saves a job.
 
     Returns the plan with a ``bucket`` column, laid out by
     :func:`layout_tasks`: bucket b is task b. n = clamp(total /
-    bytes_per_task, 1, max_tasks). ``total`` skips the sum job when
-    the caller already computed it (check_duplicates_and_total).
+    bytes_per_task, 1, max_tasks).
     """
-    if total is None:
-        total = plan.agg(F.sum("cost")).collect()[0][0] or 0
+    if costs is None:
+        costs = dict(plan.groupBy(F.spark_partition_id()).agg(F.sum("cost")).collect())
+    total = sum(costs.values())
     n = max(1, int(total // bytes_per_task) + (1 if total % bytes_per_task else 0))
     if max_tasks:
         n = min(n, max_tasks)
     if n == 1:
-        # one task holds the whole plan: no prefix sum to place it
+        # one task holds the whole plan: no running cost to place it
         return layout_tasks(plan.withColumn("bucket", F.lit(0)), 1)
     target = max(1, (total + n - 1) // n)
-    cum = _distributed_prefix_sums(plan, [("cost", "_cum", "sum")])
+    offsets, offset = [], 0
+    for p in sorted(costs):
+        offsets += [F.lit(p), F.lit(offset)]
+        offset += costs[p]
+    w = Window.partitionBy("_p").orderBy("path")
+    before = F.sum("cost").over(w.rowsBetween(Window.unboundedPreceding, 0))
+    start = F.create_map(*offsets)[F.col("_p")] + before - F.col("cost")
     # zero-cost rows after the last byte (dirs, empty files) start at
     # the total, one bucket past the end: they join the last bucket
-    bucketed = cum.withColumn(
+    bucketed = plan.withColumn("_p", F.spark_partition_id()).withColumn(
         "bucket",
-        F.least(
-            F.floor((F.col("_cum") - F.col("cost")) / F.lit(target)),
-            F.lit(n - 1),
-        ).cast("int"),
-    ).drop("_cum")
+        F.least(F.floor(start / F.lit(target)), F.lit(n - 1)).cast("int"),
+    ).drop("_p")
     return layout_tasks(bucketed, n)
 
 

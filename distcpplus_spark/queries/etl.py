@@ -231,9 +231,9 @@ def q43_etl_cost_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the cumulative cost is the two-phase distributed prefix sum
     (range-partition by the traversal key, per-partition window,
-    per-partition totals as broadcast carry-ins) — the same machinery
-    as the real planner (plans/copy_plan.py::assign_cost_buckets), no
-    partition-less window."""
+    per-partition totals as broadcast carry-ins), no partition-less
+    window. The oracle pins global path order; the copy planner
+    (assign_cost_buckets) needs none and cuts buckets in partition order."""
     from distcpplus_spark.operators.scale import partitioned_running_agg
 
     n_parts = max(2, spark.sparkContext.defaultParallelism)

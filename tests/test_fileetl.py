@@ -233,8 +233,9 @@ def test_duplicate_destination_raises(spark, tmp_path):
 
 def test_check_duplicates_and_total_null_destination(spark):
     """Two source files with a NULL relative_dst are a duplicate; with
-    no duplicate the job returns the source-file count and the copy
-    cost, both from the limited sources when those are given."""
+    no duplicate the job returns the source-file count and each
+    partition's copy cost, both from the limited sources when those
+    are given."""
     schema = (
         "path STRING, relative_dst STRING, length BIGINT, is_dir BOOLEAN, "
         "mtime TIMESTAMP, cost BIGINT"
@@ -253,12 +254,15 @@ def test_check_duplicates_and_total_null_destination(spark):
         schema,
     )
     diff = sync_diff(ok, nothing, CopyOptions())
-    assert check_duplicates_and_total(diff) == (2, 7)
+
+    def files_and_cost(sources=None):
+        files, costs = check_duplicates_and_total(diff, sources)
+        return files, sum(costs.values())
+
+    assert files_and_cost() == (2, 7)
     limited = source_rows(diff).filter(F.col("relative_dst") == "a")
-    assert check_duplicates_and_total(diff, limited) == (1, 3)
-    assert check_duplicates_and_total(
-        diff, source_rows(diff).filter(F.lit(False))
-    ) == (0, 0)
+    assert files_and_cost(limited) == (1, 3)
+    assert files_and_cost(source_rows(diff).filter(F.lit(False))) == (0, 0)
     with pytest.raises(DuplicationError):
         diff = sync_diff(dup, nothing, CopyOptions())
         check_duplicates_and_total(diff, source_rows(diff).filter(F.lit(False)))
@@ -315,17 +319,29 @@ def test_cost_buckets_in_range_and_match_tasks(spark, tmp_path):
     assert all(r["bucket"] == r["task"] for r in rows), rows
 
 
-@pytest.mark.parametrize("n", [2, 4, 8])
-def test_cost_buckets_one_task_each(spark, tmp_path, n):
+@pytest.mark.parametrize(
+    "n, file_limit",
+    [
+        pytest.param(2, None, id="2"),
+        pytest.param(4, None, id="4"),
+        pytest.param(8, None, id="8"),
+        pytest.param(4, 4, id="filelimit"),
+    ],
+)
+def test_cost_buckets_one_task_each(spark, tmp_path, n, file_limit):
     """n equal files with one file's bytes per task: bucket b runs as
     task b, so each file gets a task of its own (hash partitioning the
     bucket ids put several in one task and left others empty). The
-    same holds for a plan saved and read back with load_plan."""
+    same holds for a plan saved and read back with load_plan, and for
+    a -filelimit copy, whose partition costs come through
+    apply_limits' range-partitioned frame: one file over the limit is
+    never copied, and each admitted file is copied exactly once."""
     from distcpplus_spark.operators.copier import counters, default_copy_fn
 
     src = tmp_path / "src"
     src.mkdir()
-    for i in range(n):
+    listed = n + (file_limit is not None)
+    for i in range(listed):
         (src / f"f{i}.bin").write_bytes(b"x" * (1 << 20))
     engine = DistCpPlusEngine(spark)
 
@@ -340,21 +356,29 @@ def test_cost_buckets_one_task_each(spark, tmp_path, n):
             for row in rows:
                 if not row["is_dir"]:
                     name = os.path.basename(row["path"])
-                    (pid_dir / name).write_text(str(pid))
+                    with open(pid_dir / name, "a") as f:
+                        f.write(f"{pid}\n")
                 yield from default_copy_fn([row], dst_root, tmp_root, preserve)
 
         plan = engine.plan(
             [str(src)],
             str(tmp_path / f"dst_{round_trip}"),
-            CopyOptions(bytes_per_task=1 << 20),
+            CopyOptions(bytes_per_task=1 << 20, file_limit=file_limit),
         )
         if round_trip:
             plan.save(str(tmp_path / "plan"))
             plan = engine.load_plan(str(tmp_path / "plan"))
+        tasks = plan.copies.select(
+            "bucket", F.spark_partition_id().alias("task")
+        ).collect()
+        assert all(0 <= r["bucket"] < n for r in tasks), tasks
+        assert all(r["bucket"] == r["task"] for r in tasks), tasks
         result = engine.execute(plan, copy_fn=record_partition)
         assert counters(result)["COPY"] == n
-        pids = sorted(int((pid_dir / f"f{i}.bin").read_text()) for i in range(n))
-        assert pids == list(range(n)), round_trip
+        assert sorted(os.listdir(pid_dir)) == [f"f{i}.bin" for i in range(n)]
+        runs = [(pid_dir / f"f{i}.bin").read_text().split() for i in range(n)]
+        assert all(len(r) == 1 for r in runs), runs
+        assert sorted(int(r[0]) for r in runs) == list(range(n)), round_trip
 
 
 # ---------------------------------------------------------------------------
@@ -449,20 +473,31 @@ def test_trace_contract_records_work_counts(spark, src_tree, tmp_path):
     assert counts["engine.deletes"] == 1
 
 
-def test_sync_job_budget(spark, tmp_path):
+@pytest.mark.parametrize(
+    "extra, budget",
+    [
+        pytest.param({}, 13, id="n1"),
+        pytest.param({"bytes_per_task": 2}, 14, id="multi"),
+        pytest.param({"chunk_bytes": 4, "bytes_per_task": 2}, 29, id="chunked"),
+    ],
+)
+def test_sync_job_budget(spark, tmp_path, extra, budget):
     """A -update -delete -pt copy of a tree with a level wider than
-    the lister's fanout_threshold runs at most 13 Spark jobs: one diff
-    of the two listings, materialized once, feeds the copies, the
-    deletes and the skip counter, and one counters job runs the copy.
-    Each distributed lister wave runs one task round, at most
+    the lister's fanout_threshold runs within a fixed Spark job budget:
+    one diff of the two listings, materialized once, feeds the copies,
+    the deletes and the skip counter, and one counters job runs the
+    copy. ``multi`` takes the path every large sync takes: its 8
+    copied bytes span n = 4 cost buckets. ``chunked`` adds the chunked
+    copier. Each budget is the measured count plus one. Each
+    distributed lister wave runs one task round, at most
     defaultParallelism tasks."""
     import uuid
 
     src, dst = tmp_path / "src", tmp_path / "dst"
     _wide_tree(src)
-    opts = CopyOptions(update=True, delete=True, preserve=frozenset("t"))
+    flags = dict(update=True, delete=True, preserve=frozenset("t"))
     engine = DistCpPlusEngine(spark)
-    engine.copy([str(src)], str(dst), opts)
+    engine.copy([str(src)], str(dst), CopyOptions(**flags))
     (src / "d000" / "f.txt").write_bytes(b"changed")
     (src / "d001" / "f.txt").unlink()
     (src / "d002" / "new.txt").write_bytes(b"n")
@@ -480,9 +515,11 @@ def test_sync_job_budget(spark, tmp_path):
             sc.setLocalProperty("spark.job.description", None)
         return out, tracker.getJobIdsForGroup(group)
 
+    opts = CopyOptions(**flags, **extra)
     out, jobs = jobs_of(lambda: engine.copy([str(src)], str(dst), opts))
     assert (out["COPY"], out["DELETE"], out["RECORDSKIPPED"]) == (2, 1, 99)
-    assert len(jobs) <= 13, sorted(jobs)
+    assert tree_files(dst) == tree_files(src)
+    assert len(jobs) <= budget, sorted(jobs)
 
     _, wave_jobs = jobs_of(lambda: list_tree(spark, [str(src)]))
     assert wave_jobs
