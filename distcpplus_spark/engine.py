@@ -10,14 +10,16 @@ The reference's three entry points (SURVEY.md §3) map to:
                       "serialized physical plan" is Catalyst's, not a
                       stringly JobConf
 
-One sync is planned once: plan() lists each tree once, diffs the two
-listings in one full-outer join (copy_plan.sync_diff), and one job
-materializes that diff with its checksum reads. Copies, mirror deletes
-and the RECORDSKIPPED count are filters of it. A -update -delete sync
-whose listings each take one distributed wave runs at most 13 Spark
-jobs, 14 over several cost buckets (tests/test_fileetl.py::
-test_sync_job_budget). At the copy benchmark's size a job costs more
-than its work: read perfbench's ``--trace 1`` jobs before adding one.
+One sync is planned once: plan() walks the source tree and its
+destination in lockstep (``list_tree(..., mirror=dst_root)``), pairing
+entries by name and comparing the bytes of tie pairs in the listing
+tasks; ``copy_plan.classify`` tags each pair, and one job reads the
+diff. Copies, mirror deletes and the RECORDSKIPPED count are filters of
+it. A -update -delete sync whose walk takes one distributed wave runs
+at most 8 Spark jobs, 9 over several cost buckets
+(tests/test_fileetl.py::test_sync_job_budget). At the copy benchmark's
+size a job costs more than its work: read perfbench's ``--trace 1``
+jobs before adding one.
 """
 
 from __future__ import annotations
@@ -42,11 +44,12 @@ from distcpplus_spark.plans.copy_plan import (
     apply_limits,
     assign_cost_buckets,
     check_duplicates_and_total,
+    classify,
+    destination_rows,
     layout_tasks,
     plan_mirror_delete,
     plan_updates,
     source_rows,
-    sync_diff,
 )
 from distcpplus_spark.sources.lister import list_tree
 
@@ -163,7 +166,7 @@ class DistCpPlusEngine:
             # 306-346): ONE listing of the rg dir; direct children
             # whose NAME full-matches become the sources — matched
             # dirs wholesale, files individually. Everything below
-            # (special-root rule, limits, update join) then treats
+            # (special-root rule, limits, update walk) then treats
             # them as ordinary roots, exactly like the reference's
             # args.srcs. No matches → usage error ("Missing src",
             # Arguments.java:243-246). One scandir at plan time; the
@@ -196,64 +199,40 @@ class DistCpPlusEngine:
         # CONTENTS land directly under dst (dst/..., not dst/<base>/...).
         # File sources always key off their parent (rel = basename).
         # -regexPath mode keys everything off the regex root
-        # (regexRoot, DistCPPlus.java:508, 632-633).
+        # (regexRoot, DistCPPlus.java:508, 632-633), and the walk
+        # prunes the components that do not match.
         special = (
             opts.update
             or opts.overwrite
             or (len(src_roots) == 1 and not dst_exists)
         )
+        roots = src_roots
         if depth_regexes:
-            src_meta = self.list(src_roots, prefix_base=False)
-        elif special:
-            dir_roots = [r for r in src_roots if os.path.isdir(r)]
-            file_roots = [r for r in src_roots if not os.path.isdir(r)]
-            parts = [
-                self.list(dir_roots, prefix_base=False) if dir_roots else None,
-                self.list(file_roots) if file_roots else None,
-            ]
-            parts = [p for p in parts if p is not None]
-            src_meta = (
-                parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-            )
-        else:
-            src_meta = self.list(src_roots)
-        if depth_regexes:
-            from distcpplus_spark.sources.regex_select import (
-                filter_depth_regexes,
-            )
+            if not os.path.isdir(src_roots[0]):
+                raise ValueError(
+                    f"-regexPath root is not a directory: {src_roots[0]}"
+                )
+            roots, special = src_roots[:1], True
 
-            src_meta = filter_depth_regexes(
-                src_meta, src_roots[0], depth_regexes
-            )
-
-        dst_is_dir = os.path.isdir(dst_root)
-        if dst_is_dir:
-            # dst listing is relative to the dst root itself (no
-            # basename prefix) so relative_dst keys line up with src's;
-            # an unreadable dst subtree (a root-owned lost+found) must
-            # not fail the copy, see list_tree
-            dst_meta = list_tree(
+        # The diff: the source and destination walked in lockstep, each
+        # pair tagged with its action (tie pairs' bytes compared in the
+        # listing tasks). Copies, deletes and the source-file count are
+        # filters of it; the pairs are checkpointed JVM rows, so every
+        # consumer reads them without re-listing. An unreadable
+        # destination subtree (a root-owned lost+found) does not fail
+        # the copy, see list_tree.
+        diff = classify(
+            list_tree(
                 self.spark,
-                [dst_root],
-                include_roots=False,
-                prefix_base=False,
-                skip_unreadable=True,
-            )
-        else:
-            # one-slice empty relation: createDataFrame([]) still
-            # parallelizes into defaultParallelism Python-evaluated
-            # slices, each a worker round trip per downstream join
-            dst_meta = self.spark.createDataFrame(
-                self.spark.sparkContext.parallelize([], numSlices=1),
-                src_meta.schema,
-            )
-
-        # The one planning join: copies, deletes and the source-file
-        # count are filters of this diff. Lazily checkpointed, so the
-        # checksum reads run once, in the dup/total job below that
-        # materializes it (under AQE the checkpoint call itself runs
-        # the join's two map stages).
-        diff = sync_diff(src_meta, dst_meta, opts).localCheckpoint(eager=False)
+                roots,
+                include_roots=not depth_regexes,
+                prefix_base=not special,
+                mirror=dst_root,
+                opts=opts,
+                depth_regexes=depth_regexes,
+            ),
+            opts,
+        )
         listed = source_rows(diff)
         # The full listing feeds the dup check and the mirror delete:
         # the reference's dst-list writer appends EVERY traversed
@@ -269,14 +248,14 @@ class DistCpPlusEngine:
         )
         n_files, costs = check_duplicates_and_total(diff, sources)
         copies = assign_cost_buckets(
-            plan_updates(sources, dst_meta, opts),
+            plan_updates(sources, destination_rows(diff), opts),
             opts.bytes_per_task,
             opts.max_tasks,
             costs=costs,
         )
 
         deletes = None
-        if opts.delete and dst_is_dir:
+        if opts.delete and os.path.isdir(dst_root):
             deletes = plan_mirror_delete(diff)
 
         return CopyPlan(

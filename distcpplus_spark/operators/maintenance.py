@@ -117,7 +117,7 @@ def plan_vacuum(
     doomed = listing.filter(~kept)
     # ancestor suppression (DistCpUtils.isAncestorPath): keep only the
     # topmost doomed entries so a removed dir's children aren't
-    # re-deleted — same relational trick as plan_mirror_delete
+    # re-deleted — a doomed path is dropped when its parent is doomed
     parent = F.when(
         F.instr(F.col("relative_dst"), "/") > 0,
         F.expr(

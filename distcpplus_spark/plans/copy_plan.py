@@ -1,14 +1,16 @@
-"""Copy-plan construction: one diff of the two listings, limits,
+"""Copy-plan construction: pairing, one classification, limits,
 duplicate check, cost-balanced bucketing, mirror-delete planning.
 
-The plan has one join. :func:`sync_diff` is the full-outer diff of the
-source and destination listings keyed on ``relative_dst``, every row
-tagged with its action; the copy set (:func:`plan_updates`), the
-mirror deletes (:func:`plan_mirror_delete`), the source-file count and
-``sources/lister.relist_diff`` are filters or projections of it. The
-engine lazily checkpoints the diff, and
-:func:`check_duplicates_and_total` is the one job that materializes
-it, checksum reads and per-partition copy costs included.
+A diff is a set of pairs, each tagged with its action. A sync pairs
+the source and destination trees while listing them
+(``sources/lister.list_tree(..., mirror=dst_root)``, which also
+compares the bytes of tie pairs in its listing tasks); a manifest diff
+(``sources/lister.relist_diff``) pairs two listings with
+:func:`pair_listings`, a full outer join. Both are tagged by the one
+:func:`classify`. The copy set (:func:`plan_updates`), the mirror
+deletes (:func:`plan_mirror_delete`) and the source-file count are
+filters or projections of the diff, and
+:func:`check_duplicates_and_total` is the one job that reads it.
 
 All plan stages are lazy DataFrame transformations — the plan IS a
 Catalyst logical plan, inspectable via .explain() (the Spark-native
@@ -198,73 +200,61 @@ def _greedy_sizelimit_split(
     return prefix_clean, residual, carry_files, carry_bytes
 
 
-def _sha256_of_paths():
-    """Lazily-built pandas UDF: sha256 of file contents, null on read
-    error. Null input → null output, so callers can gate which rows
-    pay the read by passing ``F.when(cond, path)``."""
-    import pandas as pd
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
+def contents_differ(a: str, b: str) -> bool | None:
+    """Whether two files' bytes differ: both are streamed side by side
+    and the read stops at the first differing chunk. None on a read
+    error, which the -update predicate counts as equal, as the
+    reference does with an unavailable checksum
+    (DistCpUtils.java:280-290). The one content comparison of the
+    package: the mirror walk calls it inside its listing tasks, and
+    :func:`pair_listings` wraps it in a UDF."""
+    try:
+        with open(a, "rb") as fa, open(b, "rb") as fb:
+            while True:
+                x = fa.read(1 << 20)
+                if x != fb.read(1 << 20):
+                    return True
+                if not x:
+                    return False
+    except OSError:
+        return None
 
-    @pandas_udf(T.StringType())
-    def sha(paths):
-        import hashlib
 
-        out = []
-        for p in paths:
-            if p is None:
-                out.append(None)
-                continue
-            try:
-                h = hashlib.sha256()
-                with open(p, "rb") as f:
-                    for chunk in iter(lambda: f.read(1 << 20), b""):
-                        h.update(chunk)
-                out.append(h.hexdigest())
-            except OSError:
-                out.append(None)
-        return pd.Series(out)
-
-    return sha
+def compares_contents(opts: CopyOptions) -> bool:
+    """-update reads the bytes of tie pairs unless -skipcrccheck."""
+    return opts.update and not opts.skip_crc_check
 
 
 COPY_ACTIONS = (
     "mkdir", "copy_new", "copy_checksum", "copy_changed", "copy_overwrite"
 )
 
+# The destination side of a pair, as a diff carries it.
+DST_COLUMNS = ("d_relative_dst", "d_path", "d_length", "d_mtime", "d_is_dir")
 
-def sync_diff(
+
+def pair_listings(
     src_meta: DataFrame,
     dst_meta: DataFrame,
     opts: CopyOptions,
 ) -> DataFrame:
-    """The plan's one join: a full-outer diff of the source and
-    destination listings keyed on ``relative_dst``, every row tagged
-    with an ``action`` — the merge of the two sorted listings that the
-    reference runs per copy (DistCpUtils.sameFile,
-    DistCpUtils.java:239-291) and per mirror delete
-    (DistCpUtils.deleteNonexisting, DistCpUtils.java:136-223).
+    """Pair two listings by ``relative_dst`` in a full outer join, in
+    the column shape :func:`classify` reads: the source listing's
+    columns, ``_dup``, the destination's ``relative_dst``, ``path``,
+    ``length``, ``mtime`` and ``is_dir`` as ``d_*``, and
+    ``_crc_changed``. A destination-only row has NULL source columns.
 
-    Actions: ``mkdir`` (source dirs), ``copy_new`` (missing at the
-    destination), ``copy_checksum`` / ``copy_changed`` (the change
-    predicate holds), ``copy_overwrite`` (present at the destination,
-    under -overwrite), ``skip`` (a source file the predicate keeps) and
-    ``delete`` (destination-only: a mirror-delete candidate, whose
-    source columns are NULL).
+    This is the pairing for manifest diffs
+    (``sources/lister.relist_diff``); a sync pairs its trees while
+    listing them (``list_tree(..., mirror=dst_root)``), which yields
+    the same shape without a join.
 
-    Change predicate, under -update: differ on length, or on mtime
-    unless skip_ts_check, or — unless skip_crc_check — on content
-    checksum when length+mtime tie. Checksums are a lazy column
-    computed distributed, ONLY for tie rows (the reference's sameFile
-    fetches FS checksums for exactly those); an unavailable checksum
-    counts as equal (DistCpUtils.java:280-290). -overwrite copies
-    every source row; a plain copy only what is missing.
-
-    Columns: the source listing's, the destination's ``relative_dst``,
-    ``path``, ``length`` and ``is_dir`` as ``d_*``, ``action``, and
     ``_dup``: the row is one of several source files with one
-    destination (DistCpUtils.java:84-110). ``_dup`` is a window over
-    the source side's join exchange, so it costs no shuffle of its own.
+    destination (DistCpUtils.java:84-110), a window over the source
+    side's join exchange, so it costs no shuffle of its own.
+    ``_crc_changed``: under -update with checksums on, a tie pair
+    (both lengths equal, and both mtimes unless -skiptscheck) whose
+    bytes differ, by :func:`contents_differ` in a Python UDF.
     """
     s = src_meta.withColumn(
         "_dup",
@@ -277,44 +267,61 @@ def sync_diff(
         ),
     ).alias("s")
     d = dst_meta.select(
-        F.col("relative_dst").alias("d_relative_dst"),
-        F.col("length").alias("d_length"),
-        F.col("mtime").alias("d_mtime"),
-        F.col("is_dir").alias("d_is_dir"),
-        F.col("path").alias("d_path"),
+        *(F.col(c[2:]).alias(c) for c in DST_COLUMNS)
     ).alias("d")
     joined = s.join(
         d, F.col("s.relative_dst") == F.col("d.d_relative_dst"), "full_outer"
     )
-    missing = F.col("d_relative_dst").isNull()
     crc = F.lit(False)
+    if compares_contents(opts):
+        tie = (
+            ~F.col("s.is_dir")
+            & F.col("d_relative_dst").isNotNull()
+            & (F.col("s.length") == F.col("d_length"))
+        )
+        if not opts.skip_ts_check:
+            tie = tie & (F.col("s.mtime") == F.col("d_mtime"))
+        # Spark may call a UDF on every row of a batch: only tie rows
+        # get paths, so only they pay the read
+        differ = F.udf(
+            lambda a, b: a is not None and contents_differ(a, b), "boolean"
+        )
+        crc = F.coalesce(
+            differ(F.when(tie, F.col("s.path")), F.col("d_path")), F.lit(False)
+        )
+    return joined.select("s.*", *DST_COLUMNS, crc.alias("_crc_changed"))
+
+
+def classify(pairs: DataFrame, opts: CopyOptions) -> DataFrame:
+    """Tag every pair with its ``action``: the change predicate the
+    reference runs per copied file (DistCpUtils.sameFile,
+    DistCpUtils.java:239-291) and per mirror delete
+    (DistCpUtils.deleteNonexisting, DistCpUtils.java:136-223).
+
+    Actions: ``mkdir`` (source dirs), ``copy_new`` (missing at the
+    destination), ``copy_checksum`` / ``copy_changed`` (the change
+    predicate holds), ``copy_overwrite`` (present at the destination,
+    under -overwrite), ``skip`` (a source file the predicate keeps) and
+    ``delete`` (destination-only: a mirror-delete candidate, whose
+    source columns are NULL).
+
+    Change predicate, under -update: differ on length, or on mtime
+    unless skip_ts_check, or on content (``_crc_changed``, set by the
+    pairing for tie pairs only). -overwrite copies every source row; a
+    plain copy only what is missing.
+
+    ``pairs`` come from a mirror walk or from :func:`pair_listings`;
+    the result keeps their columns but ``_crc_changed``, plus
+    ``action``.
+    """
+    missing = F.col("d_relative_dst").isNull()
+    crc = F.coalesce(F.col("_crc_changed"), F.lit(False))
     if opts.overwrite:
         keep = F.lit(True)
     elif opts.update:
-        changed = F.col("s.length") != F.col("d_length")
+        changed = F.col("length") != F.col("d_length")
         if not opts.skip_ts_check:
-            changed = changed | (F.col("s.mtime") != F.col("d_mtime"))
-        if not opts.skip_crc_check:
-            # tie rows = would otherwise be skipped; only they get read
-            tie = (
-                ~F.col("s.is_dir")
-                & ~missing
-                & (F.col("s.length") == F.col("d_length"))
-            )
-            if not opts.skip_ts_check:
-                tie = tie & (F.col("s.mtime") == F.col("d_mtime"))
-            sha = _sha256_of_paths()
-            s_sum = sha(F.when(tie, F.col("s.path")))
-            d_sum = sha(F.when(tie, F.col("d_path")))
-            joined = joined.withColumn(
-                "_crc_changed",
-                tie
-                & s_sum.isNotNull()
-                & d_sum.isNotNull()
-                & (s_sum != d_sum),
-            )
-            crc = F.col("_crc_changed")
-            changed = changed | crc
+            changed = changed | (F.col("mtime") != F.col("d_mtime"))
         keep = missing | changed
     else:
         # plain copy: only skip files already present (same semantics
@@ -322,8 +329,8 @@ def sync_diff(
         # DefaultCopyFilesMapper.java:65-69 with update=false)
         keep = missing
     action = (
-        F.when(F.col("s.path").isNull(), F.lit("delete"))
-        .when(F.col("s.is_dir"), F.lit("mkdir"))
+        F.when(F.col("path").isNull(), F.lit("delete"))
+        .when(F.col("is_dir"), F.lit("mkdir"))
         .when(missing, F.lit("copy_new"))
         # checksum-detected: metadata ties, so the copier's cheap
         # exec-time re-check must not veto the copy; nor -overwrite's,
@@ -332,14 +339,17 @@ def sync_diff(
         .when(keep, F.lit("copy_overwrite" if opts.overwrite else "copy_changed"))
         .otherwise(F.lit("skip"))
     )
-    return joined.select(
-        "s.*",
-        "d_relative_dst",
-        "d_path",
-        "d_length",
-        "d_is_dir",
-        action.alias("action"),
-    )
+    return pairs.withColumn("action", action).drop("_crc_changed")
+
+
+def sync_diff(
+    src_meta: DataFrame,
+    dst_meta: DataFrame,
+    opts: CopyOptions,
+) -> DataFrame:
+    """The diff of two listings: :func:`classify` over
+    :func:`pair_listings`."""
+    return classify(pair_listings(src_meta, dst_meta, opts), opts)
 
 
 def source_rows(diff: DataFrame) -> DataFrame:
@@ -347,31 +357,39 @@ def source_rows(diff: DataFrame) -> DataFrame:
     return diff.filter(F.col("action") != "delete")
 
 
+def destination_rows(diff: DataFrame) -> DataFrame:
+    """The destination side of a diff's pairs as a listing:
+    ``relative_dst``, ``path``, ``length``, ``mtime`` and ``is_dir``."""
+    return diff.filter(F.col("d_relative_dst").isNotNull()).select(
+        *(F.col(c).alias(c[2:]) for c in DST_COLUMNS)
+    )
+
+
 def plan_updates(
     src_meta: DataFrame,
     dst_meta: DataFrame,
     opts: CopyOptions,
 ) -> DataFrame:
-    """The copy set: the source rows :func:`sync_diff` tags with one of
+    """The copy set: the source rows :func:`classify` tags with one of
     ``COPY_ACTIONS``, with the source listing's columns plus ``action``.
 
     The reference does a namenode point-lookup per file
-    (DistCPPlus.java:685-688) — O(N) RPCs; this is one shuffle join.
-    ``src_meta`` may also be source rows that already carry the
-    diff's ``action`` (the engine's checkpointed diff); they are then
-    only filtered, and ``dst_meta`` is not read again. That second
-    input exists for one reason: the engine keeps calling this
-    function, with this call shape, because perfbench's tracer hooks
-    the call to count the checksum tie pairs
-    (``copy_plan.checksum_pairs``, ``perfbench/spans.py``). Once the
-    benchmark reads that count elsewhere, the engine can filter its
-    diff with ``COPY_ACTIONS`` directly and this function goes back to
-    building :func:`sync_diff` only.
+    (DistCPPlus.java:685-688) — O(N) RPCs; a sync pairs each file with
+    its destination while listing. ``src_meta`` may be source rows
+    that already carry the diff's ``action`` (the engine's diff); they
+    are then only filtered, and ``dst_meta`` is not read. The engine
+    still passes the destination side of its pairs
+    (:func:`destination_rows`) because perfbench's tracer hooks this
+    call to count the checksum tie pairs (``copy_plan.checksum_pairs``,
+    ``perfbench/spans.py``). Once the benchmark reads that count
+    elsewhere, the engine can filter its diff with ``COPY_ACTIONS``
+    directly and this function goes back to building
+    :func:`sync_diff` only.
     """
     if "action" not in src_meta.columns:
         src_meta = sync_diff(src_meta, dst_meta, opts)
     return src_meta.filter(F.col("action").isin(*COPY_ACTIONS)).drop(
-        "_dup", "d_relative_dst", "d_path", "d_length", "d_is_dir"
+        "_dup", *DST_COLUMNS
     )
 
 
@@ -406,19 +424,18 @@ def _distributed_prefix_sums(
 
 def check_duplicates_and_total(
     diff: DataFrame, sources: DataFrame | None = None
-) -> tuple[int, dict[int, int]]:
-    """The one job that materializes the lazily checkpointed
-    :func:`sync_diff`: the duplicate-destination check
-    (DistCpUtils.java:84-110), the number of source files and each
-    partition's copy cost, as one rolled-up aggregate. Returns ``(source
-    files, {partition id: cost})``; the costs feed
-    :func:`assign_cost_buckets`, the file count the RECORDSKIPPED counter.
+) -> tuple[int, dict[int, tuple[int, int]]]:
+    """The one job that reads the diff: the duplicate-destination check
+    (DistCpUtils.java:84-110), the number of source files, and each
+    partition's copy cost and number of positive-cost copy rows, as one
+    rolled-up aggregate. Returns ``(source files, {partition id:
+    (cost, copy rows)})``; the partition totals feed
+    :func:`assign_cost_buckets`, the file count the RECORDSKIPPED
+    counter. It reads no file: a sync's tie pairs were compared while
+    listing.
 
     Any source file flagged ``_dup`` raises :class:`DuplicationError`,
-    a NULL destination included. The check runs in the same job that
-    reads the tie rows' checksums, and a checksum read error there
-    becomes NULL (counted as equal), never a job failure, so
-    duplicate destinations still surface as ``DuplicationError``.
+    a NULL destination included.
 
     ``sources`` are the diff's source rows after -filelimit /
     -sizelimit (default: all of them, :func:`source_rows`). The file
@@ -428,6 +445,7 @@ def check_duplicates_and_total(
     if sources is None:
         sources = source_rows(diff)
     dup = F.coalesce(F.col("_dup"), F.lit(False))
+    copied = F.col("action").isin(*COPY_ACTIONS)
     rows = diff.select(
         dup.cast("long").alias("_d"),
         F.when(dup, F.col("relative_dst")).alias("_k"),
@@ -435,9 +453,8 @@ def check_duplicates_and_total(
         sources.select(
             F.spark_partition_id().alias("_p"),
             (~F.col("is_dir")).cast("long").alias("_f"),
-            F.when(F.col("action").isin(*COPY_ACTIONS), F.col("cost")).alias(
-                "_c"
-            ),
+            F.when(copied, F.col("cost")).alias("_c"),
+            (copied & (F.col("cost") > 0)).cast("long").alias("_n"),
         ),
         allowMissingColumns=True,
     )
@@ -448,6 +465,7 @@ def check_duplicates_and_total(
         F.max("_k").alias("last"),
         F.sum("_f").alias("files"),
         F.sum("_c").alias("cost"),
+        F.sum("_n").alias("copies"),
     ).collect()
     stats = next(g for g in groups if g["all"])
     if stats["dups"]:
@@ -455,13 +473,17 @@ def check_duplicates_and_total(
         raise DuplicationError(
             f"{stats['dups']} source files share a destination: {names}"
         )
-    costs = {g["_p"]: int(g["cost"] or 0) for g in groups if g["_p"] is not None}
+    costs = {
+        g["_p"]: (int(g["cost"] or 0), int(g["copies"] or 0))
+        for g in groups
+        if g["_p"] is not None
+    }
     return int(stats["files"] or 0), costs
 
 
 def assign_cost_buckets(
     plan: DataFrame, bytes_per_task: int, max_tasks: int | None = None,
-    costs: dict[int, int] | None = None,
+    costs: dict[int, tuple[int, int]] | None = None,
 ) -> DataFrame:
     """Size-balanced partitioning (CopyInputFormat.java:33-79 +
     setMapCount, DistCPPlus.java:442-451): bucket rows by cumulative
@@ -474,18 +496,25 @@ def assign_cost_buckets(
     path in a window per partition. A row starts at the cost of the
     partitions before its own plus the cost before it there; bucket b
     holds the rows that start in [b·target, (b+1)·target). ``costs``
-    ({partition id: cost}, :func:`check_duplicates_and_total`) saves a job.
+    ({partition id: (cost, positive-cost rows)},
+    :func:`check_duplicates_and_total`) saves a job.
 
     Returns the plan with a ``bucket`` column, laid out by
     :func:`layout_tasks`: bucket b is task b. n = clamp(total /
-    bytes_per_task, 1, max_tasks).
+    bytes_per_task, 1, min(positive-cost rows, max_tasks)): a task per
+    byte budget, but never more tasks than rows that carry bytes.
     """
     if costs is None:
-        costs = dict(plan.groupBy(F.spark_partition_id()).agg(F.sum("cost")).collect())
-    total = sum(costs.values())
-    n = max(1, int(total // bytes_per_task) + (1 if total % bytes_per_task else 0))
-    if max_tasks:
-        n = min(n, max_tasks)
+        costs = {
+            p: (int(c or 0), n)
+            for p, c, n in plan.groupBy(F.spark_partition_id())
+            .agg(F.sum("cost"), F.count(F.when(F.col("cost") > 0, 1)))
+            .collect()
+        }
+    total = sum(c for c, _ in costs.values())
+    n = -(-total // bytes_per_task)
+    n = min(n, sum(r for _, r in costs.values()), max_tasks or n)
+    n = max(1, n)
     if n == 1:
         # one task holds the whole plan: no running cost to place it
         return layout_tasks(plan.withColumn("bucket", F.lit(0)), 1)
@@ -493,7 +522,7 @@ def assign_cost_buckets(
     offsets, offset = [], 0
     for p in sorted(costs):
         offsets += [F.lit(p), F.lit(offset)]
-        offset += costs[p]
+        offset += costs[p][0]
     w = Window.partitionBy("_p").orderBy("path")
     before = F.sum("cost").over(w.rowsBetween(Window.unboundedPreceding, 0))
     start = F.create_map(*offsets)[F.col("_p")] + before - F.col("cost")
@@ -520,31 +549,19 @@ def layout_tasks(plan: DataFrame, n: int) -> DataFrame:
 def plan_mirror_delete(diff: DataFrame) -> DataFrame:
     """-delete (DistCpUtils.java:136-223): the diff's ``delete`` rows,
     the destination paths no source row maps to, as ``path``,
-    ``relative_dst``, ``is_dir`` and ``length``. Ancestor suppression:
-    a doomed path is dropped when its parent directory is doomed too
-    (isAncestorPath, DistCpUtils.java:113-119), so a removed tree is
-    deleted once, never entered again.
+    ``relative_dst``, ``is_dir`` and ``length``. A filter, no job of
+    its own.
 
-    Ancestor suppression is itself relational: a doomed path is
-    suppressed iff its parent dir is also doomed. One self-join of the
-    doomed rows on the parent path replaces the reference's ordered
-    scan.
+    Ancestor suppression (isAncestorPath, DistCpUtils.java:113-119)
+    comes from the mirror walk: it descends into source directories
+    only, so a removed tree is one ``delete`` row for its top, and
+    nothing below it is listed or deleted again. A diff from
+    :func:`pair_listings` lists destination-only trees in full, so its
+    delete rows are not suppressed this way.
     """
-    doomed = diff.filter(F.col("action") == "delete").select(
+    return diff.filter(F.col("action") == "delete").select(
         F.col("d_path").alias("path"),
         F.col("d_relative_dst").alias("relative_dst"),
         F.col("d_is_dir").alias("is_dir"),
         F.col("d_length").alias("length"),
-    )
-    parent = F.when(
-        F.instr(F.col("relative_dst"), "/") > 0,
-        F.expr("substring(relative_dst, 1, length(relative_dst) - length(element_at(split(relative_dst, '/'), -1)) - 1)"),
-    )
-    with_parent = doomed.withColumn("_parent", parent)
-    doomed_dirs = doomed.filter(F.col("is_dir")).select(
-        F.col("relative_dst").alias("_parent")
-    )
-    return (
-        with_parent.join(doomed_dirs, "_parent", "left_anti")
-        .drop("_parent")
     )

@@ -1,43 +1,62 @@
-"""Distributed recursive file listing → file_meta DataFrame.
+"""Distributed recursive file listing → file_meta DataFrame, and the
+mirror walk that pairs a source tree with its destination.
 
 The reference walks the tree single-threaded on the driver with an
-explicit stack (DistCPPlus.java:644-749) and batches metadata RPCs by
-parent directory (FileStatusClusterOptimizer.java:33-147). That design
-caps out at millions of files: the driver becomes the bottleneck and
-holds the whole manifest in memory.
+explicit stack (DistCPPlus.java:644-749) and checks each file against
+the destination as it goes (``sameFile``, DistCPPlus.java:680-700);
+its optimizer batches those checks into one ``listStatus`` of the
+destination parent per source directory
+(FileStatusClusterOptimizer.java:33-147). That design caps out at
+millions of files: the driver becomes the bottleneck and holds the
+whole manifest in memory.
 
 Here listing is itself a Spark job — iterative frontier expansion
-(BFS-on-Spark): seed the frontier with the root dirs, fan out one
-``listStatus`` per directory inside ``mapPartitions``, repeat per
-level. Each wave is a distributed job, so a 100M-file tree lists at
-cluster speed and the manifest lives in a DataFrame (spillable,
-checkpointable to parquet), not driver heap. The per-directory listing
-is the same RPC-batching trick as the reference's optimizer — one
-scandir per directory, never one stat per file.
+(BFS-on-Spark): each frontier item is one relative directory, and the
+task that holds it scans every source directory that maps there, one
+scandir per directory (the reference's RPC batching), never one stat
+per file. Small frontiers are scanned on the driver; each wider wave
+is one distributed job, so a 100M-file tree lists at cluster speed and
+the manifest lives in a DataFrame, not driver heap.
+
+A mirror walk (``list_tree(..., mirror=dst_root)``) scans
+``dst_root/<rel>`` in the same task, pairs the entries by name, and
+compares the bytes of tie pairs there, so a sync needs no join of two
+listings and no second pass over the files. It descends into source
+directories only: a destination-only directory is one row, never
+entered.
 
 The listing is materialized ONCE, like the reference's single walk:
 each distributed wave is one local-checkpointed DataFrame whose
 frontier collect fills the checkpoint, and all driver-scanned rows
-form one more (lazily checkpointed) frame. The copy plan, the update
-join, the mirror delete and the skip counter then all read JVM rows;
-none of them re-runs the scan or re-converts its rows in Python
-workers. The result is a snapshot of the tree at listing time, so the
-copy set and the delete set always come from the same listing. A
-checkpoint block lost with its executor fails the job that needs it;
-the lister never silently re-lists a tree that may have changed since.
+form one more (lazily checkpointed) frame. The copy plan, the mirror
+delete and the skip counter then all read JVM rows; none of them
+re-runs the scan or re-converts its rows in Python workers. The result
+is a snapshot of the trees at listing time, so the copy set and the
+delete set always come from the same listing. A checkpoint block lost
+with its executor fails the job that needs it; the lister never
+silently re-lists a tree that may have changed since.
 """
 
 from __future__ import annotations
 
+import datetime
 import os
+import re
 import stat as statmod
+from collections import defaultdict
+from typing import NamedTuple
 
 from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from distcpplus_spark.plans.copy_plan import CopyOptions, sync_diff
+from distcpplus_spark.plans.copy_plan import (
+    CopyOptions,
+    compares_contents,
+    contents_differ,
+    sync_diff,
+)
 
 FILE_META_SCHEMA = T.StructType(
     [
@@ -55,40 +74,60 @@ FILE_META_SCHEMA = T.StructType(
     ]
 )
 
-# A distributed wave's rows also carry the root they were listed
-# under: the wave's directory rows are the next frontier.
-_WAVE_SCHEMA = T.StructType(
-    FILE_META_SCHEMA.fields + [T.StructField("_root", T.StringType(), False)]
+# A mirror walk's rows: the source entry's columns (NULL on a
+# destination-only row), then the pair columns copy_plan.classify reads.
+PAIR_SCHEMA = T.StructType(
+    [T.StructField(f.name, f.dataType, True) for f in FILE_META_SCHEMA.fields]
+    + [
+        T.StructField("_dup", T.BooleanType(), True),
+        T.StructField("d_relative_dst", T.StringType(), True),
+        T.StructField("d_path", T.StringType(), True),
+        T.StructField("d_length", T.LongType(), True),
+        T.StructField("d_mtime", T.TimestampType(), True),
+        T.StructField("d_is_dir", T.BooleanType(), True),
+        T.StructField("_crc_changed", T.BooleanType(), True),
+    ]
 )
 
+# How a walk uses a row: a row of the result, a row it also descends
+# from, or (below a -regexPath component or a root left out by
+# include_roots=False) a directory it only descends into. A distributed
+# wave carries this in a ``_walk`` column.
+ROW, ROW_DESCEND, DESCEND = 0, 1, 2
 
-def _stat_to_entry(
-    path: str, st: os.stat_result, root: str, prefix_base: bool = True
-) -> tuple:
-    import datetime
+_NO_SOURCE = (None,) * (len(FILE_META_SCHEMA.fields) + 1)  # + _dup
+_NO_DST = (None,) * 5
+_D_DIR = slice(13, 17, 3)  # d_path, d_is_dir of a PAIR_SCHEMA row
 
-    # The reference's makeRelative (DistCPPlus.java:410-430): copying
-    # root /a/b to dst lands the tree at dst/b/... — every relative
-    # path is prefixed with the root's basename. Destination listings
-    # use prefix_base=False (relative to the dst root itself).
-    rel = os.path.relpath(path, root)
-    if prefix_base:
-        base = os.path.basename(root.rstrip("/"))
-        rel = base if rel == "." else os.path.join(base, rel)
-    elif rel == ".":
-        rel = ""
+
+class _Walk(NamedTuple):
+    """What a walk's tasks need besides their directories."""
+
+    mirror: bool  # pair each entry with the destination's
+    skip_unreadable: bool  # the source side drops every listing error
+    compare: bool  # read the bytes of tie pairs
+    check_mtime: bool  # a tie needs equal mtimes too
+    patterns: tuple[str, ...]  # -regexPath chain, one regex per depth
+
+
+def _utc(ts: float) -> datetime.datetime:
+    return datetime.datetime.fromtimestamp(ts, tz=datetime.timezone.utc).replace(
+        tzinfo=None
+    )
+
+
+def _stat_to_entry(path: str, rel: str, st: os.stat_result) -> tuple:
+    """A file_meta row. ``rel`` is the path below the destination root:
+    the reference's makeRelative (DistCPPlus.java:410-430) lands root
+    /a/b at dst/b/..., or at dst/... under the special-root rule."""
     is_dir = statmod.S_ISDIR(st.st_mode)
     return (
         path,
         rel,
         0 if is_dir else st.st_size,
         is_dir,
-        datetime.datetime.fromtimestamp(st.st_mtime, tz=datetime.timezone.utc).replace(
-            tzinfo=None
-        ),
-        datetime.datetime.fromtimestamp(st.st_atime, tz=datetime.timezone.utc).replace(
-            tzinfo=None
-        ),
+        _utc(st.st_mtime),
+        _utc(st.st_atime),
         str(st.st_uid),
         str(st.st_gid),
         statmod.S_IMODE(st.st_mode),
@@ -97,37 +136,110 @@ def _stat_to_entry(
     )
 
 
-def _scan_dirs(
-    dirs: list[tuple[str, str]],
-    prefix_base: bool = True,
-    skip_unreadable: bool = False,
-) -> tuple[list[tuple], list[tuple[str, str]]]:
-    """One os.scandir per directory (RPC batching, P3): returns
-    (entry rows, child dirs as (path, root)).
+def _scan(d: str, tolerated: type[OSError]) -> list[tuple]:
+    """One os.scandir of ``d`` (RPC batching, P3): (name, path, lstat)
+    per entry, dropping ``tolerated`` errors."""
+    out = []
+    try:
+        with os.scandir(d) as it:
+            for de in it:
+                try:
+                    out.append((de.name, de.path, de.stat(follow_symlinks=False)))
+                except tolerated:
+                    continue
+    except tolerated:
+        pass
+    return out
 
-    Fails closed, like the reference's ``listStatus``: a path that
-    vanished mid-walk is absent, as it would be at listing time, but
-    any other error (an unreadable directory) propagates. Dropping it
-    would make the subtree look empty, and ``-delete`` would then
-    delete its mirror. ``skip_unreadable`` drops every error instead;
-    see ``list_tree``."""
-    tolerated = OSError if skip_unreadable else FileNotFoundError
-    rows: list[tuple] = []
-    children: list[tuple[str, str]] = []
-    for d, root in dirs:
-        try:
-            with os.scandir(d) as it:
-                for de in it:
-                    try:
-                        st = de.stat(follow_symlinks=False)
-                    except tolerated:
-                        continue
-                    rows.append(_stat_to_entry(de.path, st, root, prefix_base))
-                    if de.is_dir(follow_symlinks=False):
-                        children.append((de.path, root))
-        except tolerated:
+
+def _pair_dir(item: tuple, walk: _Walk, pinned=()) -> list[tuple]:
+    """One relative directory ``item = (rel, source dirs, destination
+    dir or None)``: scan each source directory and the destination
+    one, pair their entries by name, and return ``(row, use)`` per
+    entry (``use``: ROW, ROW_DESCEND or DESCEND). ``pinned`` are
+    ``(name, path, lstat, use)`` entries of the roots themselves.
+
+    The source side fails closed, like the reference's ``listStatus``:
+    a path that vanished mid-walk is absent, as it would be at listing
+    time, but any other error (an unreadable directory) propagates.
+    Dropping it would make the subtree look empty, and ``-delete``
+    would then delete its mirror. ``walk.skip_unreadable`` drops every
+    source error instead. The destination side always drops them: an
+    unreadable destination subtree looks empty, which can only mean
+    fewer deletes or per-file copy failures that are already counted.
+    """
+    rel, src_dirs, dst_dir = item
+    src = defaultdict(list)
+    for name, path, st, use in pinned:
+        src[name].append((path, st, use))
+    tolerated = OSError if walk.skip_unreadable else FileNotFoundError
+    for d in src_dirs:
+        for name, path, st in _scan(d, tolerated):
+            src[name].append((path, st, ROW))
+    depth = rel.count("/") + 1 if rel else 0
+    if depth < len(walk.patterns):
+        # -regexPath: the component at this depth must match; above the
+        # chain's last depth only directories pass, walked but not rows
+        rx = re.compile(walk.patterns[depth])
+        last = depth == len(walk.patterns) - 1
+        src = {
+            name: [
+                (p, st, ROW if last else DESCEND)
+                for p, st, _ in es
+                if last or statmod.S_ISDIR(st.st_mode)
+            ]
+            for name, es in src.items()
+            if rx.fullmatch(name)
+        }
+    dst = {n: (p, st) for n, p, st in _scan(dst_dir, OSError)} if dst_dir else {}
+
+    out = []
+    for name in src.keys() | dst.keys():
+        child = f"{rel}/{name}" if rel else name
+        d_path, d_st = dst.get(name, (None, None))
+        d_is_dir = d_st is not None and statmod.S_ISDIR(d_st.st_mode)
+        dpart = _NO_DST
+        if d_st is not None:
+            d_len = 0 if d_is_dir else d_st.st_size
+            dpart = (child, d_path, d_len, _utc(d_st.st_mtime), d_is_dir)
+        entries = src.get(name)
+        if not entries:
+            # destination-only: one delete candidate, never entered
+            out.append((_NO_SOURCE + dpart + (None,), ROW))
             continue
-    return rows, children
+        files = sum(not statmod.S_ISDIR(st.st_mode) for _, st, _ in entries)
+        for path, st, use in entries:
+            row = _stat_to_entry(path, child, st)
+            is_dir = row[3]
+            if use == ROW and (is_dir or d_is_dir):
+                use = ROW_DESCEND
+            if walk.mirror:
+                tie = (
+                    walk.compare
+                    and not is_dir
+                    and d_st is not None
+                    and row[2] == dpart[2]
+                    and (not walk.check_mtime or row[4] == dpart[3])
+                )
+                changed = tie and contents_differ(path, d_path) is True
+                row += (not is_dir and files > 1,) + dpart + (changed,)
+            out.append((row, use))
+    return out
+
+
+def _frontier(marked) -> list[tuple]:
+    """The next items from the rows a walk descends from, as
+    ``(relative_dst, path, is_dir, d_path, d_is_dir)``: one item per
+    relative directory, holding every source directory that maps there
+    and the destination directory if there is one."""
+    items: dict[str, tuple] = {}
+    for rel, path, is_dir, d_path, d_is_dir in marked:
+        src_dirs, dst_dir = items.get(rel, ((), None))
+        items[rel] = (
+            src_dirs + (path,) if is_dir else src_dirs,
+            d_path if d_is_dir else dst_dir,
+        )
+    return [(rel, s, d) for rel, (s, d) in items.items()]
 
 
 class _ErrorList(AccumulatorParam):
@@ -145,15 +257,26 @@ def list_tree(
     fanout_threshold: int = 64,
     prefix_base: bool = True,
     skip_unreadable: bool = False,
+    mirror: str | None = None,
+    opts: CopyOptions | None = None,
+    depth_regexes: list[str] | None = None,
 ) -> DataFrame:
-    """List file trees under ``roots`` into a file_meta DataFrame.
+    """List file trees under ``roots`` into a file_meta DataFrame, or,
+    with ``mirror``, into the pairs of a sync diff.
 
-    BFS frontier expansion: while the frontier is small the driver
-    scans it directly (no job-launch overhead); once it exceeds
-    ``fanout_threshold`` directories, each wave is distributed via
-    ``sc.parallelize(frontier).mapPartitions``. This keeps tiny trees
-    fast AND huge trees scalable — the reference's single-threaded
-    stack walk (DistCPPlus.java:644-749) only had the first mode.
+    Relative paths: a root lands at its basename, so root /a/b lists
+    b/...; with ``prefix_base=False`` a directory root lands at the
+    destination root itself (the special-root rule), while a file
+    root keeps its basename. ``include_roots=False`` leaves the roots'
+    own rows out.
+
+    BFS frontier expansion over relative directories: while the
+    frontier is small the driver scans it directly (no job-launch
+    overhead); once it exceeds ``fanout_threshold`` directories, each
+    wave is distributed via ``sc.parallelize(frontier).mapPartitions``.
+    This keeps tiny trees fast AND huge trees scalable — the
+    reference's single-threaded stack walk (DistCPPlus.java:644-749)
+    only had the first mode.
 
     A distributed wave runs ``min(len(frontier), defaultParallelism)``
     tasks: one task round. Wave tasks are Python tasks, and a second
@@ -161,86 +284,117 @@ def list_tree(
     Measured on 4 vCPU (defaultParallelism 4), medians of 7 warm runs:
     an 8-task Python RDD job takes 0.21 s, a 4-task one 0.14 s, an
     8-task JVM job 0.15 s (0.63 s and 0.40 s for the Python jobs
-    before the zipimport fix in ``session``). In the copy benchmark
-    (``perfbench``, ``sync_update_delete``, two 128-directory waves,
-    ``--trace 1``, seed 1) the two listings take 8 tasks and 0.55 s.
-    A wide, skewed tree (200 top dirs with 2000/(i+1) subdirs each,
-    11,662 dirs in the second wave, one top-level slice holding ~3/4
-    of them, two files per subdir, 35,187 rows) took a median 1.16 s
-    in one round per wave against 1.30 s in two (3 series of 5 warm
-    runs each).
+    before the zipimport fix in ``session``). A wide, skewed tree (200
+    top dirs with 2000/(i+1) subdirs each, 11,662 dirs in the second
+    wave, one top-level slice holding ~3/4 of them, two files per
+    subdir, 35,187 rows) took a median 1.16 s in one round per wave
+    against 1.30 s in two (3 series of 5 warm runs each).
+
+    ``mirror``: walk the destination root in lockstep, in the same
+    tasks, and return one row per pair in the shape
+    ``copy_plan.classify`` reads (``PAIR_SCHEMA`` plus ``cost``): each
+    source entry with the destination entry of the same relative path,
+    or NULL; each destination-only entry with NULL source columns. Under
+    -update with checksums on (``opts``), the task reads the bytes of
+    every tie pair (``copy_plan.contents_differ``). A missing
+    destination root pairs nothing. ``depth_regexes`` (-regexPath)
+    prunes the source walk: the component at depth d must fully match
+    ``depth_regexes[d]``, directories above the last depth are walked
+    but are not rows, and below it everything is selected.
 
     The returned frame is a snapshot: every scan runs once, inside
     this call, and downstream consumers read the rows as JVM blocks
     (local checkpoints), never re-running the scan through Python
     workers; see the module docstring.
 
-    A listing error other than a vanished path raises an ``OSError`` on
-    the driver, from a distributed wave too. Destination listings pass
-    ``skip_unreadable=True``: an unreadable destination subtree then
-    looks empty, which can only mean fewer deletes or per-file copy
-    failures that are already counted, whereas an unreadable source
-    subtree that looked empty would have its mirror deleted.
+    A source listing error other than a vanished path raises an
+    ``OSError`` on the driver, from a distributed wave too, unless
+    ``skip_unreadable``; see ``_pair_dir``.
     """
     sc = spark.sparkContext
-
+    opts = opts or CopyOptions()
+    walk = _Walk(
+        mirror is not None,
+        skip_unreadable,
+        mirror is not None and compares_contents(opts),
+        not opts.skip_ts_check,
+        tuple(depth_regexes or ()),
+    )
+    schema = PAIR_SCHEMA if walk.mirror else FILE_META_SCHEMA
     local_rows: list[tuple] = []
-    frontier: list[tuple[str, str]] = []
 
+    def scan_here(items, pinned=()):
+        # driver-scanned items: rows kept here, next frontier returned
+        level = [r for item in items for r in _pair_dir(item, walk, pinned)]
+        local_rows.extend(r for r, use in level if use != DESCEND)
+        return _frontier(
+            (r[1], r[0], r[3], *(r[_D_DIR] if walk.mirror else (None, None)))
+            for r, use in level
+            if use != ROW
+        )
+
+    # the root level: flattened directory roots are scanned into it,
+    # every other root is an entry of it
+    flat, pinned = [], []
     for root in roots:
         root = os.path.abspath(root)
         st = os.stat(root)
-        if include_roots:
-            local_rows.append(_stat_to_entry(root, st, root, prefix_base))
-        if statmod.S_ISDIR(st.st_mode):
-            frontier.append((root, root))
+        if statmod.S_ISDIR(st.st_mode) and not prefix_base:
+            flat.append(root)
+            if include_roots:
+                row = _stat_to_entry(root, "", st)
+                local_rows.append(
+                    row + (False,) + _NO_DST + (False,) if walk.mirror else row
+                )
+        else:
+            use = ROW if include_roots else DESCEND
+            pinned.append((os.path.basename(root.rstrip("/")), root, st, use))
+    dst_dir = mirror if mirror is not None and os.path.isdir(mirror) else None
+    frontier = scan_here([("", tuple(flat), dst_dir)], pinned)
 
     waves: list[DataFrame] = []
     while frontier:
         if len(frontier) <= fanout_threshold:
-            rows, frontier = _scan_dirs(frontier, prefix_base, skip_unreadable)
-            local_rows.extend(rows)
-        else:
-            # Distributed wave: file rows STAY on executors as JVM
-            # blocks; only the child directories — orders of magnitude
-            # fewer than the file rows — return to the driver to seed
-            # the next wave. Collecting the rows here would rebuild the
-            # reference's driver-memory bottleneck at exactly the scale
-            # this lister exists for. Each row carries its root, so the
-            # children are the wave's own directory rows, and the
-            # frontier collect is the job that fills the checkpoint.
-            n_parts = min(len(frontier), sc.defaultParallelism)
+            frontier = scan_here(frontier)
+            continue
+        # Distributed wave: rows STAY on executors as JVM blocks; only
+        # the rows the walk descends from — orders of magnitude fewer
+        # than the file rows — return to the driver to seed the next
+        # wave. Collecting the rows here would rebuild the reference's
+        # driver-memory bottleneck at exactly the scale this lister
+        # exists for. The frontier collect is the job that fills the
+        # checkpoint.
+        n_parts = min(len(frontier), sc.defaultParallelism)
 
-            # An executor's listing error would reach the driver as a
-            # wrapped Python worker exception; it comes back through an
-            # accumulator instead and is raised here as the OSError it is.
-            errors = sc.accumulator([], _ErrorList())
+        # An executor's listing error would reach the driver as a
+        # wrapped Python worker exception; it comes back through an
+        # accumulator instead and is raised here as the OSError it is.
+        errors = sc.accumulator([], _ErrorList())
 
-            def scan_wave(
-                it, _pb=prefix_base, _skip=skip_unreadable, _errors=errors
-            ):
-                for d, root in it:
-                    try:
-                        rows = _scan_dirs([(d, root)], _pb, _skip)[0]
-                    except OSError as e:
-                        _errors.add([(e.errno, e.strerror, e.filename)])
-                        continue
-                    for r in rows:
-                        yield r + (root,)
+        def scan_wave(items, _walk=walk, _errors=errors):
+            for item in items:
+                try:
+                    rows = _pair_dir(item, _walk)
+                except OSError as e:
+                    _errors.add([(e.errno, e.strerror, e.filename)])
+                    continue
+                for r, use in rows:
+                    yield r + (use,)
 
-            wave = spark.createDataFrame(
-                sc.parallelize(frontier, n_parts).mapPartitions(scan_wave),
-                _WAVE_SCHEMA,
-            ).localCheckpoint(eager=False)
-            frontier = [
-                (r["path"], r["_root"])
-                for r in wave.filter(F.col("is_dir"))
-                .select("path", "_root")
-                .collect()
-            ]
-            if errors.value:
-                raise OSError(*errors.value[0])
-            waves.append(wave.drop("_root"))
+        wave = spark.createDataFrame(
+            sc.parallelize(frontier, n_parts).mapPartitions(scan_wave),
+            T.StructType(schema.fields + [T.StructField("_walk", T.ByteType())]),
+        ).localCheckpoint(eager=False)
+        d_cols = ["d_path", "d_is_dir"] if walk.mirror else [F.lit(None)] * 2
+        marked = (
+            wave.filter(F.col("_walk") != ROW)
+            .select("relative_dst", "path", "is_dir", *d_cols)
+            .collect()
+        )
+        if errors.value:
+            raise OSError(*errors.value[0])
+        waves.append(wave.filter(F.col("_walk") != DESCEND).drop("_walk"))
+        frontier = _frontier(marked)
 
     frames = waves
     if local_rows or not waves:
@@ -254,7 +408,7 @@ def list_tree(
         # right parallelism.
         frames = [
             spark.createDataFrame(
-                sc.parallelize(local_rows, numSlices=1), FILE_META_SCHEMA
+                sc.parallelize(local_rows, numSlices=1), schema
             ).localCheckpoint(eager=False)
         ] + waves
     out = frames[0]
@@ -297,11 +451,11 @@ def relist_diff(
     'replaced' (delete + copy for the caller).
 
     Scale: both sides are metadata manifests (rows ~ file count, not
-    bytes); the diff is the copy planner's own full-outer join keyed
-    on relative_dst (plans/copy_plan.py::sync_diff, its -update
-    predicate without checksums). For repeated nightly diffs over
-    1e9-file trees, persist both manifests bucketed by relative_dst so
-    the join is shuffle-free.
+    bytes); the diff is a full-outer join keyed on relative_dst
+    (plans/copy_plan.py::sync_diff), tagged by the copy planner's own
+    classification, its -update predicate without checksums. For
+    repeated nightly diffs over 1e9-file trees, persist both manifests
+    bucketed by relative_dst so the join is shuffle-free.
     """
     diff = sync_diff(
         list_tree(spark, roots),

@@ -6,11 +6,13 @@ directory whose *name* matches a pattern.
 -regexPath (Arguments.java:363-437): per-depth mode — a '/'-separated
 chain rx0/rx1/... where the path component at depth d must match
 regexes[d]; a directory matched at the final depth is selected
-wholesale.
+wholesale. The lister prunes its walk with the chain
+(``sources/lister.list_tree(..., depth_regexes=...)``), so unmatched
+subtrees are never listed.
 
-Both are pure DataFrame filters over the listing — no filesystem
-point-probes (the reference skips per-file existence RPCs in regex
-mode for exactly this reason, DistCPPlus.java:180-188).
+The name filter is a pure DataFrame filter over the listing — no
+filesystem point-probes (the reference skips per-file existence RPCs
+in regex mode for exactly this reason, DistCPPlus.java:180-188).
 """
 
 from __future__ import annotations
@@ -31,31 +33,6 @@ def filter_name_regex(file_meta: DataFrame, pattern: str) -> DataFrame:
     """
     anchored = f"^(?:{pattern})$"
     return file_meta.filter(_basename(F.col("path")).rlike(anchored))
-
-
-def filter_depth_regexes(
-    file_meta: DataFrame, root: str, patterns: list[str]
-) -> DataFrame:
-    """-regexPath: path component at depth d (below root) must match
-    patterns[d]. Rows deeper than len(patterns) survive if their
-    ancestor chain matched (leaf-dir selected wholesale — the
-    reference pushes matched leaf dirs as sources, Arguments.java:418-428).
-    """
-    root = root.rstrip("/")
-    # literal prefix strip (NOT regexp_replace: a root containing
-    # regex metacharacters like '+' or '(' would silently mis-strip)
-    rel = F.expr(f"substring(path, {len(root) + 2})")
-    parts = F.split(rel, "/")
-    cond = F.col("path").startswith(root + "/")
-    for d, rx in enumerate(patterns):
-        anchored = f"^(?:{rx})$"
-        # Component d must match when present (try_element_at → null
-        # for rows shallower than the chain; null rlike is false, so
-        # intermediate dirs drop out). Components beyond the chain are
-        # free — those rows are inside a wholesale-selected leaf dir.
-        cond = cond & F.try_element_at(parts, F.lit(d + 1)).rlike(anchored)
-    cond = cond & (F.size(parts) >= len(patterns))
-    return file_meta.filter(cond)
 
 
 def touched_dirs(selected: DataFrame, root: str) -> DataFrame:

@@ -234,8 +234,8 @@ def test_duplicate_destination_raises(spark, tmp_path):
 def test_check_duplicates_and_total_null_destination(spark):
     """Two source files with a NULL relative_dst are a duplicate; with
     no duplicate the job returns the source-file count and each
-    partition's copy cost, both from the limited sources when those
-    are given."""
+    partition's copy cost and positive-cost copy rows, all from the
+    limited sources when those are given."""
     schema = (
         "path STRING, relative_dst STRING, length BIGINT, is_dir BOOLEAN, "
         "mtime TIMESTAMP, cost BIGINT"
@@ -257,12 +257,12 @@ def test_check_duplicates_and_total_null_destination(spark):
 
     def files_and_cost(sources=None):
         files, costs = check_duplicates_and_total(diff, sources)
-        return files, sum(costs.values())
+        return files, *map(sum, zip((0, 0), *costs.values()))
 
-    assert files_and_cost() == (2, 7)
+    assert files_and_cost() == (2, 7, 2)
     limited = source_rows(diff).filter(F.col("relative_dst") == "a")
-    assert files_and_cost(limited) == (1, 3)
-    assert files_and_cost(source_rows(diff).filter(F.lit(False))) == (0, 0)
+    assert files_and_cost(limited) == (1, 3, 1)
+    assert files_and_cost(source_rows(diff).filter(F.lit(False))) == (0, 0, 0)
     with pytest.raises(DuplicationError):
         diff = sync_diff(dup, nothing, CopyOptions())
         check_duplicates_and_total(diff, source_rows(diff).filter(F.lit(False)))
@@ -476,21 +476,21 @@ def test_trace_contract_records_work_counts(spark, src_tree, tmp_path):
 @pytest.mark.parametrize(
     "extra, budget",
     [
-        pytest.param({}, 13, id="n1"),
-        pytest.param({"bytes_per_task": 2}, 14, id="multi"),
-        pytest.param({"chunk_bytes": 4, "bytes_per_task": 2}, 29, id="chunked"),
+        pytest.param({}, 8, id="n1"),
+        pytest.param({"bytes_per_task": 2}, 9, id="multi"),
+        pytest.param({"chunk_bytes": 4, "bytes_per_task": 2}, 23, id="chunked"),
     ],
 )
 def test_sync_job_budget(spark, tmp_path, extra, budget):
     """A -update -delete -pt copy of a tree with a level wider than
     the lister's fanout_threshold runs within a fixed Spark job budget:
-    one diff of the two listings, materialized once, feeds the copies,
-    the deletes and the skip counter, and one counters job runs the
-    copy. ``multi`` takes the path every large sync takes: its 8
-    copied bytes span n = 4 cost buckets. ``chunked`` adds the chunked
-    copier. Each budget is the measured count plus one. Each
-    distributed lister wave runs one task round, at most
-    defaultParallelism tasks."""
+    one mirror walk pairs the two trees, one job reads the diff for the
+    copies, the deletes and the skip counter, and one counters job runs
+    the copy. ``multi`` takes the path every large sync takes: its 8
+    copied bytes span n = 2 cost buckets, one per copied file.
+    ``chunked`` adds the chunked copier. Each budget is the measured
+    count plus one. Each distributed wave of the mirror walk runs one
+    task round, at most defaultParallelism tasks."""
     import uuid
 
     src, dst = tmp_path / "src", tmp_path / "dst"
@@ -521,12 +521,33 @@ def test_sync_job_budget(spark, tmp_path, extra, budget):
     assert tree_files(dst) == tree_files(src)
     assert len(jobs) <= budget, sorted(jobs)
 
-    _, wave_jobs = jobs_of(lambda: list_tree(spark, [str(src)]))
+    _, wave_jobs = jobs_of(
+        lambda: list_tree(
+            spark, [str(src)], prefix_base=False, mirror=str(dst), opts=opts
+        )
+    )
     assert wave_jobs
     for job in wave_jobs:
         for stage in tracker.getJobInfo(job).stageIds:
             tasks = tracker.getStageInfo(stage).numTasks
             assert tasks <= sc.defaultParallelism
+
+
+def test_cost_buckets_capped_by_copy_rows(spark, tmp_path):
+    """A byte budget far below the file sizes gives each file that
+    carries bytes at most one task, never one task per budget: a first
+    copy of 101 files (5,053 bytes) at bytes_per_task=2 lays out at
+    most 101 copy tasks (2,527 without the cap), with the totals from
+    the plan's own job or from assign_cost_buckets' aggregate."""
+    src = tmp_path / "src"
+    _wide_tree(src)
+    plan = DistCpPlusEngine(spark).plan(
+        [str(src)], str(tmp_path / "dst"), CopyOptions(bytes_per_task=2)
+    )
+    bucketed = assign_cost_buckets(list_tree(spark, [str(src)]), bytes_per_task=2)
+    for copies in (plan.copies, bucketed):
+        assert 1 < copies.rdd.getNumPartitions() <= 101
+        assert copies.agg(F.max("bucket")).collect()[0][0] < 101
 
 
 @pytest.mark.parametrize("caller", ["copy", "chunked", "incremental_sync"])
@@ -663,13 +684,15 @@ def test_filter_depth_regexes(spark, tmp_path):
             d = root / d1 / d2
             d.mkdir(parents=True)
             (d / "data.txt").write_bytes(b"x")
-    from distcpplus_spark.sources.regex_select import filter_depth_regexes
-
-    df = list_tree(spark, [str(root)])
-    # depth chain: date dirs / part-* dirs / any file
-    sel = filter_depth_regexes(df, str(root), [r"2024-\d\d", r"part-.*", r".*"])
+    # depth chain: date dirs / part-* dirs / any file; the walk prunes
+    # misc and tmp, and walks through the matched dirs above the chain's
+    # last depth without returning them
+    sel = list_tree(
+        spark, [str(root)], include_roots=False, prefix_base=False,
+        depth_regexes=[r"2024-\d\d", r"part-.*", r".*"],
+    )
     rels = sorted(r["relative_dst"] for r in sel.collect())
-    assert rels == ["tree/2024-01/part-a/data.txt", "tree/2024-02/part-a/data.txt"]
+    assert rels == ["2024-01/part-a/data.txt", "2024-02/part-a/data.txt"]
 
 
 def test_plan_missing_source_raises(spark, tmp_path):
@@ -701,6 +724,32 @@ def test_cli_regexpath_end_to_end(spark, tmp_path, capsys):
     assert (dst / "2024-01" / "logs" / "a.log").read_bytes() == b"log-a"
     assert not (dst / "2024-01" / "data" / "b.bin").exists()
     assert not (dst / "misc" / "c.log").exists()
+
+
+def test_regexpath_update_delete_converges(spark, tmp_path):
+    """-regexPath with -update -delete: the first sync copies the
+    selection, and the next two are no-ops that leave the destination
+    equal to it. The walk keeps a matched intermediate directory (a1)
+    as a directory it walks through, so its mirror is never a delete
+    candidate (deleting it took the selection with it on every other
+    run)."""
+    src, dst = tmp_path / "src", tmp_path / "dst"
+    for rel in ("a1/b1/f.txt", "a1/b1/g.txt", "a2/x/h.txt", "z/b1/k.txt"):
+        (src / rel).parent.mkdir(parents=True, exist_ok=True)
+        (src / rel).write_bytes(rel.encode())
+    engine = DistCpPlusEngine(spark)
+    opts = CopyOptions(update=True, delete=True, preserve=frozenset("t"))
+    runs = [
+        engine.copy([str(src)], str(dst), opts, depth_regexes=["a.*", "b.*"])
+        for _ in range(3)
+    ]
+    assert [(r["COPY"], r["DELETE"]) for r in runs] == [(2, 0), (0, 0), (0, 0)]
+    listed = {
+        os.path.relpath(os.path.join(d, n), dst)
+        for d, dirs, files in os.walk(dst)
+        for n in dirs + files
+    }
+    assert listed == {"a1", "a1/b1", "a1/b1/f.txt", "a1/b1/g.txt"}
 
 
 def test_cli_usage_error_exit_code(tmp_path):
@@ -1162,17 +1211,17 @@ def test_update_mode_ignores_limits_reference_quirk(spark, tmp_path):
 
 
 def test_depth_regex_root_with_metachars(spark, tmp_path):
-    """A root containing regex metacharacters (+, parens) must not
-    break the per-depth prefix strip (literal substring, not regex)."""
-    from distcpplus_spark.sources.regex_select import filter_depth_regexes
-
+    """A root containing regex metacharacters (+, parens) selects by
+    the components below it: the patterns only ever see names."""
     root = tmp_path / "weird+root (v2)"
     (root / "2024-01" / "logs").mkdir(parents=True)
     (root / "2024-01" / "logs" / "a.log").write_bytes(b"x")
     (root / "misc").mkdir()
     (root / "misc" / "b.log").write_bytes(b"y")
-    df = list_tree(spark, [str(root)])
-    sel = filter_depth_regexes(df, str(root), [r"\d{4}-\d{2}", "logs", r".*"])
+    sel = list_tree(
+        spark, [str(root)], include_roots=False, prefix_base=False,
+        depth_regexes=[r"\d{4}-\d{2}", "logs", r".*"],
+    )
     paths = [r["path"] for r in sel.collect() if not r["is_dir"]]
     assert paths == [str(root / "2024-01" / "logs" / "a.log")]
 
@@ -1499,3 +1548,188 @@ def test_unreadable_dst_subdir_does_not_fail_copy(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(os, "scandir", scandir)
     DistCpPlusEngine(spark).copy([str(src)], str(dst))
     assert (dst / "src" / "a.txt").read_bytes() == b"a"
+
+
+# ---------------------------------------------------------------------------
+# O1 + O7: the mirror walk pairs the trees as the join of two listings
+# ---------------------------------------------------------------------------
+
+
+def _random_tree(root, rng, n_files=24):
+    """Files of 0-40 bytes up to three directories deep."""
+    for i in range(n_files):
+        parts = [f"d{rng.randint(0, 2)}" for _ in range(rng.randint(0, 3))]
+        d = root.joinpath(*parts)
+        d.mkdir(parents=True, exist_ok=True)
+        (d / f"f{i:02d}.txt").write_bytes(b"x" * rng.randint(0, 40))
+
+
+def _walk_and_join(spark, roots, dst, opts, prefix_base):
+    """(relative path, action) of every diff row, from the mirror walk
+    and from sync_diff over two plain listings; the join's
+    destination-only descendants collapse into their top-level row, as
+    the walk never enters a destination-only directory. Both listings
+    run with fanout_threshold=2, so every level below the root is a
+    distributed wave."""
+    from distcpplus_spark.plans.copy_plan import classify
+
+    walk = classify(
+        list_tree(
+            spark, roots, prefix_base=prefix_base, fanout_threshold=2,
+            mirror=str(dst), opts=opts,
+        ),
+        opts,
+    )
+    src_meta = list_tree(spark, roots, prefix_base=prefix_base, fanout_threshold=2)
+    dst_meta = (
+        list_tree(
+            spark, [str(dst)], include_roots=False, prefix_base=False,
+            skip_unreadable=True, fanout_threshold=2,
+        )
+        if os.path.isdir(dst)
+        else src_meta.limit(0)
+    )
+    join = sync_diff(src_meta, dst_meta, opts)
+
+    def rows(diff):
+        return [
+            (r["relative_dst"] or r["d_relative_dst"], r["action"], r["d_is_dir"])
+            for r in diff.collect()
+        ]
+
+    joined = rows(join)
+    doomed_dirs = {
+        rel for rel, action, is_dir in joined if action == "delete" and is_dir
+    }
+    joined = [
+        r
+        for r in joined
+        if r[1] != "delete"
+        or not any(r[0].startswith(d + "/") for d in doomed_dirs)
+    ]
+    return sorted(rows(walk), key=repr), sorted(joined, key=repr), walk, join
+
+
+@pytest.mark.parametrize(
+    "case",
+    ["update", "same_size_mtime", "subtrees", "unreadable_dst", "file_root",
+     "overwrite", "plain"],
+)
+def test_mirror_walk_matches_join(spark, tmp_path, case):
+    """The mirror walk's classified diff equals sync_diff over two
+    plain listings on generated trees: appends, deletes and adds; a
+    same-size, same-mtime content change; destination-only and
+    source-only subtrees; an unreadable destination subtree (a path
+    longer than PATH_MAX, whose level is a distributed wave); a file
+    root next to a directory root; -overwrite; and a plain copy into
+    an existing destination."""
+    import random
+
+    rng = random.Random(case)
+    src, dst = tmp_path / "src", tmp_path / "dst"
+    src.mkdir()
+    _random_tree(src, rng)
+    pt = frozenset("t")
+    engine = DistCpPlusEngine(spark)
+    roots, prefix_base = [str(src)], False
+    opts = CopyOptions(update=True, delete=True, preserve=pt)
+    if case == "plain":
+        roots, prefix_base, opts = [str(src)], True, CopyOptions(preserve=pt)
+        dst.mkdir()
+        engine.copy(roots, str(dst), opts)  # lands at dst/src/...
+    elif case != "unreadable_dst":
+        engine.copy(roots, str(dst), opts)
+    files = sorted(p for p in src.rglob("*") if p.is_file())
+
+    if case in ("update", "plain", "overwrite", "file_root"):
+        for p in rng.sample(files, 3):
+            with open(p, "ab") as f:
+                f.write(b"appended")
+        for p in rng.sample(files, 3):
+            p.unlink(missing_ok=True)
+        for i in range(3):
+            (src / f"d{i}").mkdir(exist_ok=True)
+            (src / f"d{i}" / f"new{i}.txt").write_bytes(b"new")
+    if case == "overwrite":
+        opts = CopyOptions(overwrite=True, delete=True)
+    if case == "file_root":
+        single = tmp_path / "single.txt"
+        single.write_bytes(b"single")
+        roots = [str(src), str(single)]
+    if case == "same_size_mtime":
+        target = next(p for p in files if p.stat().st_size > 0)
+        st = target.stat()
+        target.write_bytes(b"y" * st.st_size)
+        os.utime(target, ns=(st.st_atime_ns, st.st_mtime_ns))
+    if case == "subtrees":
+        (dst / "only_dst" / "deep").mkdir(parents=True)
+        (dst / "only_dst" / "deep" / "x.txt").write_bytes(b"x")
+        (dst / "only_dst" / "y.txt").write_bytes(b"y")
+        (src / "only_src" / "deep").mkdir(parents=True)
+        (src / "only_src" / "deep" / "z.txt").write_bytes(b"z")
+    if case == "unreadable_dst":
+        # the same directory chain on both sides; only the destination
+        # holds the child whose path is longer than PATH_MAX
+        _tree_with_overlong_path(dst)
+        chain = os.path.relpath(
+            next(d for d, dirs, _ in os.walk(dst) if "s00" in dirs), dst
+        )
+        for i in range(65):
+            (src / chain / f"s{i:02d}").mkdir(parents=True)
+        (dst / chain / "s01" / "stray.txt").write_bytes(b"stray")
+
+    walked, joined, walk, _ = _walk_and_join(spark, roots, dst, opts, prefix_base)
+    assert walked == joined
+    actions = {action for _, action, _ in walked}
+    expected = {
+        "update": {"copy_changed", "copy_new", "delete"},
+        "same_size_mtime": {"copy_checksum"},
+        "subtrees": {"copy_new", "delete"},
+        "unreadable_dst": {"delete"},
+        "file_root": {"copy_changed", "copy_new", "delete"},
+        "overwrite": {"copy_overwrite", "delete"},
+        "plain": {"copy_new", "skip"},
+    }[case]
+    assert expected <= actions, actions
+    if case == "subtrees":
+        deleted = {rel for rel, action, _ in walked if action == "delete"}
+        assert deleted == {"only_dst"}
+    if case == "file_root":
+        assert ("single.txt", "copy_new", None) in walked
+    check_duplicates_and_total(walk)
+
+
+def test_mirror_walk_duplicate_destination_raises(spark, tmp_path):
+    """Two directory roots that flatten into one destination and share
+    a file name are a duplicate in the walk's pairs as in the join's."""
+    a, b, dst = tmp_path / "a", tmp_path / "b", tmp_path / "dst"
+    for root in (a, b):
+        (root / "sub").mkdir(parents=True)
+        (root / "sub" / "same.txt").write_bytes(root.name.encode())
+        (root / f"{root.name}.txt").write_bytes(b"own")
+    dst.mkdir()
+    opts = CopyOptions(update=True)
+    walked, joined, walk, join = _walk_and_join(
+        spark, [str(a), str(b)], dst, opts, prefix_base=False
+    )
+    assert walked == joined
+    for diff in (walk, join):
+        with pytest.raises(DuplicationError, match="sub/same.txt"):
+            check_duplicates_and_total(diff)
+
+
+def test_sync_plan_runs_no_python_udf_and_no_join(spark, src_tree, tmp_path):
+    """A sync's copies and mirror deletes are filters of the walk's
+    pairs: no Python UDF reads files in their plans (the tie pairs
+    were compared while listing), and no join pairs or prunes them."""
+    dst = str(tmp_path / "dst")
+    engine = DistCpPlusEngine(spark)
+    engine.copy([src_tree], dst)
+    os.makedirs(os.path.join(dst, "stray", "deep"))
+    plan = engine.plan(
+        [src_tree], dst, CopyOptions(update=True, delete=True, preserve=frozenset("t"))
+    )
+    for df in (plan.copies, plan.deletes):
+        text = df._jdf.queryExecution().executedPlan().toString()
+        assert "EvalPython" not in text and "Join" not in text, text
+    assert [r["relative_dst"] for r in plan.deletes.collect()] == ["stray"]
