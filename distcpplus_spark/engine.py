@@ -12,7 +12,7 @@ The reference's three entry points (SURVEY.md §3) map to:
 
 One sync is planned once: plan() walks the source tree and its
 destination in lockstep (``list_tree(..., mirror=dst_root)``), pairing
-entries by name and comparing the bytes of tie pairs in the listing
+entries by name and comparing the bytes of tie pairs in executor
 tasks; ``copy_plan.classify`` tags each pair, and one job reads the
 diff. Copies, mirror deletes and the RECORDSKIPPED count are filters of
 it. A -update -delete sync whose walk takes one distributed wave runs
@@ -130,10 +130,6 @@ class DistCpPlusEngine:
         self.spark = spark
         self.last_metrics: dict | None = None
 
-    def list(self, roots: list[str], prefix_base: bool = True) -> DataFrame:
-        """O1: recursive listing → file_meta DataFrame."""
-        return list_tree(self.spark, roots, prefix_base=prefix_base)
-
     def plan(
         self,
         src_roots: list[str],
@@ -215,8 +211,8 @@ class DistCpPlusEngine:
             roots, special = src_roots[:1], True
 
         # The diff: the source and destination walked in lockstep, each
-        # pair tagged with its action (tie pairs' bytes compared in the
-        # listing tasks). Copies, deletes and the source-file count are
+        # pair tagged with its action (tie pairs' bytes compared in
+        # executor tasks). Copies, deletes and the source-file count are
         # filters of it; the pairs are checkpointed JVM rows, so every
         # consumer reads them without re-listing. An unreadable
         # destination subtree (a root-owned lost+found) does not fail

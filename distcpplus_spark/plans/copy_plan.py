@@ -4,7 +4,7 @@ duplicate check, cost-balanced bucketing, mirror-delete planning.
 A diff is a set of pairs, each tagged with its action. A sync pairs
 the source and destination trees while listing them
 (``sources/lister.list_tree(..., mirror=dst_root)``, which also
-compares the bytes of tie pairs in its listing tasks); a manifest diff
+compares the bytes of tie pairs in executor tasks); a manifest diff
 (``sources/lister.relist_diff``) pairs two listings with
 :func:`pair_listings`, a full outer join. Both are tagged by the one
 :func:`classify`. The copy set (:func:`plan_updates`), the mirror
@@ -206,7 +206,7 @@ def contents_differ(a: str, b: str) -> bool | None:
     error, which the -update predicate counts as equal, as the
     reference does with an unavailable checksum
     (DistCpUtils.java:280-290). The one content comparison of the
-    package: the mirror walk calls it inside its listing tasks, and
+    package: the mirror walk calls it in executor tasks, and
     :func:`pair_listings` wraps it in a UDF."""
     try:
         with open(a, "rb") as fa, open(b, "rb") as fb:
@@ -431,8 +431,10 @@ def check_duplicates_and_total(
     rolled-up aggregate. Returns ``(source files, {partition id:
     (cost, copy rows)})``; the partition totals feed
     :func:`assign_cost_buckets`, the file count the RECORDSKIPPED
-    counter. It reads no file: a sync's tie pairs were compared while
-    listing.
+    counter. It compares no file itself. As the first job to read a
+    sync's walk, its tasks compare the tie pairs of the levels the
+    driver scanned (``list_tree``); a wave's pairs were compared in the
+    wave.
 
     Any source file flagged ``_dup`` raises :class:`DuplicationError`,
     a NULL destination included.

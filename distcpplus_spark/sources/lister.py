@@ -19,11 +19,13 @@ is one distributed job, so a 100M-file tree lists at cluster speed and
 the manifest lives in a DataFrame, not driver heap.
 
 A mirror walk (``list_tree(..., mirror=dst_root)``) scans
-``dst_root/<rel>`` in the same task, pairs the entries by name, and
-compares the bytes of tie pairs there, so a sync needs no join of two
-listings and no second pass over the files. It descends into source
-directories only: a destination-only directory is one row, never
-entered.
+``dst_root/<rel>`` in the same task and pairs the entries by name, so a
+sync needs no join of two listings. The bytes of tie pairs are compared
+in executor tasks only: a wave's pairs in the wave's own task, and the
+pairs of the levels the driver scans in the tasks that convert those
+rows, inside the first job that reads the listing. It descends into
+source directories only: a destination-only directory is one row,
+never entered.
 
 The listing is materialized ONCE, like the reference's single walk:
 each distributed wave is one local-checkpointed DataFrame whose
@@ -167,6 +169,10 @@ def _pair_dir(item: tuple, walk: _Walk, pinned=()) -> list[tuple]:
     source error instead. The destination side always drops them: an
     unreadable destination subtree looks empty, which can only mean
     fewer deletes or per-file copy failures that are already counted.
+
+    A mirror row's ``_crc_changed`` says whether the pair is a tie
+    whose bytes :func:`_compare` still has to read; this function reads
+    no file contents, so the driver can run it.
     """
     rel, src_dirs, dst_dir = item
     src = defaultdict(list)
@@ -183,13 +189,16 @@ def _pair_dir(item: tuple, walk: _Walk, pinned=()) -> list[tuple]:
         rx = re.compile(walk.patterns[depth])
         last = depth == len(walk.patterns) - 1
         src = {
-            name: [
-                (p, st, ROW if last else DESCEND)
-                for p, st, _ in es
-                if last or statmod.S_ISDIR(st.st_mode)
-            ]
+            name: kept
             for name, es in src.items()
             if rx.fullmatch(name)
+            and (
+                kept := [
+                    (p, st, ROW if last else DESCEND)
+                    for p, st, _ in es
+                    if last or statmod.S_ISDIR(st.st_mode)
+                ]
+            )
         }
     dst = {n: (p, st) for n, p, st in _scan(dst_dir, OSError)} if dst_dir else {}
 
@@ -221,10 +230,18 @@ def _pair_dir(item: tuple, walk: _Walk, pinned=()) -> list[tuple]:
                     and row[2] == dpart[2]
                     and (not walk.check_mtime or row[4] == dpart[3])
                 )
-                changed = tie and contents_differ(path, d_path) is True
-                row += (not is_dir and files > 1,) + dpart + (changed,)
+                row += (not is_dir and files > 1,) + dpart + (tie,)
             out.append((row, use))
     return out
+
+
+def _compare(row: tuple) -> tuple:
+    """A mirror row with its ``_crc_changed`` set: a tie pair's bytes
+    are compared (``copy_plan.contents_differ``); any other row holds
+    False there already. Runs in executor tasks only."""
+    if not row[-1]:
+        return row
+    return row[:-1] + (contents_differ(row[0], row[13]) is True,)
 
 
 def _frontier(marked) -> list[tuple]:
@@ -295,8 +312,10 @@ def list_tree(
     ``copy_plan.classify`` reads (``PAIR_SCHEMA`` plus ``cost``): each
     source entry with the destination entry of the same relative path,
     or NULL; each destination-only entry with NULL source columns. Under
-    -update with checksums on (``opts``), the task reads the bytes of
-    every tie pair (``copy_plan.contents_differ``). A missing
+    -update with checksums on (``opts``), executor tasks read the bytes
+    of every tie pair (``copy_plan.contents_differ``): a distributed
+    wave's task for its pairs, and for the driver-scanned levels the
+    tasks of the first job that reads the result. A missing
     destination root pairs nothing. ``depth_regexes`` (-regexPath)
     prunes the source walk: the component at depth d must fully match
     ``depth_regexes[d]``, directories above the last depth are walked
@@ -322,11 +341,15 @@ def list_tree(
     )
     schema = PAIR_SCHEMA if walk.mirror else FILE_META_SCHEMA
     local_rows: list[tuple] = []
+    local_ties: list[tuple] = []
 
     def scan_here(items, pinned=()):
-        # driver-scanned items: rows kept here, next frontier returned
+        # driver-scanned items: rows kept here, tie pairs set aside for
+        # executors, next frontier returned
         level = [r for item in items for r in _pair_dir(item, walk, pinned)]
-        local_rows.extend(r for r, use in level if use != DESCEND)
+        for r, use in level:
+            if use != DESCEND:
+                (local_ties if walk.compare and r[-1] else local_rows).append(r)
         return _frontier(
             (r[1], r[0], r[3], *(r[_D_DIR] if walk.mirror else (None, None)))
             for r, use in level
@@ -379,7 +402,7 @@ def list_tree(
                     _errors.add([(e.errno, e.strerror, e.filename)])
                     continue
                 for r, use in rows:
-                    yield r + (use,)
+                    yield (_compare(r) if _walk.compare else r) + (use,)
 
         wave = spark.createDataFrame(
             sc.parallelize(frontier, n_parts).mapPartitions(scan_wave),
@@ -397,19 +420,24 @@ def list_tree(
         frontier = _frontier(marked)
 
     frames = waves
-    if local_rows or not waves:
-        # All driver-scanned rows as ONE one-slice frame, lazily
-        # checkpointed: createDataFrame over an RDD is a Python-
-        # evaluated relation, so its first read converts the rows once
-        # into JVM blocks and every later read uses those blocks
-        # instead of another Python worker round trip. Driver-scanned
-        # waves are small by construction (a frontier above
-        # fanout_threshold goes distributed), so one slice is also the
-        # right parallelism.
+    if local_rows or local_ties or not waves:
+        # All driver-scanned rows as ONE lazily checkpointed frame:
+        # createDataFrame over an RDD is a Python-evaluated relation,
+        # so its first read converts the rows once into JVM blocks and
+        # every later read uses those blocks instead of another Python
+        # worker round trip. Driver-scanned levels are small by
+        # construction (a frontier above fanout_threshold goes
+        # distributed), so their rows take one slice. Reading their tie
+        # pairs' bytes need not be small: a few directories can hold
+        # many large files, so the pairs are spread over up to defaultParallelism - 1 more
+        # slices (one task round with the rows' slice), whose tasks
+        # read the bytes in that first read.
+        rows = sc.parallelize(local_rows, numSlices=1)
+        if local_ties:
+            n_parts = min(len(local_ties), max(1, sc.defaultParallelism - 1))
+            rows = rows.union(sc.parallelize(local_ties, n_parts).map(_compare))
         frames = [
-            spark.createDataFrame(
-                sc.parallelize(local_rows, numSlices=1), schema
-            ).localCheckpoint(eager=False)
+            spark.createDataFrame(rows, schema).localCheckpoint(eager=False)
         ] + waves
     out = frames[0]
     for d in frames[1:]:

@@ -684,9 +684,12 @@ def test_filter_depth_regexes(spark, tmp_path):
             d = root / d1 / d2
             d.mkdir(parents=True)
             (d / "data.txt").write_bytes(b"x")
+    # files whose names match above the chain's last depth
+    (root / "2024-03").write_bytes(b"x")
+    (root / "2024-01" / "part-b").write_bytes(b"x")
     # depth chain: date dirs / part-* dirs / any file; the walk prunes
-    # misc and tmp, and walks through the matched dirs above the chain's
-    # last depth without returning them
+    # misc and tmp and the files above the last depth, and walks
+    # through the matched dirs there without returning them
     sel = list_tree(
         spark, [str(root)], include_roots=False, prefix_base=False,
         depth_regexes=[r"2024-\d\d", r"part-.*", r".*"],
@@ -732,9 +735,10 @@ def test_regexpath_update_delete_converges(spark, tmp_path):
     equal to it. The walk keeps a matched intermediate directory (a1)
     as a directory it walks through, so its mirror is never a delete
     candidate (deleting it took the selection with it on every other
-    run)."""
+    run). A file whose name matches above the last depth (a.txt) is not
+    selected and pairs with nothing."""
     src, dst = tmp_path / "src", tmp_path / "dst"
-    for rel in ("a1/b1/f.txt", "a1/b1/g.txt", "a2/x/h.txt", "z/b1/k.txt"):
+    for rel in ("a1/b1/f.txt", "a1/b1/g.txt", "a2/x/h.txt", "z/b1/k.txt", "a.txt"):
         (src / rel).parent.mkdir(parents=True, exist_ok=True)
         (src / rel).write_bytes(rel.encode())
     engine = DistCpPlusEngine(spark)
@@ -750,6 +754,40 @@ def test_regexpath_update_delete_converges(spark, tmp_path):
         for n in dirs + files
     }
     assert listed == {"a1", "a1/b1", "a1/b1/f.txt", "a1/b1/g.txt"}
+
+
+def test_driver_scanned_tie_pairs_compared_on_executors(
+    spark, tmp_path, monkeypatch
+):
+    """Tie pairs in the levels the driver scans (a shallow tree, below
+    fanout_threshold) have their bytes compared by executor tasks, not
+    the driver: with the driver's comparison made to fail, a -update
+    sync still finds a same-size, same-mtime change at the root and one
+    level down, and copies nothing else."""
+    from distcpplus_spark.sources import lister
+
+    src, dst = tmp_path / "src", tmp_path / "dst"
+    for i in range(3):
+        (src / f"p{i}").mkdir(parents=True)
+        for j in range(20):
+            (src / f"p{i}" / f"f{j:02d}.bin").write_bytes(b"a" * 64)
+    (src / "top.bin").write_bytes(b"a" * 64)
+    engine = DistCpPlusEngine(spark)
+    opts = CopyOptions(update=True, delete=True, preserve=frozenset("t"))
+    engine.copy([str(src)], str(dst), opts)
+    for rel in ("top.bin", "p1/f07.bin"):
+        st = (src / rel).stat()
+        (src / rel).write_bytes(b"b" * 64)
+        os.utime(src / rel, ns=(st.st_atime_ns, st.st_mtime_ns))
+
+    def driver_read(a, b):
+        raise AssertionError(f"driver read {a}")
+
+    monkeypatch.setattr(lister, "contents_differ", driver_read)
+    out = engine.copy([str(src)], str(dst), opts)
+    assert (out["COPY"], out["DELETE"], out["RECORDSKIPPED"]) == (2, 0, 59)
+    for rel in ("top.bin", "p1/f07.bin"):
+        assert (dst / rel).read_bytes() == b"b" * 64
 
 
 def test_cli_usage_error_exit_code(tmp_path):
