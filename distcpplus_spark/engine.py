@@ -16,10 +16,10 @@ entries by name and comparing the bytes of tie pairs in executor
 tasks; ``copy_plan.classify`` tags each pair, and one job reads the
 diff. Copies, mirror deletes and the RECORDSKIPPED count are filters of
 it. A -update -delete sync whose walk takes one distributed wave runs
-at most 8 Spark jobs, 9 over several cost buckets
-(tests/test_fileetl.py::test_sync_job_budget). At the copy benchmark's
-size a job costs more than its work: read perfbench's ``--trace 1``
-jobs before adding one.
+at most 8 Spark jobs, 9 over several cost buckets or with chunked
+files (tests/test_fileetl.py::test_sync_job_budget). At the copy
+benchmark's size a job costs more than its work: read perfbench's
+``--trace 1`` jobs before adding one.
 """
 
 from __future__ import annotations
@@ -36,8 +36,8 @@ from distcpplus_spark.operators.copier import (
     cleanup_tmp,
     counters,
     execute_copy,
-    execute_copy_chunked,
     finalize_dir_attrs,
+    split_into_chunks,
 )
 from distcpplus_spark.plans.copy_plan import (
     CopyOptions,
@@ -82,9 +82,12 @@ class CopyPlan:
         self.copies.explain("formatted")
 
     def summary(self) -> dict[str, int]:
+        # a chunked plan holds a split file as several range rows
+        chunked = "chunk_idx" in self.copies.columns
+        entry = F.col("chunk_idx") == 0 if chunked else F.lit(True)
         agg = self.copies.agg(
-            F.count("*").alias("n"),
-            F.sum(F.when(F.col("is_dir"), 0).otherwise(1)).alias("files"),
+            F.count(F.when(entry, 1)).alias("n"),
+            F.count(F.when(entry & ~F.col("is_dir"), 1)).alias("files"),
             F.sum("cost").alias("bytes"),
         ).collect()[0]
         out = {
@@ -242,9 +245,14 @@ class DistCpPlusEngine:
             if opts.update
             else apply_limits(listed, opts.file_limit, opts.size_limit)
         )
-        n_files, costs = check_duplicates_and_total(diff, sources)
+        n_files, costs = check_duplicates_and_total(diff, sources, opts.chunk_bytes)
+        copies = plan_updates(sources, destination_rows(diff), opts)
+        if opts.chunk_bytes:
+            # a file larger than chunk_bytes becomes byte-range rows in
+            # its own partition, so the partition costs above still hold
+            copies = split_into_chunks(copies, opts.chunk_bytes)
         copies = assign_cost_buckets(
-            plan_updates(sources, destination_rows(diff), opts),
+            copies,
             opts.bytes_per_task,
             opts.max_tasks,
             costs=costs,
@@ -266,10 +274,11 @@ class DistCpPlusEngine:
     def execute(self, plan: CopyPlan, copy_fn=None) -> DataFrame:
         """Run the plan: copies (distributed), then deletes, then the
         failure gate. Returns the result DataFrame, one row per plan
-        row, lazily local-checkpointed. The ``counters`` job below is
-        the one action that runs the copy: it fills the checkpoint and
-        takes the O15 counters, as the reference's map tasks count
-        during the copy job (DistCPPlus.java:108,203-229). The dir
+        row but one per split file, lazily local-checkpointed. The
+        ``counters`` job below is the one action that runs the copy: it
+        fills the checkpoint and takes the O15 counters, as the
+        reference's map tasks count during the copy job
+        (DistCPPlus.java:108,203-229). The dir
         finalize, the -log sink and the caller then read the
         checkpointed rows; a lost block fails their job instead of
         re-running the copy.
@@ -281,19 +290,13 @@ class DistCpPlusEngine:
         os.makedirs(plan.dst_root, exist_ok=True)
         t_run = _time.perf_counter()
         try:
-            if plan.opts.chunk_bytes:
-                result = execute_copy_chunked(
-                    plan.copies, plan.dst_root, plan.run_id, plan.opts, copy_fn
-                )
-            else:
-                result = execute_copy(
-                    plan.copies,
-                    plan.dst_root,
-                    plan.run_id,
-                    preserve=plan.opts.preserve,
-                    copy_fn=copy_fn,
-                )
-            result = result.localCheckpoint(eager=False)
+            result = execute_copy(
+                plan.copies,
+                plan.dst_root,
+                plan.run_id,
+                preserve=plan.opts.preserve,
+                copy_fn=copy_fn,
+            ).localCheckpoint(eager=False)
             stats = counters(result)
             run_s = _time.perf_counter() - t_run
         finally:

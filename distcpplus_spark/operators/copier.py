@@ -13,6 +13,10 @@ post-rename; preserve attributes. Failures are caught per-row and
 emitted as result rows (DefaultCopyFilesMapper.java:248-287) — the
 job-level failure gate is relational (count FAIL rows).
 
+A chunked plan (:func:`split_into_chunks`) holds a large file as
+byte-range rows, written in place into the file's one tmp file; the
+file is published once all its ranges ran, like a whole file.
+
 Mirrors the protocol of DefaultCopyFilesMapper.java:105-206 and
 DistCpUtils.rename (DistCpUtils.java:44-57), re-expressed for a
 POSIX filesystem. The tmp path is the same for every attempt of a
@@ -29,13 +33,12 @@ import os
 import shutil
 import time
 import zlib
+from collections import defaultdict
 from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from distcpplus_spark.plans.copy_plan import CopyOptions, assign_cost_buckets
 
 COPY_BUFFER_BYTES = 128 * 1024  # copy.buf.size, DefaultCopyFilesMapper.java:33
 CLEANUP_RETRIES = 3  # DefaultCopyFilesMapper.java:267-279
@@ -77,6 +80,18 @@ def _copy_one(
                 break
             fout.write(buf)
             copied += len(buf)
+    _publish_tmp(tmp_path, final_path, expected_len, preserve, src_stat)
+    return copied
+
+
+def _publish_tmp(
+    tmp_path: str,
+    final_path: str,
+    expected_len: int,
+    preserve: frozenset[str],
+    src_stat: os.stat_result,
+) -> None:
+    """Verify a finished tmp file and publish it at ``final_path``."""
     # verify tmp length (DefaultCopyFilesMapper.java:166-171)
     actual = os.stat(tmp_path).st_size
     if actual != expected_len:
@@ -95,7 +110,6 @@ def _copy_one(
             f"length mismatch after rename: expected {expected_len}, got {actual}"
         )
     _apply_attrs(final_path, src_stat, preserve)
-    return copied
 
 
 def _apply_attrs(path: str, src_stat: os.stat_result, preserve: frozenset[str]) -> None:
@@ -248,9 +262,15 @@ def execute_copy(
     out, so partition b is cost bucket b. The copier places nothing
     itself.
 
-    Returns the result DataFrame (one row per plan row) — the engine's
-    counters (O15) are aggregations over it. ``copy_fn`` swaps the
-    copy implementation (pluggable-mapper surface, O18).
+    Returns the result DataFrame (one row per plan row, but one per
+    split file) — the engine's counters (O15) are aggregations over it.
+    ``copy_fn`` swaps the copy implementation (pluggable-mapper
+    surface, O18) for dirs and whole files; it never sees a range row.
+
+    A chunked plan's range rows (``n_chunks`` > 1) are written in place
+    by :func:`write_range`. One shuffle then moves each result to the
+    task of its bucket, and a range's to that of its file's first range
+    (``first_bucket``), which publishes the file (:func:`_publish_ranges`).
     """
     tmp_root = os.path.join(dst_root, f"_distcp_tmp_{run_id}")
     fn = copy_fn or default_copy_fn
@@ -258,9 +278,51 @@ def execute_copy(
     def run_partition(rows: Iterator) -> Iterator[tuple]:
         return fn(rows, dst_root, tmp_root, preserve)
 
-    return plan.sparkSession.createDataFrame(
-        plan.rdd.mapPartitions(run_partition), RESULT_SCHEMA
+    if "n_chunks" not in plan.columns:
+        return plan.sparkSession.createDataFrame(
+            plan.rdd.mapPartitions(run_partition), RESULT_SCHEMA
+        )
+
+    def transfer(bucket: int, rows: Iterator) -> Iterator[tuple]:
+        ranges = []
+
+        def whole(rows: Iterator) -> Iterator:
+            for row in rows:
+                if row["n_chunks"] > 1:
+                    ranges.append(row)
+                else:
+                    yield row
+
+        for out in run_partition(whole(rows)):
+            yield bucket, (None, out)
+        for row in ranges:
+            tmp_path = os.path.join(tmp_root, row["relative_dst"])
+            try:
+                copied, crc = write_range(
+                    row["path"], tmp_path, row["offset"], row["chunk_len"]
+                )
+                out = (copied, crc, None)
+            except Exception as e:
+                out = (0, 0, f"{type(e).__name__}: {e}")
+            yield row["first_bucket"], (row, out)
+
+    def publish(items: Iterator) -> Iterator[tuple]:
+        files = defaultdict(list)
+        for _, (row, out) in items:
+            if row is None:
+                yield out
+            else:
+                files[row["relative_dst"]].append((row, *out))
+        for ranges in files.values():
+            yield _publish_ranges(ranges, dst_root, tmp_root, preserve)
+
+    rows = plan.rdd
+    published = (
+        rows.mapPartitionsWithIndex(transfer)
+        .partitionBy(rows.getNumPartitions(), lambda bucket: bucket)
+        .mapPartitions(publish)
     )
+    return plan.sparkSession.createDataFrame(published, RESULT_SCHEMA)
 
 
 def counters(result: DataFrame) -> dict[str, int]:
@@ -299,14 +361,16 @@ def cleanup_tmp(dst_root: str, run_id: str) -> None:
 
 def split_into_chunks(plan: DataFrame, chunk_bytes: int) -> DataFrame:
     """Explode file rows larger than ``chunk_bytes`` into byte-range
-    chunk rows (chunk_idx, offset, chunk_len, n_chunks).
+    chunk rows (chunk_idx, offset, chunk_len, n_chunks); every other row
+    stays one row with ``n_chunks`` 1. A row's ``cost`` becomes the
+    bytes it copies (0 for a dir), so a file's ranges cost its length.
 
     This removes the last straggler class cost-bucketing can't fix: a
     single file bigger than the per-task byte budget is otherwise ONE
     task no matter how many executors idle (true of the reference too —
-    DefaultCopyFilesMapper copies a file serially). On object stores
-    the assemble phase maps to native multipart-upload completion;
-    on POSIX we emulate with part files + concatenation.
+    DefaultCopyFilesMapper copies a file serially). The ranges are
+    written in place into one tmp file (:func:`write_range`), as an
+    object store's multipart upload writes parts of one object.
     """
     n_chunks = F.greatest(
         F.ceil(F.col("length") / F.lit(chunk_bytes)), F.lit(1)
@@ -322,188 +386,78 @@ def split_into_chunks(plan: DataFrame, chunk_bytes: int) -> DataFrame:
             "chunk_len",
             F.least(F.lit(chunk_bytes).cast("long"), F.col("length") - F.col("offset")),
         )
+        .withColumn("cost", F.when(F.col("is_dir"), 0).otherwise(F.col("chunk_len")))
     )
 
 
-def _copy_range(
-    src: str, part_path: str, offset: int, length: int
-) -> tuple[int, int]:
-    """Copy one byte range; returns (bytes_copied, crc32 of the range).
-    The CRC is computed IN-STREAM over the same buffers being written
-    — integrity comes free with the transfer, no re-read."""
-    os.makedirs(os.path.dirname(part_path), exist_ok=True)
-    copied = 0
-    crc = 0
-    with open(src, "rb") as fin, open(part_path, "wb") as fout:
-        fin.seek(offset)
-        remaining = length
-        while remaining > 0:
-            buf = fin.read(min(COPY_BUFFER_BYTES, remaining))
-            if not buf:
-                break
-            fout.write(buf)
-            crc = zlib.crc32(buf, crc)
-            copied += len(buf)
-            remaining -= len(buf)
+def write_range(src: str, tmp_path: str, offset: int, length: int) -> tuple[int, int]:
+    """Copy bytes ``[offset, offset + length)`` of ``src`` to the same
+    offset of ``tmp_path``, created if missing and never truncated, so
+    any task can write any range of a file. Returns ``(bytes copied,
+    CRC-32 of the range)``, the CRC computed in-stream."""
+    os.makedirs(os.path.dirname(tmp_path), exist_ok=True)
+    copied = crc = 0
+    fd = os.open(tmp_path, os.O_WRONLY | os.O_CREAT, 0o666)
+    try:
+        with open(src, "rb") as fin:
+            fin.seek(offset)
+            while copied < length:
+                buf = fin.read(min(COPY_BUFFER_BYTES, length - copied))
+                if not buf:
+                    break
+                if os.pwrite(fd, buf, offset + copied) != len(buf):
+                    raise OSError(f"short write at offset {offset + copied}")
+                crc = zlib.crc32(buf, crc)
+                copied += len(buf)
+    finally:
+        os.close(fd)
     if copied != length:
-        raise OSError(f"chunk length mismatch: expected {length}, got {copied}")
+        raise OSError(f"range length mismatch: expected {length}, got {copied}")
     return copied, crc
 
 
-def execute_copy_chunked(
-    plan: DataFrame,
-    dst_root: str,
-    run_id: str,
-    opts: CopyOptions,
-    copy_fn: Callable | None = None,
-) -> DataFrame:
-    """Chunked copy: files larger than ``opts.chunk_bytes`` copy in two
-    phases; dirs and every other file go through :func:`execute_copy`
-    unchanged (exec-time re-check, per-row MKDIR/FAIL rows, one write,
-    the caller's ``copy_fn``).
+def _publish_ranges(
+    ranges: list[tuple], dst_root: str, tmp_root: str, preserve: frozenset[str]
+) -> tuple:
+    """Publish one split file from its ranges' ``(row, bytes copied,
+    crc, error)``: a COPY or FAIL result row. Every range must have
+    copied, the source must still have its planned length (a grown one
+    would publish truncated), and the tmp file, re-read, must have the
+    CRC its ranges saw in transfer; then the whole-file publish."""
+    from distcpplus_spark.operators.checksum import combine_chunk_crcs
 
-    Phase 1 (parallel transfer): every chunk row (cost = chunk_len)
-    copies its byte range to ``tmp/<relative>.part<idx>`` — a 10 GB
-    file with 256 MB chunks and 256 MB per task engages 40 tasks,
-    not 1.
-    Phase 2 (assembly): per file (cost = length), concatenate its
-    parts in order into a tmp file, verify the total length and the
-    composite CRC, atomically rename, apply attributes — the same
-    tmp+rename+verify contract as the single-shot copier.
-
-    Both phases are laid out by ``assign_cost_buckets``, so
-    ``bytes_per_task`` and ``max_tasks`` govern every copy task.
-    """
-    spark = plan.sparkSession
-    tmp_root = os.path.join(dst_root, f"_distcp_tmp_{run_id}")
-    big = ~F.col("is_dir") & (F.col("length") > opts.chunk_bytes)
-    chunks = assign_cost_buckets(
-        split_into_chunks(plan.filter(big), opts.chunk_bytes)
-        .withColumn("cost", F.col("chunk_len")),
-        opts.bytes_per_task,
-        opts.max_tasks,
-    )
-
-    chunk_result_schema = (
-        "path STRING, relative_dst STRING, chunk_idx INT, n_chunks INT, "
-        "length BIGINT, ok BOOLEAN, bytes_copied BIGINT, crc BIGINT, "
-        "error STRING"
-    )
-
-    def copy_chunks(rows: Iterator) -> Iterator[tuple]:
-        for row in rows:
-            rel, idx = row["relative_dst"], row["chunk_idx"]
-            key = (row["path"], rel, idx, row["n_chunks"], row["length"])
-            part = os.path.join(tmp_root, f"{rel}.part{idx:06d}")
-            try:
-                n, crc = _copy_range(
-                    row["path"], part, row["offset"], row["chunk_len"]
-                )
-                yield (*key, True, n, crc, None)
-            except Exception as e:
-                yield (*key, False, 0, 0, f"{type(e).__name__}: {e}")
-
-    # one job transfers every chunk; the assembly reads its results as
-    # checkpointed JVM blocks, never re-running the transfer, and the
-    # session's cache is left as it was
-    phase1 = spark.createDataFrame(
-        chunks.rdd.mapPartitions(copy_chunks), chunk_result_schema
-    ).localCheckpoint(eager=True)
-
-    # per-file verdict: all chunks ok → assemble; any failed → FAIL row
-    per_file = (
-        phase1.groupBy("path", "relative_dst", "n_chunks", "length")
-        .agg(
-            F.sum(F.when(F.col("ok"), 1).otherwise(0)).alias("ok_chunks"),
-            F.sum("bytes_copied").alias("bytes_transferred"),
-            F.max("error").alias("first_error"),
-            F.collect_list(
-                F.struct("chunk_idx", "crc", "bytes_copied")
-            ).alias("chunk_crcs"),
+    t0 = time.time()
+    row = ranges[0][0]
+    path, rel, length = row["path"], row["relative_dst"], row["length"]
+    tmp_path = os.path.join(tmp_root, rel)
+    try:
+        errors = [error for *_, error in ranges if error]
+        if errors or len(ranges) != row["n_chunks"]:
+            raise OSError(errors[0] if errors else "missing ranges")
+        src_stat = os.stat(path)
+        if src_stat.st_size != length:
+            raise OSError(
+                f"source length drifted since planning: "
+                f"planned {length}, now {src_stat.st_size}"
+            )
+        ranges.sort(key=lambda r: r[0]["chunk_idx"])
+        expected_crc = combine_chunk_crcs([(crc, n) for _, n, crc, _ in ranges])
+        actual_crc = 0
+        with open(tmp_path, "rb") as fin:
+            while buf := fin.read(COPY_BUFFER_BYTES):
+                actual_crc = zlib.crc32(buf, actual_crc)
+        if actual_crc != expected_crc:
+            raise OSError(
+                f"composite CRC mismatch: transfer saw {expected_crc:#010x}, "
+                f"tmp file has {actual_crc:#010x}"
+            )
+        _publish_tmp(
+            tmp_path, os.path.join(dst_root, rel), length, preserve, src_stat
         )
-        .withColumn("cost", F.col("length"))
-        .withColumn("is_dir", F.lit(False))
+        status, copied, error = "COPY", sum(r[1] for r in ranges), None
+    except Exception as e:
+        status, copied, error = "FAIL", 0, f"{type(e).__name__}: {e}"
+    return (
+        path, rel, row["action"], status, copied, length, error,
+        int((time.time() - t0) * 1000),
     )
-
-    def assemble(rows: Iterator) -> Iterator[tuple]:
-        from distcpplus_spark.operators.checksum import combine_chunk_crcs
-
-        for row in rows:
-            t0 = time.time()
-            rel = row["relative_dst"]
-            final_path = os.path.join(dst_root, rel)
-            try:
-                if row["ok_chunks"] != row["n_chunks"]:
-                    raise OSError(row["first_error"] or "missing chunks")
-                # chunk ranges were sliced at PLAN-time lengths; a
-                # source that grew or shrank since would assemble to a
-                # silently-truncated copy — re-stat and fail on drift
-                src_len = os.stat(row["path"]).st_size
-                if src_len != row["length"]:
-                    raise OSError(
-                        f"source length drifted since planning: "
-                        f"planned {row['length']}, now {src_len}"
-                    )
-                # expected whole-file CRC from the in-stream chunk
-                # CRCs via the GF(2) combine (operators/checksum.py) —
-                # COMPOSITE_CRC-style: no task ever re-reads the file
-                in_order = sorted(row["chunk_crcs"], key=lambda c: c["chunk_idx"])
-                expected_crc = combine_chunk_crcs(
-                    [(c["crc"], c["bytes_copied"]) for c in in_order]
-                )
-                assembled = os.path.join(tmp_root, rel + ".assembled")
-                os.makedirs(os.path.dirname(assembled), exist_ok=True)
-                actual_crc = 0
-                with open(assembled, "wb") as out:
-                    for i in range(row["n_chunks"]):
-                        part = os.path.join(tmp_root, f"{rel}.part{i:06d}")
-                        with open(part, "rb") as fin:
-                            while True:
-                                buf = fin.read(COPY_BUFFER_BYTES)
-                                if not buf:
-                                    break
-                                out.write(buf)
-                                actual_crc = zlib.crc32(buf, actual_crc)
-                if os.stat(assembled).st_size != row["length"]:
-                    raise OSError("assembled length mismatch")
-                if actual_crc != expected_crc:
-                    # a part file corrupted/substituted between phases
-                    raise OSError(
-                        f"composite CRC mismatch: transfer saw "
-                        f"{expected_crc:#010x}, assembly saw "
-                        f"{actual_crc:#010x}"
-                    )
-                os.makedirs(os.path.dirname(final_path), exist_ok=True)
-                if os.path.exists(final_path):
-                    os.remove(final_path)
-                os.replace(assembled, final_path)
-                if os.stat(final_path).st_size != row["length"]:
-                    raise OSError("post-rename length mismatch")
-                src_stat = os.stat(row["path"])
-                _apply_attrs(final_path, src_stat, opts.preserve)
-                for i in range(row["n_chunks"]):
-                    try:
-                        os.remove(os.path.join(tmp_root, f"{rel}.part{i:06d}"))
-                    except OSError:
-                        pass
-                yield (
-                    row["path"], rel, "copy_chunked", "COPY",
-                    row["bytes_transferred"], row["length"], None,
-                    int((time.time() - t0) * 1000),
-                )
-            except Exception as e:
-                yield (
-                    row["path"], rel, "copy_chunked", "FAIL", 0,
-                    row["length"], f"{type(e).__name__}: {e}",
-                    int((time.time() - t0) * 1000),
-                )
-
-    files_result = spark.createDataFrame(
-        assign_cost_buckets(per_file, opts.bytes_per_task, opts.max_tasks)
-        .rdd.mapPartitions(assemble),
-        RESULT_SCHEMA,
-    )
-    rest = execute_copy(
-        plan.filter(~big), dst_root, run_id, opts.preserve, copy_fn
-    )
-    return rest.unionByName(files_result)

@@ -423,7 +423,7 @@ def _distributed_prefix_sums(
 
 
 def check_duplicates_and_total(
-    diff: DataFrame, sources: DataFrame | None = None
+    diff: DataFrame, sources: DataFrame | None = None, chunk_bytes: int | None = None
 ) -> tuple[int, dict[int, tuple[int, int]]]:
     """The one job that reads the diff: the duplicate-destination check
     (DistCpUtils.java:84-110), the number of source files, and each
@@ -442,12 +442,17 @@ def check_duplicates_and_total(
     ``sources`` are the diff's source rows after -filelimit /
     -sizelimit (default: all of them, :func:`source_rows`). The file
     count and the costs come from them, while the duplicate check still
-    sees the whole listing (DistCPPlus.java:732-733).
+    sees the whole listing (DistCPPlus.java:732-733). With
+    ``chunk_bytes`` a copied file counts as the byte ranges it splits
+    into; its cost, their sum, is the same.
     """
     if sources is None:
         sources = source_rows(diff)
     dup = F.coalesce(F.col("_dup"), F.lit(False))
     copied = F.col("action").isin(*COPY_ACTIONS)
+    copy_rows = (copied & (F.col("cost") > 0)).cast("long")
+    if chunk_bytes:
+        copy_rows = copy_rows * F.ceil(F.col("length") / F.lit(chunk_bytes))
     rows = diff.select(
         dup.cast("long").alias("_d"),
         F.when(dup, F.col("relative_dst")).alias("_k"),
@@ -456,7 +461,7 @@ def check_duplicates_and_total(
             F.spark_partition_id().alias("_p"),
             (~F.col("is_dir")).cast("long").alias("_f"),
             F.when(copied, F.col("cost")).alias("_c"),
-            (copied & (F.col("cost") > 0)).cast("long").alias("_n"),
+            copy_rows.alias("_n"),
         ),
         allowMissingColumns=True,
     )
@@ -483,6 +488,18 @@ def check_duplicates_and_total(
     return int(stats["files"] or 0), costs
 
 
+def partition_costs(plan: DataFrame) -> dict[int, tuple[int, int]]:
+    """{partition id: (cost, positive-cost rows)} of a plan, in one job:
+    the ``costs`` of :func:`assign_cost_buckets` for a plan that no
+    earlier job aggregated. An empty plan has no partitions."""
+    return {
+        p: (int(c or 0), n)
+        for p, c, n in plan.groupBy(F.spark_partition_id())
+        .agg(F.sum("cost"), F.count(F.when(F.col("cost") > 0, 1)))
+        .collect()
+    }
+
+
 def assign_cost_buckets(
     plan: DataFrame, bytes_per_task: int, max_tasks: int | None = None,
     costs: dict[int, tuple[int, int]] | None = None,
@@ -495,46 +512,56 @@ def assign_cost_buckets(
 
     Rows are placed in the plan's own order, as the reference's
     getSplits cuts its manifest in written order: by partition, then by
-    path in a window per partition. A row starts at the cost of the
-    partitions before its own plus the cost before it there; bucket b
-    holds the rows that start in [b·target, (b+1)·target). ``costs``
-    ({partition id: (cost, positive-cost rows)},
-    :func:`check_duplicates_and_total`) saves a job.
+    path (and byte offset) in a window per partition. A row starts at
+    the cost of the partitions before its own plus the cost before it
+    there; bucket b holds the rows that start in [b·target,
+    (b+1)·target). ``costs`` (:func:`partition_costs`, or the plan's
+    own job, :func:`check_duplicates_and_total`) saves a job.
 
     Returns the plan with a ``bucket`` column, laid out by
     :func:`layout_tasks`: bucket b is task b. n = clamp(total /
     bytes_per_task, 1, min(positive-cost rows, max_tasks)): a task per
-    byte budget, but never more tasks than rows that carry bytes.
+    byte budget, but never more tasks than rows that carry bytes. A
+    chunked plan's rows (``offset``) also get ``first_bucket``, the
+    bucket of their file's first range, where the copier publishes
+    the file.
     """
     if costs is None:
-        costs = {
-            p: (int(c or 0), n)
-            for p, c, n in plan.groupBy(F.spark_partition_id())
-            .agg(F.sum("cost"), F.count(F.when(F.col("cost") > 0, 1)))
-            .collect()
-        }
+        costs = partition_costs(plan)
+    chunked = "offset" in plan.columns
     total = sum(c for c, _ in costs.values())
     n = -(-total // bytes_per_task)
     n = min(n, sum(r for _, r in costs.values()), max_tasks or n)
     n = max(1, n)
     if n == 1:
         # one task holds the whole plan: no running cost to place it
-        return layout_tasks(plan.withColumn("bucket", F.lit(0)), 1)
+        bucketed = plan.withColumn("bucket", F.lit(0))
+        if chunked:
+            bucketed = bucketed.withColumn("first_bucket", F.lit(0))
+        return layout_tasks(bucketed, 1)
     target = max(1, (total + n - 1) // n)
     offsets, offset = [], 0
     for p in sorted(costs):
         offsets += [F.lit(p), F.lit(offset)]
         offset += costs[p][0]
-    w = Window.partitionBy("_p").orderBy("path")
+    w = Window.partitionBy("_p").orderBy("path", *(["offset"] if chunked else []))
     before = F.sum("cost").over(w.rowsBetween(Window.unboundedPreceding, 0))
     start = F.create_map(*offsets)[F.col("_p")] + before - F.col("cost")
+
+    def bucket_of(start):
+        return F.least(F.floor(start / F.lit(target)), F.lit(n - 1)).cast("int")
+
     # zero-cost rows after the last byte (dirs, empty files) start at
     # the total, one bucket past the end: they join the last bucket
     bucketed = plan.withColumn("_p", F.spark_partition_id()).withColumn(
-        "bucket",
-        F.least(F.floor(start / F.lit(target)), F.lit(n - 1)).cast("int"),
-    ).drop("_p")
-    return layout_tasks(bucketed, n)
+        "bucket", bucket_of(start)
+    )
+    if chunked:
+        # a file's ranges are consecutive in the window's order
+        bucketed = bucketed.withColumn(
+            "first_bucket", bucket_of(start - F.col("offset"))
+        )
+    return layout_tasks(bucketed.drop("_p"), n)
 
 
 def layout_tasks(plan: DataFrame, n: int) -> DataFrame:

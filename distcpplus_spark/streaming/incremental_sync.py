@@ -21,7 +21,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from distcpplus_spark.engine import CopyOptions, DistCpPlusEngine
+from distcpplus_spark.engine import CopyOptions, CopyPlan, DistCpPlusEngine
+from distcpplus_spark.operators.copier import split_into_chunks
+from distcpplus_spark.plans.copy_plan import assign_cost_buckets, partition_costs
 
 
 def incremental_sync(
@@ -57,17 +59,12 @@ def incremental_sync(
     base = os.path.basename(abs_root)
 
     def sync_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         # The batch IS the delta, metadata included — build the plan
         # rows straight from it. No re-listing of the source tree (the
         # whole point of incremental sync: per-batch work scales with
         # the delta, not the corpus). The copier's exec-time re-check
         # still skips rows whose dst already matches, so replays after
         # checkpoint recovery stay idempotent.
-        from distcpplus_spark.engine import CopyPlan
-        from distcpplus_spark.plans.copy_plan import assign_cost_buckets
-
         delta = (
             batch_df.withColumn(
                 "path", F.regexp_replace("path", "^file:", "")
@@ -85,7 +82,16 @@ def incremental_sync(
                 F.lit("copy_changed").alias("action"),
             )
         )
-        delta = assign_cost_buckets(delta, opts.bytes_per_task, opts.max_tasks)
+        if opts.chunk_bytes:
+            delta = split_into_chunks(delta, opts.chunk_bytes)
+        # one planning job: the batch's per-partition costs, which are
+        # empty when the batch is
+        costs = partition_costs(delta)
+        if not costs:
+            return
+        delta = assign_cost_buckets(
+            delta, opts.bytes_per_task, opts.max_tasks, costs=costs
+        )
         engine.execute(
             CopyPlan(
                 copies=delta,

@@ -1,26 +1,25 @@
-"""Crash-injection sweep for the CHUNKED copier
-(operators/copier.py::execute_copy_chunked) — the round-11 verdict
-asked for the same mechanical fault discipline the two commit
+"""Crash-injection sweep for the CHUNKED copy
+(operators/copier.py::execute_copy over a chunked plan) — the round-11
+verdict asked for the same mechanical fault discipline the two commit
 protocols already have (tests/test_txlog_crash.py for the OCC log,
 tests/test_publish_crash.py for versioned publish).
 
 A killed process is simulated by its DISK STATE (the
 test_publish_crash mid-write precedent): we reconstruct exactly what
-a run killed at each fault point leaves behind — using the
-production chunk arithmetic (split_into_chunks) and the production
-range copier (_copy_range) so the debris is byte-faithful — then
-assert the invariants and re-run.
+a run killed at each fault point leaves behind — using the plan's own
+range rows and the production range writer (write_range) so the
+debris is byte-faithful — then assert the invariants and re-run.
 
-Fault points:
-  mid-phase1     — killed while chunks transfer: some parts present,
-                   one truncated;
-  between-phases — killed after ALL chunks landed, before assembly;
-  mid-assemble   — killed while concatenating: parts + a truncated
-                   ``.assembled``;
-  pre-rename     — killed after assembly verified, before os.replace
-                   published the file;
-  update-rerun   — any of the above over a dst that already holds the
-                   PREVIOUS version of the file (the P12 -update
+A chunked file's ranges are written in place into its one tmp file,
+``_distcp_tmp_<run>/<relative>``; a publish pass per file verifies it
+and renames it into place. Fault points:
+  mid-phase1     — killed while ranges transfer: the tmp file is
+                   short, or holed where a range never landed;
+  between-phases — killed after ALL ranges landed, before the publish
+                   renamed the file (a kill after the publish's checks
+                   and before its rename leaves the same disk state);
+  update-rerun   — killed mid-transfer over a dst that already holds
+                   the PREVIOUS version of the file (the P12 -update
                    case);
   drift-in-flight— not a kill: the source grows between planning and
                    execution, exercising the real executor-side
@@ -46,11 +45,7 @@ import os
 import pytest
 
 from distcpplus_spark.engine import CopyOptions, DistCpPlusEngine
-from distcpplus_spark.operators.copier import (
-    CopyFailedError,
-    _copy_range,
-    split_into_chunks,
-)
+from distcpplus_spark.operators.copier import CopyFailedError, write_range
 
 CHUNK = 256 * 1024
 BIG = bytes(range(256)) * 8192  # 2 MiB position-dependent → 8 chunks
@@ -77,48 +72,39 @@ def _opts():
 
 
 def _chunk_rows(spark, src, dst):
-    """The production chunk arithmetic for the fixture file."""
+    """The plan's range rows for the fixture file."""
     plan = DistCpPlusEngine(spark).plan([str(src)], dst, _opts())
-    return (
-        split_into_chunks(plan.copies.filter("NOT is_dir"), CHUNK)
-        .orderBy("chunk_idx")
-        .collect()
-    )
+    return plan.copies.filter("n_chunks > 1").orderBy("chunk_idx").collect()
 
 
 def _dead_tmp(dst):
     return os.path.join(dst, f"_distcp_tmp_{DEAD_RUN}")
 
 
-def _plant_parts(rows, dst, upto=None, truncate_last=False):
-    """Write the dead run's part files with the production range
-    copier — byte-faithful debris, not hand-rolled approximations."""
+def _plant_ranges(rows, dst, skip=()):
+    """Write the dead run's ranges into its tmp file with the
+    production range writer — byte-faithful debris, not hand-rolled
+    approximations. Ranges in ``skip`` never landed."""
     tmp = _dead_tmp(dst)
-    rows = rows if upto is None else rows[:upto]
     for r in rows:
-        part = os.path.join(tmp, f"{r['relative_dst']}.part{r['chunk_idx']:06d}")
-        _copy_range(r["path"], part, r["offset"], r["chunk_len"])
-    if truncate_last and rows:
-        last = rows[-1]
-        part = os.path.join(
-            tmp, f"{last['relative_dst']}.part{last['chunk_idx']:06d}"
-        )
-        with open(part, "r+b") as f:
-            f.truncate(last["chunk_len"] // 2)
+        if r["chunk_idx"] not in skip:
+            write_range(
+                r["path"], os.path.join(tmp, r["relative_dst"]),
+                r["offset"], r["chunk_len"],
+            )
     return tmp
 
 
-def assert_no_partials(dst):
-    """Invariant N: chunk/assembly intermediates live ONLY under
-    ``_distcp_tmp_*`` — a reader walking dst never sees one."""
+def assert_no_partials(dst, *complete):
+    """Invariant N: every file a reader walking dst sees outside
+    ``_distcp_tmp_*`` is one of the ``complete`` versions — a range
+    debris file or a half-written copy is never visible."""
+    whole = {hashlib.sha256(v).hexdigest() for v in complete}
     for dirpath, dirs, files in os.walk(dst):
-        if "_distcp_tmp_" in dirpath:
-            continue
         dirs[:] = [d for d in dirs if not d.startswith("_distcp_tmp_")]
-        leaked = [
-            f for f in files if ".part" in f or f.endswith(".assembled")
-        ]
-        assert not leaked, f"partials visible at dst: {dirpath}: {leaked}"
+        for f in files:
+            path = os.path.join(dirpath, f)
+            assert _sha(path) in whole, f"partial visible at dst: {path}"
 
 
 def _sha(path):
@@ -130,7 +116,11 @@ def _rerun_and_check(spark, src, dst, expect=BIG):
     assert stats["FAIL"] == 0 and stats["COPY"] >= 1
     got = os.path.join(dst, "big.bin")
     assert _sha(got) == hashlib.sha256(expect).hexdigest()
-    assert_no_partials(dst)
+    assert_no_partials(dst, expect)
+    # the rerun's own tmp dir is gone; only a dead run's may remain
+    assert {
+        d for d in os.listdir(dst) if d.startswith("_distcp_tmp_")
+    } <= {os.path.basename(_dead_tmp(dst))}
 
 
 # ---------------------------------------------------------------------------
@@ -142,7 +132,10 @@ def test_killed_mid_phase1(spark, src, dst):
     rows = _chunk_rows(spark, src, dst)
     assert len(rows) == 8
     os.makedirs(dst, exist_ok=True)
-    _plant_parts(rows, dst, upto=5, truncate_last=True)
+    # ranges 0-4 landed, range 4 only half: a short tmp file
+    tmp = _plant_ranges(rows[:5], dst)
+    with open(os.path.join(tmp, "big.bin"), "r+b") as f:
+        f.truncate(rows[4]["offset"] + rows[4]["chunk_len"] // 2)
     # N: nothing published by the dead run
     assert not os.path.exists(os.path.join(dst, "big.bin"))
     assert_no_partials(dst)
@@ -150,37 +143,27 @@ def test_killed_mid_phase1(spark, src, dst):
     _rerun_and_check(spark, src, dst)
 
 
+def test_killed_mid_phase1_with_hole(spark, src, dst):
+    """Ranges land in any order: every range but one landed, so the
+    dead tmp file has its full length and a hole of zeros."""
+    rows = _chunk_rows(spark, src, dst)
+    os.makedirs(dst, exist_ok=True)
+    tmp = _plant_ranges(rows, dst, skip={2})
+    assert os.path.getsize(os.path.join(tmp, "big.bin")) == len(BIG)
+    assert not os.path.exists(os.path.join(dst, "big.bin"))
+    assert_no_partials(dst)
+    _rerun_and_check(spark, src, dst)
+
+
 def test_killed_between_phases(spark, src, dst):
-    """The verdict's named fault: ALL chunks written, assemble never
-    ran. No partial is visible at dst and the rerun converges."""
+    """The verdict's named fault: ALL ranges written, the publish never
+    ran (or ran its checks and died before the rename): the complete
+    bytes exist only under tmp. No partial is visible at dst and the
+    rerun converges."""
     rows = _chunk_rows(spark, src, dst)
     os.makedirs(dst, exist_ok=True)
-    _plant_parts(rows, dst)
-    assert not os.path.exists(os.path.join(dst, "big.bin"))
-    assert_no_partials(dst)
-    _rerun_and_check(spark, src, dst)
-
-
-def test_killed_mid_assemble(spark, src, dst):
-    rows = _chunk_rows(spark, src, dst)
-    os.makedirs(dst, exist_ok=True)
-    tmp = _plant_parts(rows, dst)
-    # half-concatenated output the dying assembler left behind
-    with open(os.path.join(tmp, "big.bin.assembled"), "wb") as f:
-        f.write(BIG[: len(BIG) // 2])
-    assert not os.path.exists(os.path.join(dst, "big.bin"))
-    assert_no_partials(dst)
-    _rerun_and_check(spark, src, dst)
-
-
-def test_killed_pre_rename(spark, src, dst):
-    """Assembly complete and verified, os.replace never ran: the
-    fully-correct bytes exist ONLY under tmp — still not published."""
-    rows = _chunk_rows(spark, src, dst)
-    os.makedirs(dst, exist_ok=True)
-    tmp = _plant_parts(rows, dst)
-    with open(os.path.join(tmp, "big.bin.assembled"), "wb") as f:
-        f.write(BIG)
+    tmp = _plant_ranges(rows, dst)
+    assert open(os.path.join(tmp, "big.bin"), "rb").read() == BIG
     assert not os.path.exists(os.path.join(dst, "big.bin"))
     assert_no_partials(dst)
     _rerun_and_check(spark, src, dst)
@@ -188,19 +171,19 @@ def test_killed_pre_rename(spark, src, dst):
 
 def test_killed_update_rerun_preserves_previous_version(spark, src, dst):
     """P12 parity: dst already holds the PREVIOUS version; an update
-    run dies between phases. Readers keep the old bytes intact until
-    the rerun atomically publishes the new ones."""
+    run dies mid-transfer. Readers keep the old bytes intact until the
+    rerun atomically publishes the new ones."""
     old = b"previous-version" * 1024
     os.makedirs(dst, exist_ok=True)
     with open(os.path.join(dst, "big.bin"), "wb") as f:
         f.write(old)
     rows = _chunk_rows(spark, src, dst)
-    _plant_parts(rows, dst, upto=6)
+    _plant_ranges(rows[:6], dst)
     # reader sees the complete old version, not a mix
     assert _sha(os.path.join(dst, "big.bin")) == hashlib.sha256(
         old
     ).hexdigest()
-    assert_no_partials(dst)
+    assert_no_partials(dst, old)
     _rerun_and_check(spark, src, dst)
 
 
@@ -211,10 +194,12 @@ def test_dead_tmp_debris_survives_rerun_untouched(spark, src, dst):
     automatic side effect)."""
     rows = _chunk_rows(spark, src, dst)
     os.makedirs(dst, exist_ok=True)
-    tmp = _plant_parts(rows, dst, upto=3)
-    before = sorted(os.listdir(tmp))
+    tmp = _plant_ranges(rows[:3], dst)
+    debris = os.path.join(tmp, "big.bin")
+    before = (sorted(os.listdir(tmp)), _sha(debris))
     _rerun_and_check(spark, src, dst)
-    assert os.path.isdir(tmp) and sorted(os.listdir(tmp)) == before
+    assert os.path.isdir(tmp)
+    assert (sorted(os.listdir(tmp)), _sha(debris)) == before
 
 
 # ---------------------------------------------------------------------------
@@ -223,10 +208,10 @@ def test_dead_tmp_debris_survives_rerun_untouched(spark, src, dst):
 
 
 def test_source_drift_between_plan_and_execute(spark, src, dst):
-    """Not a kill: the source GROWS after planning. The assemble-phase
-    re-stat guard must fail the file (a silent reassembly of stale
-    ranges would truncate it), publish nothing, and the job gate must
-    raise; a fresh plan then copies the grown bytes."""
+    """Not a kill: the source GROWS after planning. The publish's
+    re-stat guard must fail the file (publishing the planned ranges
+    would truncate it), publish nothing, and the job gate must raise;
+    a fresh plan then copies the grown bytes."""
     engine = DistCpPlusEngine(spark)
     plan = engine.plan([str(src)], dst, _opts())
     grown = BIG + b"late-appended-bytes" * 100

@@ -478,7 +478,7 @@ def test_trace_contract_records_work_counts(spark, src_tree, tmp_path):
     [
         pytest.param({}, 8, id="n1"),
         pytest.param({"bytes_per_task": 2}, 9, id="multi"),
-        pytest.param({"chunk_bytes": 4, "bytes_per_task": 2}, 23, id="chunked"),
+        pytest.param({"chunk_bytes": 4, "bytes_per_task": 2}, 9, id="chunked"),
     ],
 )
 def test_sync_job_budget(spark, tmp_path, extra, budget):
@@ -488,7 +488,8 @@ def test_sync_job_budget(spark, tmp_path, extra, budget):
     copies, the deletes and the skip counter, and one counters job runs
     the copy. ``multi`` takes the path every large sync takes: its 8
     copied bytes span n = 2 cost buckets, one per copied file.
-    ``chunked`` adds the chunked copier. Each budget is the measured
+    ``chunked`` splits the 7-byte changed file into two byte-range rows,
+    which the same copy job writes and publishes. Each budget is the measured
     count plus one. Each distributed wave of the mirror walk runs one
     task round, at most defaultParallelism tasks."""
     import uuid
@@ -972,27 +973,48 @@ def test_chunked_copy_no_partial_on_failure(spark, tmp_path):
 
 def test_plan_export_and_execute_later(spark, src_tree, tmp_path):
     """E3 parity (-exportOnly, DistCPPlus.java:374-383): a plan saved
-    as parquet+JSON rehydrates and executes identically."""
-    engine = DistCpPlusEngine(spark)
-    dst = str(tmp_path / "dst")
-    plan = engine.plan([src_tree], dst)
-    export = str(tmp_path / "plan_export")
-    plan.save(export)
-
-    # inspectable with any parquet reader
-    manifest = spark.read.parquet(os.path.join(export, "copies"))
-    assert {"path", "relative_dst", "action", "bucket"} <= set(
-        manifest.columns
-    )
-
-    loaded = engine.load_plan(export)
-    assert loaded.opts.update == plan.opts.update
-    assert loaded.dst_root == dst
-    result = engine.execute(loaded)
+    as parquet+JSON rehydrates and executes identically. A chunked
+    plan's manifest holds its range rows with their buckets."""
     from distcpplus_spark.operators.copier import counters
 
-    assert counters(result)["COPY"] == 5
-    assert tree_files(dst) == tree_files(src_tree)
+    # position-dependent bytes: a range written at the wrong offset shows
+    three = os.path.join(src_tree, "a", "deep", "three.txt")
+    with open(three, "wb") as f:
+        f.write(bytes(range(256)) * 482 + bytes(range(64)))  # 123,456 B
+    engine = DistCpPlusEngine(spark)
+    # three.txt as three ranges over three buckets
+    chunked = CopyOptions(chunk_bytes=50_000, bytes_per_task=50_000)
+    for i, opts in enumerate((CopyOptions(), chunked)):
+        dst = str(tmp_path / f"dst{i}")
+        plan = engine.plan([src_tree], dst, opts)
+        export = str(tmp_path / f"plan_export{i}")
+        plan.save(export)
+
+        # inspectable with any parquet reader
+        manifest = spark.read.parquet(os.path.join(export, "copies"))
+        assert {"path", "relative_dst", "action", "bucket"} <= set(
+            manifest.columns
+        )
+        if opts.chunk_bytes:
+            ranges = manifest.filter("n_chunks > 1").orderBy("chunk_idx").collect()
+            assert [(r["offset"], r["chunk_len"]) for r in ranges] == [
+                (0, 50_000), (50_000, 50_000), (100_000, 23_456),
+            ]
+            assert {r["relative_dst"] for r in ranges} == {"a/deep/three.txt"}
+            assert len({r["bucket"] for r in ranges}) > 1
+            assert {r["first_bucket"] for r in ranges} == {ranges[0]["bucket"]}
+
+        loaded = engine.load_plan(export)
+        assert loaded.opts == plan.opts
+        assert loaded.dst_root == dst
+        result = engine.execute(loaded)
+        assert counters(result)["COPY"] == 5
+        assert tree_files(dst) == tree_files(src_tree)
+        for rel in tree_files(src_tree):
+            with open(os.path.join(src_tree, rel), "rb") as a, open(
+                os.path.join(dst, rel), "rb"
+            ) as b:
+                assert a.read() == b.read(), rel
 
 
 def test_chunked_copy_edge_cases(spark, tmp_path):
@@ -1099,12 +1121,16 @@ def test_cli_update_delete_mirrors(spark, tmp_path, capsys):
 
 
 def test_plan_summary_reports_totals(spark, src_tree, tmp_path):
+    """Totals count files, not plan rows: a chunked plan holds
+    a/deep/three.txt (123,456 bytes) as three range rows."""
     engine = DistCpPlusEngine(spark)
-    plan = engine.plan([src_tree], str(tmp_path / "dst"))
-    s = plan.summary()
-    assert s["files"] == 5
-    assert s["bytes"] == sum(tree_files(src_tree).values())
-    assert s["rows"] == s["files"] + 4  # + root, a, a/deep, b dirs
+    for chunk_bytes in (None, 50_000):
+        opts = CopyOptions(chunk_bytes=chunk_bytes)
+        plan = engine.plan([src_tree], str(tmp_path / "dst"), opts)
+        s = plan.summary()
+        assert s["files"] == 5
+        assert s["bytes"] == sum(tree_files(src_tree).values())
+        assert s["rows"] == s["files"] + 4  # + root, a, a/deep, b dirs
 
 
 # ---------------------------------------------------------------------------

@@ -156,6 +156,30 @@ def test_incremental_sync_end_to_end(spark, tmp_path):
     assert os.path.getsize(os.path.join(base, "c.txt")) == 9
 
 
+def test_incremental_sync_chunked(spark, tmp_path):
+    """chunk_bytes splits a micro-batch's large files into byte ranges,
+    as in a batch plan: they copy byte-identical and leave no tmp."""
+    from distcpplus_spark.engine import CopyOptions
+    from distcpplus_spark.streaming.incremental_sync import incremental_sync
+
+    src = tmp_path / "src"
+    src.mkdir()
+    big = bytes(range(256)) * 1000  # 256,000 bytes → 6 ranges
+    (src / "big.bin").write_bytes(big)
+    (src / "small.txt").write_bytes(b"tiny")
+    dst = tmp_path / "dst"
+    opts = CopyOptions(
+        update=True, skip_ts_check=True, chunk_bytes=50_000,
+        bytes_per_task=100_000,
+    )
+    q = incremental_sync(spark, str(src), str(dst), str(tmp_path / "ck"), opts)
+    q.awaitTermination(120)
+    assert (dst / "src" / "big.bin").read_bytes() == big
+    assert (dst / "src" / "small.txt").read_bytes() == b"tiny"
+    assert sorted(os.listdir(dst / "src")) == ["big.bin", "small.txt"]
+    assert not [p for p in os.listdir(dst) if p.startswith("_distcp_tmp_")]
+
+
 def test_stream_stream_interval_join_equals_batch(spark, tmp_path):
     """Stream-stream interval join replayed over files must produce
     exactly the batch join's pairs (SURVEY.md §2b-S stream≡batch)."""
