@@ -16,8 +16,10 @@ and renames it into place. Fault points:
   mid-phase1     — killed while ranges transfer: the tmp file is
                    short, or holed where a range never landed;
   between-phases — killed after ALL ranges landed, before the publish
-                   renamed the file (a kill after the publish's checks
-                   and before its rename leaves the same disk state);
+                   renamed the file;
+  pre-rename     — killed inside the publish's delete-then-rename over
+                   a PREVIOUS version: the old file is deleted, the
+                   verified new bytes exist only under tmp;
   update-rerun   — killed mid-transfer over a dst that already holds
                    the PREVIOUS version of the file (the P12 -update
                    case);
@@ -157,14 +159,31 @@ def test_killed_mid_phase1_with_hole(spark, src, dst):
 
 def test_killed_between_phases(spark, src, dst):
     """The verdict's named fault: ALL ranges written, the publish never
-    ran (or ran its checks and died before the rename): the complete
-    bytes exist only under tmp. No partial is visible at dst and the
-    rerun converges."""
+    ran: the complete bytes exist only under tmp. No partial is visible
+    at dst and the rerun converges."""
     rows = _chunk_rows(spark, src, dst)
     os.makedirs(dst, exist_ok=True)
     tmp = _plant_ranges(rows, dst)
     assert open(os.path.join(tmp, "big.bin"), "rb").read() == BIG
     assert not os.path.exists(os.path.join(dst, "big.bin"))
+    assert_no_partials(dst)
+    _rerun_and_check(spark, src, dst)
+
+
+def test_killed_pre_rename(spark, src, dst):
+    """An -update over a previous version; the publish verified the tmp
+    file, ran the delete of its delete-then-rename, and died before
+    os.replace: the old version is gone and the correct bytes exist
+    ONLY under tmp — still nothing partial is visible at dst."""
+    os.makedirs(dst, exist_ok=True)
+    old_path = os.path.join(dst, "big.bin")
+    with open(old_path, "wb") as f:
+        f.write(b"previous-version" * 1024)
+    rows = _chunk_rows(spark, src, dst)
+    tmp = _plant_ranges(rows, dst)
+    assert open(os.path.join(tmp, "big.bin"), "rb").read() == BIG
+    os.remove(old_path)
+    assert not os.path.exists(old_path)
     assert_no_partials(dst)
     _rerun_and_check(spark, src, dst)
 
